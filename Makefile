@@ -3,7 +3,7 @@
 
 SF ?= /root/testdata/sf0.001
 
-.PHONY: test test-distinct oracle oracle-vanilla bench plans pipeline dashboard unit recall-check concurrent assembly lakehouse datamart ann-audit
+.PHONY: test test-distinct oracle oracle-vanilla bench perfbench plans pipeline dashboard unit recall-check concurrent assembly lakehouse datamart ann-audit
 
 # reference `make test` (Makefile:22-24): canary count round trip
 test:
@@ -36,6 +36,13 @@ oracle-sf01:
 # reference `make benchmark` (Makefile:30-32)
 bench:
 	python bench.py
+
+# the repo benchmark (BENCHMARK.json): one seeded run of each workload,
+# last stdout line per run is its JSON result (perfbench/METHOD.md)
+perfbench:
+	for w in dashboard_rw registry_batch; do \
+	  python3 perfbench/run.py --workload $$w --seed 1 --seconds 20 || exit 1; \
+	done
 
 # recall floors for every approximate operator (CI gate)
 recall-check:

@@ -79,10 +79,13 @@ class Engine:
         self.last_star_plan: dict | None = None
         self.last_mv_rewrite: dict | None = None
         self.last_result_cache: dict | None = None
-        # guards the zone-map rebind window: temp views are
+        # guards every temp-view binding: temp views are
         # session-global, so a concurrent sql_many worker must not
-        # plan against another query's pruned rebinding
+        # plan against another query's pruned rebinding, and a
+        # register must not land inside one (the rebind's restore
+        # would undo it)
         self._plan_lock = threading.Lock()
+        self._reg_counter = 0  # register epoch, bumped under _plan_lock
         if self.spark is None:
             self.spark = _session.get_spark()
 
@@ -102,18 +105,24 @@ class Engine:
         ``df()`` calls plan from the manifest automatically (see
         plans/zonemap_pushdown.py).
         """
+        df, meta = self._read_registration(path, fmt, options)
+        # bind under the plan lock: a query inside its rebind window
+        # restores the views it captured, which would undo a binding
+        # made beside it (every later answer would miss the new files)
+        with self._plan_lock:
+            self._bind(name, path, df, meta)
+        return df
+
+    def _read_registration(
+        self, path: str, fmt: str, options: dict
+    ) -> tuple[DataFrame, dict]:
+        """The frame and table metadata ``register`` binds — file
+        listing, schema and manifest detection, all I/O, no view."""
         from quack_reduce_spark import lake
         from quack_reduce_spark.sources import read_table
 
         df = read_table(self.spark, path, fmt=fmt, **options)
-        df.createOrReplaceTempView(name)
-        self.tables[name] = path
-        # registration epoch: result-cache tokens include it, so
-        # re-registering (rebinding the view to a live file listing)
-        # invalidates results computed against the previous binding
-        self._reg_counter = getattr(self, "_reg_counter", 0) + 1
-        meta: dict = {"fmt": fmt, "options": dict(options),
-                      "epoch": self._reg_counter}
+        meta: dict = {"fmt": fmt, "options": dict(options)}
         resolved = lake.resolve(path)
         if resolved != path:
             # versioned table: a temp view binds to the files of ONE
@@ -130,8 +139,18 @@ class Engine:
                 cols = _zm.zonemap_cols(resolved)
                 if cols:
                     meta["zonemap_cols"] = cols
-        self._table_meta[name] = meta
-        return df
+        return df, meta
+
+    def _bind(self, name: str, path: str, df: DataFrame, meta: dict) -> None:
+        """Bind a registration's view and table metadata. The caller
+        holds ``_plan_lock``."""
+        df.createOrReplaceTempView(name)
+        self.tables[name] = path
+        # registration epoch: result-cache tokens include it, so
+        # re-registering (rebinding the view to a live file listing)
+        # invalidates results computed against the previous binding
+        self._reg_counter += 1
+        self._table_meta[name] = {**meta, "epoch": self._reg_counter}
 
     def register_dir(self, root: str, names: list[str], fmt: str = "parquet") -> None:
         """Register ``root/{name}.{fmt}`` for each name (fixture
@@ -301,12 +320,19 @@ class Engine:
         file size (Filter passes size stats through) and pick a
         shuffle join for a few surviving rows.
 
-        Locking: temp views are session-global, so the two windows
-        that TOUCH views (the initial plan, and the rebind + re-plan)
-        each hold ``_plan_lock``; manifest planning runs between them
-        unlocked (it reads cached metadata, never views). Every holder
-        restores original views before releasing, so views are always
-        in their registered state at lock acquisition."""
+        Locking: temp views are session-global, so a query analyzed
+        while another query has its views swapped would bind that
+        query's pruned file set. ``_plan_lock`` is therefore held in
+        exactly two windows: (1) the first ``spark.sql(query)``
+        analysis, and (2) the rebind — capture the original views,
+        swap in the pruned frames, re-plan, restore. Everything
+        between them runs unlocked and concurrently across a
+        ``sql_many`` burst: the agg / star / MV / top-k planners, the
+        manifest pruning and the building of the pruned frames read
+        only the analyzed ``df`` and the manifests, never a view by
+        name. ``register`` binds under the same lock, and every holder
+        restores the original views before releasing, so views are
+        always in their registered state at lock acquisition."""
         from quack_reduce_spark.plans import zonemap_pushdown as _zp
 
         if self._mvs:
@@ -322,101 +348,101 @@ class Engine:
         if not zm_tables and not self._mvs:
             return self.spark.sql(query), {}
         with self._plan_lock:
-            df = self.spark.sql(query)
-            # scalar-aggregate fast path: COUNT/MIN/MAX over one
-            # zone-mapped table answers from the manifest + an O(1)
-            # boundary-file residual (zero files for contained ranges)
-            agg = None
-            if zm_tables:
-                try:
-                    agg = self._try_agg_pushdown(df, zm_tables)
-                except Exception:
-                    agg = None  # exactness gate failed somewhere: run plain
-            self.last_agg_plan = agg[1] if agg is not None else None
-            # reset here so a query answered by the AGG branch (which
-            # returns before the star attempt) never leaves a stale
-            # star report from an earlier query
-            self.last_star_plan = None
-            if agg is not None:
-                frame, tele = agg
-                # files_read/files_total keep the classic report
-                # contract: "files actually read / files on the
-                # table" — the agg path reads only boundary files
-                return frame, {
-                    tele["table"]: {
-                        "files_read": tele["files_scanned"],
-                        "files_total": tele["files_total"],
-                        "agg_pushdown": tele,
-                    }
-                }
-            # star-join grouped pushdown (r16): fact JOIN small dim,
-            # GROUP BY dim attribute — per-(file, join-key) slice
-            # partials fold to a bounded key->partials table, the dim
-            # side evaluates once (the DPP subquery), and the join +
-            # aggregate happen driver-side at metadata cost with ZERO
-            # fact files scanned (plans/star_pushdown.py's gates)
-            star = None
-            if zm_tables:
-                try:
-                    star = self._try_star_pushdown(df, zm_tables)
-                except Exception:
-                    star = None  # exactness gate failed: run plain
-            self.last_star_plan = star[1] if star is not None else None
-            if star is not None:
-                frame, tele = star
-                return frame, {
-                    tele["table"]: {
-                        "files_read": 0,
-                        "files_total": tele["files_total"],
-                        "star_pushdown": tele,
-                    }
-                }
-            # materialized-view rewrite: an aggregate the manifest
-            # could not answer (un-maintained appends, avg over a
-            # multi-valued layout, no manifest at all) re-plans over a
-            # registered FRESH MV's partials instead of the base table
-            mv = None
-            if self._mvs:
-                from quack_reduce_spark.plans import mv_rewrite as _mvr
-
-                try:
-                    mv = _mvr.try_rewrite(
-                        self.spark, df, self._all_paths(), self._mvs,
-                        snap_cache,
-                    )
-                except Exception:
-                    mv = None  # rewrite is best-effort: run plain
-            self.last_mv_rewrite = mv[1] if mv is not None else None
-            if mv is not None:
-                frame, tele = mv
-                return frame, {tele["table"]: {"mv_rewrite": tele}}
-            if not zm_tables:
-                return df, {}
+            df = self.spark.sql(query)  # analyzed now: binds the views
+        # scalar-aggregate fast path: COUNT/MIN/MAX over one
+        # zone-mapped table answers from the manifest + an O(1)
+        # boundary-file residual (zero files for contained ranges)
+        agg = None
+        if zm_tables:
             try:
-                cons = _zp.scan_constraints(
-                    df, {n: p for n, (p, _) in zm_tables.items()}
+                agg = self._try_agg_pushdown(df, zm_tables)
+            except Exception:
+                agg = None  # exactness gate failed somewhere: run plain
+        self.last_agg_plan = agg[1] if agg is not None else None
+        # reset here so a query answered by the AGG branch (which
+        # returns before the star attempt) never leaves a stale
+        # star report from an earlier query
+        self.last_star_plan = None
+        if agg is not None:
+            frame, tele = agg
+            # files_read/files_total keep the classic report
+            # contract: "files actually read / files on the
+            # table" — the agg path reads only boundary files
+            return frame, {
+                tele["table"]: {
+                    "files_read": tele["files_scanned"],
+                    "files_total": tele["files_total"],
+                    "agg_pushdown": tele,
+                }
+            }
+        # star-join grouped pushdown (r16): fact JOIN small dim,
+        # GROUP BY dim attribute — per-(file, join-key) slice
+        # partials fold to a bounded key->partials table, the dim
+        # side evaluates once (the DPP subquery), and the join +
+        # aggregate happen driver-side at metadata cost with ZERO
+        # fact files scanned (plans/star_pushdown.py's gates)
+        star = None
+        if zm_tables:
+            try:
+                star = self._try_star_pushdown(df, zm_tables)
+            except Exception:
+                star = None  # exactness gate failed: run plain
+        self.last_star_plan = star[1] if star is not None else None
+        if star is not None:
+            frame, tele = star
+            return frame, {
+                tele["table"]: {
+                    "files_read": 0,
+                    "files_total": tele["files_total"],
+                    "star_pushdown": tele,
+                }
+            }
+        # materialized-view rewrite: an aggregate the manifest
+        # could not answer (un-maintained appends, avg over a
+        # multi-valued layout, no manifest at all) re-plans over a
+        # registered FRESH MV's partials instead of the base table
+        mv = None
+        if self._mvs:
+            from quack_reduce_spark.plans import mv_rewrite as _mvr
+
+            try:
+                mv = _mvr.try_rewrite(
+                    self.spark, df, self._all_paths(), self._mvs,
+                    snap_cache,
                 )
             except Exception:
-                return df, {}  # plan-shape drift: pushdown is best-effort
-            # top-k file pushdown (raw-column ORDER BY col LIMIT k —
-            # the scan-shaped sibling of the reference's flagship
-            # grouped top-k, whose Sort/Limit-over-Aggregate form the
-            # agg pushdown above already answers): when the WHOLE plan
-            # is Limit-Sort-[Filter]-Relation over one zone-mapped
-            # table, the manifest's min/max bound which files can
-            # contribute to the top k — see plans/topk_pushdown.py for
-            # the static-bound argument. The extraction shape
-            # guarantees a single scan and no joins, so it composes
-            # with (and subsumes) the generic WHERE pruning.
+                mv = None  # rewrite is best-effort: run plain
+        self.last_mv_rewrite = mv[1] if mv is not None else None
+        if mv is not None:
+            frame, tele = mv
+            return frame, {tele["table"]: {"mv_rewrite": tele}}
+        if not zm_tables:
+            return df, {}
+        try:
+            cons = _zp.scan_constraints(
+                df, {n: p for n, (p, _) in zm_tables.items()}
+            )
+        except Exception:
+            return df, {}  # plan-shape drift: pushdown is best-effort
+        # top-k file pushdown (raw-column ORDER BY col LIMIT k —
+        # the scan-shaped sibling of the reference's flagship
+        # grouped top-k, whose Sort/Limit-over-Aggregate form the
+        # agg pushdown above already answers): when the WHOLE plan
+        # is Limit-Sort-[Filter]-Relation over one zone-mapped
+        # table, the manifest's min/max bound which files can
+        # contribute to the top k — see plans/topk_pushdown.py for
+        # the static-bound argument. The extraction shape
+        # guarantees a single scan and no joins, so it composes
+        # with (and subsumes) the generic WHERE pruning.
+        topk = None
+        try:
+            from quack_reduce_spark.plans import topk_pushdown as _tk
+
+            topk = _tk.extract_topk(
+                df, {n: p for n, (p, _) in zm_tables.items()}
+            )
+        except Exception:
             topk = None
-            try:
-                from quack_reduce_spark.plans import topk_pushdown as _tk
-
-                topk = _tk.extract_topk(
-                    df, {n: p for n, (p, _) in zm_tables.items()}
-                )
-            except Exception:
-                topk = None
         rebinds: dict[str, tuple[list[str], int, dict]] = {}
         dpp_applied: dict[str, dict] = {}
         topk_applied: dict[str, dict] = {}
@@ -501,33 +527,36 @@ class Engine:
             targets.setdefault(name, (None, None, None))
         if not targets:
             return df, {}
+        # the pruned frames read files, never views: built unlocked
         row_applied: dict[str, dict] = {}
+        pruned_views: dict[str, DataFrame] = {}
+        try:
+            for name, (files, _total, _stats) in targets.items():
+                path, _ = zm_tables[name]
+                if files is None:
+                    pruned = self.spark.read.parquet(path)
+                elif files:
+                    pruned = self.spark.read.option("basePath", path).parquet(*files)
+                else:
+                    pruned = self.spark.read.parquet(path).where(F.lit(False))
+                if name in row_filters:
+                    got = self._dpp_row_predicate(pruned, row_filters[name])
+                    if got is not None:
+                        pred, applied = got
+                        pruned = pruned.where(pred)
+                        row_applied[name] = applied
+                if name in hints:
+                    pruned = pruned.hint("broadcast")
+                pruned_views[name] = pruned
+        except Exception:
+            return df, {}  # fall back to the unpruned plan
         with self._plan_lock:
             # capture the CURRENT (original) view frames — restoring
             # them is a pure re-registration, no file I/O to fail
             originals = {n: self.spark.table(n) for n in targets}
             planned = None
             try:
-                for name, (files, _total, _stats) in targets.items():
-                    path, _ = zm_tables[name]
-                    if files is None:
-                        pruned = self.spark.read.parquet(path)
-                    elif files:
-                        pruned = self.spark.read.option("basePath", path).parquet(
-                            *files
-                        )
-                    else:
-                        pruned = self.spark.read.parquet(path).where(F.lit(False))
-                    if name in row_filters:
-                        got = self._dpp_row_predicate(
-                            pruned, row_filters[name]
-                        )
-                        if got is not None:
-                            pred, applied = got
-                            pruned = pruned.where(pred)
-                            row_applied[name] = applied
-                    if name in hints:
-                        pruned = pruned.hint("broadcast")
+                for name, pruned in pruned_views.items():
                     pruned.createOrReplaceTempView(name)
                 planned = self.spark.sql(query)  # analyzed now: binds pruned
             except Exception:
@@ -1311,7 +1340,9 @@ class Engine:
                             # LRU touch
                             self._results.pop(cache_key, None)
                             self._results[cache_key] = hit
-                    RESULT_CACHE_COUNTS["hits"] += 1
+                        # counted under the lock: sql_many workers
+                        # would otherwise lose increments
+                        RESULT_CACHE_COUNTS["hits"] += 1
                     self.last_result_cache = {"hit": True}
                     self._was_warm = True
                     return QueryResult(
@@ -1362,9 +1393,9 @@ class Engine:
             # the plan read (single triples concatenate in sorted-name
             # order, the same order _snap_token re-derives on probe)
             token = tuple(pre_tokens[n][0] for n in names)
-            RESULT_CACHE_COUNTS["misses"] += 1
             stored = True
             with self._results_lock:
+                RESULT_CACHE_COUNTS["misses"] += 1
                 prev = self._results.pop(cache_key, None)
                 if prev is not None:
                     self._results_bytes -= prev[3]
@@ -2363,12 +2394,13 @@ class Engine:
             # that mismatch would serve stale aggregates marked fresh.
             # Re-registering binds the view (and the frame planned
             # below) to the same live state the snapshot describes.
+            # (bound through the helper: this method holds the lock)
             tmeta = self._table_meta.get(table, {})
-            self.register(
-                table, self.tables[table],
-                fmt=tmeta.get("fmt", "parquet"),
-                **(tmeta.get("options") or {}),
+            tdf, meta = self._read_registration(
+                self.tables[table], tmeta.get("fmt", "parquet"),
+                tmeta.get("options") or {},
             )
+            self._bind(table, self.tables[table], tdf, meta)
             df = self.spark.sql(query)
             spec = _mvr.mv_spec(df, self._all_paths())
             if spec is None:  # the rebind cannot change the shape
@@ -2776,52 +2808,6 @@ _CACHEABLE_LEAVES = {
     "LocalRelation", "OneRowRelation", "OneRowRelation$", "Range",
 }
 
-# expression classes whose value is the CALL-TIME clock: Catalyst's
-# ComputeCurrentTime folds them into plain literals before the
-# optimized plan (and marks them deterministic), so a cached result
-# would replay the FIRST call's frozen timestamp forever. Detected on
-# the ANALYZED plan, before the fold.
-_TIME_EXPRS = {
-    "CurrentTimestamp", "CurrentDate", "Now", "LocalTimestamp",
-    "CurrentTimeZone",
-}
-
-# expression-class markers for Catalyst PlanExpressions — expressions
-# holding a SUBQUERY PLAN out-of-band (not in expressions().children()
-# or plan children()): ScalarSubquery / LateralSubquery / InSubquery /
-# Exists / ListQuery / (physical-only) DynamicPruningSubquery. Both
-# cacheability walks must descend into these plans, or a clock / rand()
-# / unregistered scan INSIDE a subquery would evade every check
-# (ComputeCurrentTime folds the subquery's clock to a deterministic
-# literal, so a cache hit would replay the first call's frozen clock).
-# 'Exists' matches EXACTLY, not as a substring: ArrayExists — the
-# exists() higher-order function — is an ordinary expression with no
-# plan(), and substring-matching it would silently disable caching for
-# every query using it (r15 review).
-_SUBQ_MARKERS = ("Subquery", "ListQuery", "PlanExpression")
-_SUBQ_EXACT = ("Exists",)
-# InSubquery matches the "Subquery" substring but is NOT a
-# PlanExpression — it has no plan() of its own; its ListQuery child
-# (which IS in children() and exposes plan()) carries the subquery
-# plan and is walked like any other expression. Calling .plan() on it
-# raised through py4j and aborted the whole cacheability walk, so every
-# `WHERE col IN (SELECT …)` silently declined result caching even when
-# fully deterministic (r15 ADVICE — sound but unintended).
-_SUBQ_PLANLESS = ("InSubquery",)
-
-
-def _expr_subplan(e: Any):
-    """The out-of-band plan of a subquery expression, or None for an
-    ordinary expression. Raises when the class LOOKS like a plan-holder
-    but its plan is unreachable — the caller then declines caching."""
-    name = e.getClass().getSimpleName()
-    if name in _SUBQ_PLANLESS:
-        return None
-    if name not in _SUBQ_EXACT and not any(m in name for m in _SUBQ_MARKERS):
-        return None
-    return e.plan()  # every Catalyst PlanExpression exposes plan()
-
-
 def _norm_fs_path(p: str) -> str:
     """Normalize a scan/registered path for prefix comparison: drop a
     local-file scheme, URI-decode, strip trailing slashes."""
@@ -2841,77 +2827,52 @@ def _plan_cache_scope(df: DataFrame, allowed_paths=()) -> set[str] | None:
     cacheable at all. A result is cacheable only when the plan is a
     pure deterministic query over state the freshness token covers:
 
-    - no Command nodes (DDL/DML execute eagerly, must not replay);
-    - no nondeterministic expressions (rand() must re-draw);
     - no call-time clock expressions on the ANALYZED plan
       (current_timestamp()/now()/current_date() fold to deterministic
       literals before optimization — a cache hit would replay the
-      first call's clock);
+      first call's clock). Catalyst tags them CURRENT_LIKE, and also
+      current_database()/current_user(), which read session state and
+      decline too;
+    - no Command nodes (DDL/DML execute eagerly, must not replay);
+    - no nondeterministic expressions (rand() must re-draw);
     - every leaf relation is literal rows / a range, or a file scan
       whose every root path lies under a REGISTERED table path — a
       direct ``parquet.`/path``` scan or a view over an unregistered
       source has no snapshot in the freshness token and could change
       without invalidating.
 
-    Both walks DESCEND into subquery plans (ScalarSubquery / Exists /
-    InSubquery's ListQuery / lateral subqueries hold their plan
-    out-of-band — r15: a clock or rand() inside one previously evaded
-    every check). Any introspection failure declines caching — sound.
-    An empty set is a valid scope (a pure-literal query reads
-    nothing; its records can never go stale)."""
+    Every check also covers the subquery plans (ScalarSubquery /
+    Exists / IN's ListQuery / lateral subqueries hold their plan
+    out-of-band: a clock or rand() inside one must not evade them).
+    The checks are JVM-side tree queries — a few py4j round trips per
+    plan, not one per expression node. Any introspection failure
+    declines caching — sound. An empty set is a valid scope (a
+    pure-literal query reads nothing; its records can never go
+    stale)."""
     try:
         allowed = sorted(
             (_norm_fs_path(p) for p in allowed_paths),
             key=len, reverse=True,  # longest prefix wins on nesting
         )
+        current_like, command = _tree_patterns(df)
+        qe = df._jdf.queryExecution()
+        if any(
+            p.containsPattern(current_like)
+            for p in _with_subqueries(qe.analyzed())
+        ):
+            return None
         touched: set[str] = set()
-        # analyzed-plan pass: call-time clock expressions (pre-fold)
-        stack = [df._jdf.queryExecution().analyzed()]
-        while stack:
-            n = stack.pop()
-            exprs = n.expressions()
-            for i in range(exprs.size()):
-                estack = [exprs.apply(i)]
-                while estack:
-                    e = estack.pop()
-                    if e.getClass().getSimpleName() in _TIME_EXPRS:
-                        return None
-                    sub = _expr_subplan(e)  # raises -> except -> None
-                    if sub is not None:
-                        stack.append(sub)
-                    ech = e.children()
-                    for j in range(ech.size()):
-                        estack.append(ech.apply(j))
-            ch = n.children()
-            for i in range(ch.size()):
-                stack.append(ch.apply(i))
-        # optimized-plan pass: commands, nondeterminism, leaf coverage
-        stack = [df._jdf.queryExecution().optimizedPlan()]
-        while stack:
-            n = stack.pop()
-            cls = n.getClass().getSimpleName()
-            if "Command" in cls:
+        for plan in _with_subqueries(qe.optimizedPlan()):
+            if plan.containsPattern(command) or not plan.deterministic():
                 return None
-            exprs = n.expressions()
-            for i in range(exprs.size()):
-                e0 = exprs.apply(i)
-                if not e0.deterministic():
-                    return None
-                estack = [e0]
-                while estack:
-                    e = estack.pop()
-                    sub = _expr_subplan(e)
-                    if sub is not None:
-                        stack.append(sub)
-                    ech = e.children()
-                    for j in range(ech.size()):
-                        estack.append(ech.apply(j))
-            ch = n.children()
-            if ch.size() == 0:
+            leaves = plan.collectLeaves()
+            for i in range(leaves.size()):
+                leaf = leaves.apply(i)
+                cls = leaf.getClass().getSimpleName()
                 if cls == "LogicalRelation":
-                    roots = n.relation().location().rootPaths()
-                    for i in range(roots.size()):
-                        rp = _norm_fs_path(roots.apply(i).toString())
+                    roots = leaf.relation().location().rootPaths()
+                    for j in range(roots.size()):
+                        rp = _norm_fs_path(roots.apply(j).toString())
                         ap = next(
                             (
                                 a for a in allowed
@@ -2924,11 +2885,29 @@ def _plan_cache_scope(df: DataFrame, allowed_paths=()) -> set[str] | None:
                         touched.add(ap)
                 elif cls not in _CACHEABLE_LEAVES:
                     return None
-            for i in range(ch.size()):
-                stack.append(ch.apply(i))
         return touched
     except Exception:
         return None
+
+
+def _with_subqueries(plan: Any) -> list:
+    """``plan`` followed by every subquery plan under it, nested ones
+    included (Catalyst's ``subqueriesAll``)."""
+    subs = plan.subqueriesAll()
+    return [plan] + [subs.apply(i) for i in range(subs.size())]
+
+
+# gateway client -> Catalyst's (CURRENT_LIKE, COMMAND) tree patterns
+_TREE_PATTERNS: dict = {}
+
+
+def _tree_patterns(df: DataFrame) -> tuple:
+    client = df._sc._gateway._gateway_client
+    got = _TREE_PATTERNS.get(client)
+    if got is None:
+        tp = df._sc._jvm.org.apache.spark.sql.catalyst.trees.TreePattern
+        got = _TREE_PATTERNS[client] = (tp.CURRENT_LIKE(), tp.COMMAND())
+    return got
 
 
 def _fixed_widths() -> dict:

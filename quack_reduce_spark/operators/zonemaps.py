@@ -71,6 +71,7 @@ import decimal as _decimal
 import hashlib
 import json
 import re as _re
+import threading
 import uuid
 from typing import Any
 
@@ -342,11 +343,15 @@ def _list_path(data_dir: str) -> str:
 # the list parse is fresh), and _write_list bumps mtime monotonically
 # when a rewrite lands inside the previous tick. Entries are only ever
 # replaced with a fresh parse of the same path (GIL-atomic dict ops; a
-# racing reader at worst re-reads). IO_COUNTS tracks ACTUAL reads so
-# tests can assert that N queries on an unchanged table hit disk once.
+# racing list reader at worst re-reads; group reads hold a per-table
+# lock, so a burst of planners after a commit reads them once).
+# IO_COUNTS tracks ACTUAL reads so tests can assert that N queries on
+# an unchanged table hit disk once.
 _LIST_CACHE: dict[str, tuple[tuple, dict]] = {}
 _GROUP_CACHE: dict[tuple[str, str], tuple[Any, list[dict]]] = {}
 IO_COUNTS = {"list_reads": 0, "group_reads": 0}
+# data_dir -> lock serializing that table's group-manifest reads
+_GROUP_LOCKS: dict[str, threading.Lock] = {}
 
 
 def _read_list(data_dir: str) -> dict | None:
@@ -1800,14 +1805,15 @@ def _group_rows(
     session timezone — collect renders timestamps session-locally)
     matches. A cache miss reads ONLY the missed groups' manifests."""
     out: list[dict] = []
-    missed: list[str] = []
-    for t in toks:
-        hit = _GROUP_CACHE.get((data_dir, t))
-        if hit is not None and hit[0] == epoch:
-            out.extend(hit[1])
-        else:
-            missed.append(t)
-    if missed:
+    missed = _cached_groups(data_dir, toks, epoch, out)
+    if not missed:
+        return out
+    # one reader per table: concurrent planners after a commit wait
+    # for the first read instead of each re-reading the same groups
+    with _GROUP_LOCKS.setdefault(data_dir, threading.Lock()):
+        missed = _cached_groups(data_dir, missed, epoch, out)
+        if not missed:
+            return out
         IO_COUNTS["group_reads"] += 1
         zmdir = f"{data_dir.rstrip('/')}/{ZONEMAP_DIR}"
         zm = spark.read.option("recursiveFileLookup", "true").parquet(
@@ -1822,6 +1828,21 @@ def _group_rows(
             _GROUP_CACHE[(data_dir, t)] = (epoch, rs)
             out.extend(rs)
     return out
+
+
+def _cached_groups(
+    data_dir: str, toks: list[str], epoch: tuple, out: list[dict]
+) -> list[str]:
+    """Extend ``out`` with the cached rows of ``toks`` at ``epoch``;
+    return the tokens that missed."""
+    missed = []
+    for t in toks:
+        hit = _GROUP_CACHE.get((data_dir, t))
+        if hit is not None and hit[0] == epoch:
+            out.extend(hit[1])
+        else:
+            missed.append(t)
+    return missed
 
 
 def _any_in_interval(vals: Any, mn: Any, mx: Any) -> bool:

@@ -327,3 +327,34 @@ def test_result_cache_array_exists_still_caches(spark, sf_dir, tmp_path):
     assert r.metadata["result_cache"] == {"hit": False, "stored": True}
     assert eng.sql(q).metadata["result_cache"] == {"hit": True}
     spark.catalog.dropTempView("orders")
+
+
+def test_plan_cache_scope_round_trip_budget(spark, sf_dir, tmp_path, monkeypatch):
+    """The cacheability check is a handful of JVM-side tree queries per
+    plan, not a py4j call per expression node: on a plan with a scalar
+    subquery and an IN-subquery it stays under a small fixed number of
+    gateway round trips."""
+    eng, src = _eng(spark, sf_dir, tmp_path, "rc15")
+    df = eng.df(
+        "SELECT o_orderstatus, COUNT(*) AS n FROM orders "
+        "WHERE o_orderkey > (SELECT MIN(o_orderkey) FROM orders) "
+        "AND o_orderkey IN "
+        "(SELECT o_orderkey FROM orders WHERE o_totalprice > 1000) "
+        "GROUP BY o_orderstatus"
+    )
+    df.collect()
+    E._plan_cache_scope(df, [src])  # resolves the tree patterns once
+    client = spark.sparkContext._gateway._gateway_client
+    calls = [0]
+    send = client.send_command
+
+    def counting(*args, **kwargs):
+        calls[0] += 1
+        return send(*args, **kwargs)
+
+    monkeypatch.setattr(client, "send_command", counting)
+    scope = E._plan_cache_scope(df, [src])
+    monkeypatch.undo()
+    assert scope == {E._norm_fs_path(src)}
+    assert calls[0] <= 60, calls[0]
+    spark.catalog.dropTempView("orders")

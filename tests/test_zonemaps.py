@@ -462,6 +462,49 @@ def test_manifest_cache_reads_disk_once_until_append(spark, sf_dir, tmp_path):
     assert Z.IO_COUNTS["group_reads"] - mid["group_reads"] == 1
 
 
+def test_concurrent_planners_read_group_manifests_once(spark, sf_dir, tmp_path):
+    """A burst of planners right after a commit reads the table's group
+    manifests once, not once per planner: the first reader fills the
+    cache under a per-table lock and the others wait for it."""
+    import threading
+
+    path = str(tmp_path / "burst")
+    orders = load(spark, sf_dir, "orders")
+    (
+        orders.repartitionByRange(6, "o_orderdate")
+        .sortWithinPartitions("o_orderdate")
+        .write.mode("overwrite")
+        .parquet(path)
+    )
+    Z.write_zonemap(spark, path, ["o_orderdate"])
+    lo, hi = dt.datetime(1996, 1, 1), dt.datetime(1996, 12, 31)
+    Z.prune_files(spark, path, "o_orderdate", lo, hi)  # warm caches
+    delta = orders.limit(200).withColumn(
+        "o_orderkey", F.col("o_orderkey") + 900_000_000
+    )
+    delta.coalesce(1).write.mode("append").parquet(path)
+    assert Z.append_zonemap(spark, path, ["o_orderdate"]) == 1
+    cons = {"o_orderdate": (lo, hi, None, None)}
+    n = 6
+    start = threading.Barrier(n, timeout=60)
+    got: list = []
+
+    def plan():
+        start.wait()
+        got.append(Z.prune_files_multi(spark, path, cons))
+
+    before = Z.IO_COUNTS["group_reads"]
+    threads = [threading.Thread(target=plan) for _ in range(n)]
+    for t in threads:
+        t.start()
+    for t in threads:
+        t.join(120)
+    assert not any(t.is_alive() for t in threads) and len(got) == n
+    assert Z.IO_COUNTS["group_reads"] - before == 1
+    files = [sorted(r["file"] for r in rows) for rows, _total in got]
+    assert all(f == files[0] for f in files) and files[0]
+
+
 def test_manifest_stats_exact_and_append_current(spark, sf_dir, tmp_path):
     """Engine.table_stats == recomputing over the raw rows, before AND
     after an append (the manifest's stats track the delta); total
