@@ -182,6 +182,19 @@ def _concurrent_burst(spark, sf_dir: str) -> dict:
     }
 
 
+def compact_line(compact: dict) -> str:
+    """``compact`` as the final one-line JSON summary on stdout. A line
+    past COMPACT_LINE_MAX drops ``mins`` and nothing else (the full
+    blob always carries it), so the pre-r17 fields always fit in the
+    ~2000-char stdout tail a consumer keeps."""
+    line = json.dumps(compact, separators=(",", ":"))
+    if len(line) > COMPACT_LINE_MAX:
+        line = json.dumps(
+            {k: v for k, v in compact.items() if k != "mins"}, separators=(",", ":")
+        )
+    return line
+
+
 def main() -> None:
     from quack_reduce_spark.inventory import all_queries
     from quack_reduce_spark.session import get_spark
@@ -317,11 +330,7 @@ def main() -> None:
         "reps": REPS,
         "full": os.path.basename(full_path),
     }
-    line = json.dumps(compact, separators=(",", ":"))
-    if len(line) > COMPACT_LINE_MAX:
-        del compact["mins"]
-        line = json.dumps(compact, separators=(",", ":"))
-    print(line)
+    print(compact_line(compact))
 
 
 if __name__ == "__main__":

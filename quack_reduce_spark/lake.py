@@ -97,11 +97,20 @@ class _LocalFS:
             return fh.read()
 
     def write_text_atomic(self, p: str, text: str) -> None:
+        self.write_bytes_atomic(p, text.encode())
+
+    def read_bytes(self, p: str) -> bytes:
+        with open(p, "rb") as fh:
+            return fh.read()
+
+    def write_bytes_atomic(self, p: str, data: bytes) -> None:
+        # the temp name is dot-hidden, so a concurrent directory scan
+        # (Spark's or the manifest reader's) never sees a partial file
         tmp = os.path.join(
             os.path.dirname(p), f".{os.path.basename(p)}.tmp.{uuid.uuid4().hex}"
         )
-        with open(tmp, "w") as fh:
-            fh.write(text)
+        with open(tmp, "wb") as fh:
+            fh.write(data)
         os.replace(tmp, p)
 
     def create_excl(self, p: str, text: str) -> bool:
@@ -209,13 +218,24 @@ class _HadoopFS:
             stream.close()
 
     def write_text_atomic(self, p: str, text: str) -> None:
+        self.write_bytes_atomic(p, text.encode())
+
+    def read_bytes(self, p: str) -> bytes:
+        # one py4j call for the whole file, as in read_text
+        stream = self._fs.open(self._p(p))
+        try:
+            return bytes(self._jvm.org.apache.commons.io.IOUtils.toByteArray(stream))
+        finally:
+            stream.close()
+
+    def write_bytes_atomic(self, p: str, data: bytes) -> None:
         # FileSystem.create(overwrite=true): one small PUT on S3A
         # (atomic object replace); HDFS overwrites via its own
         # create-then-commit. Either way readers see old or new
-        # content, never partial.
+        # content, never partial. One write() call ships the payload.
         stream = self._fs.create(self._p(p), True)
         try:
-            stream.write(bytearray(text.encode()))
+            stream.write(bytearray(data))
         finally:
             stream.close()
 

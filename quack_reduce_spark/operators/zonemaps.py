@@ -11,50 +11,49 @@ a MANIFEST LIST over PER-PARTITION MANIFESTS:
 
 - :func:`write_zonemap` aggregates per-file ``(n_rows, min, max,
   n_null)`` for chosen columns in ONE distributed pass over the table
-  (grouping on the hidden ``_metadata.file_path`` column) and writes
-  the stats under ``<table>/_zonemap/`` — an underscore-prefixed
-  directory, which Spark's file index treats as hidden, so normal
-  table scans never see it. Stats rows are partitioned into ONE
+  (grouping on the hidden ``_metadata.file_path`` column) and collects
+  the #files rows. They land under ``<table>/_zonemap/`` (underscore:
+  hidden from Spark's file index, so table scans never see it) as ONE
   MANIFEST PER DATA DIRECTORY (= per hive partition; flat layouts get
-  a single group) via ``write.partitionBy`` — a single distributed
-  write, no per-group driver loop — plus a tiny JSON *manifest list*
-  (``_zonemap/_list.json``) recording, per group: the directory, its
-  file count, and group-level [lo, hi] per stats column.
+  one group) at ``__g=<token>/``, plus a JSON *manifest list*
+  (``_list.json``): per group its directory, file and row counts,
+  and group-level [lo, hi] per stats column.
+- Manifests are DRIVER-SIDE metadata, as in Iceberg: parquet bytes
+  encoded and decoded with pyarrow through the lake filesystem (plain
+  files for bare paths, the Hadoop FileSystem for URIs). A commit
+  writes each touched group's NEW uniquely named file, then the list
+  (the commit point), then deletes what it superseded; the reader
+  de-duplicates rows by file, so a racing reader never double-counts.
 - :func:`append_zonemap` is the Iceberg append-commit shape: only the
-  NEW files are statted, and only the TOUCHED partitions' manifests
-  are rewritten (Spark dynamic partition overwrite); untouched
-  partitions' manifests are never read, rewritten, or even listed.
-  Maintenance cost tracks the DELTA, not the table — at a million
-  files, an append to today's partition rewrites one small manifest,
-  not an O(#files) blob (the round-9 design nit this layout fixes).
+  NEW files are statted — that delta scan is the append's only Spark
+  work — and only the TOUCHED partitions' manifests are rewritten.
+  Untouched partitions' manifests are never read, rewritten, or even
+  listed, so maintenance cost tracks the DELTA, not the table.
 - :func:`prune_files` reads the manifest list FIRST: partition groups
   whose group-level ``[lo, hi]`` cannot intersect the query range are
   skipped without opening their manifests at all; surviving groups'
-  manifests are then read (one Spark job over only those paths) and
-  filtered file-by-file. A file survives iff its ``[min, max]``
-  interval intersects ``[lo, hi]`` (an all-NULL file has NULL min/max
-  and is skipped — a range predicate cannot match NULL).
+  manifests are then read (cached per list commit) and filtered
+  file-by-file. A file survives iff its ``[min, max]`` interval
+  intersects ``[lo, hi]`` (an all-NULL file has NULL min/max and is
+  skipped — a range predicate cannot match NULL).
 - :func:`scan_pruned` reads ONLY the surviving files and re-applies
   the exact predicate (zone maps prune, they never filter), so the
   result is row-for-row identical to a full-table filter — the
   invariant ``tests/test_zonemaps.py`` verifies on sorted, random,
   and z-ordered layouts.
 
-Scale notes. The manifest build is one map-side-combinable aggregate
-keyed on file path — #files output rows regardless of table size.
-Planning reads the manifest list (#partitions entries) and then only
-the candidate partitions' manifests; only SURVIVING file paths are
-collected to the driver (the standard planning cost every table
-format pays). Pruning power is a *layout* property: clustering the
-write by the filter column (``repartitionByRange`` +
-``sortWithinPartitions``, or
+Scale notes. The manifest build is one aggregate keyed on file path —
+#files output rows regardless of table size. Pruning power is a
+*layout* property: clustering the write by the filter column
+(``repartitionByRange`` + ``sortWithinPartitions``, or
 :func:`~quack_reduce_spark.operators.zorder.zorder_write` for two
 dimensions) gives each file a tight bounding box; a random layout
 degrades gracefully to reading everything — never to a wrong answer.
 
-Legacy layouts (round-9 single-file manifests, no ``_list.json``) are
-still read correctly and are upgraded in place — from their own rows,
-no table rescan — on the first :func:`append_zonemap`.
+Legacy layouts (round-9 single-file manifests, no ``_list.json``, and
+Spark-written multi-part groups) are still read correctly and are
+upgraded in place — from their own rows, no table rescan — on the
+first :func:`append_zonemap`.
 
 The reference has no stats layer at all — its serverless engine
 re-lists and re-opens objects per query (``quack.py:145``,
@@ -72,10 +71,12 @@ import hashlib
 import json
 import re as _re
 import threading
+import time
 import uuid
 from typing import Any
 
 import pyspark.sql.functions as F
+from py4j.protocol import Py4JJavaError
 from pyspark.sql import Column, DataFrame, SparkSession
 
 ZONEMAP_DIR = "_zonemap"
@@ -92,10 +93,6 @@ GROUP_STATS_READ_MAX = 262_144
 def _bare(p: str) -> str:
     """Scheme-less path: ``file:///x`` / ``file:/x`` / ``/x`` → ``/x``."""
     return "/" + p.split("://")[-1].removeprefix("file:").lstrip("/")
-
-
-def _bare_col(c: Column) -> Column:
-    return F.regexp_replace(c, "^[a-zA-Z0-9]+:/+", "/")
 
 
 def _file_col() -> Column:
@@ -127,22 +124,8 @@ def _dirname(p: str) -> str:
     return p.rsplit("/", 1)[0]
 
 
-def _dirname_col(c: Column) -> Column:
-    # left(p, len - position of first '/' in reverse) == dirname
-    return F.substring(c, F.lit(1), F.length(c) - F.instr(F.reverse(c), "/"))
-
-
 def _token(rel: str) -> str:
     return hashlib.md5(rel.encode()).hexdigest()[:12]
-
-
-def _group_cols(file_col: Column) -> tuple[Column, Column]:
-    """(group-token, group-dir) columns from a file-path column — the
-    token is md5(normalized dirname)[:12], matching :func:`_token` on
-    driver-side walked paths (Spark's md5 is lowercase hex, same as
-    hashlib)."""
-    gdir = _dirname_col(_bare_col(file_col))
-    return F.substring(F.md5(gdir), 1, 12), gdir
 
 
 # -- manifest-list JSON codec (typed lo/hi values) -------------------------
@@ -440,32 +423,170 @@ def _write_list(
     _invalidate_cache(data_dir)
 
 
-def _group_summaries(stats_g: DataFrame, cols: list[str]) -> dict[str, dict]:
-    """Manifest-list entries from a stats frame that carries ``__g``
-    (token) and ``__gdir`` columns: per group — dir, file count, and
-    group-level [lo, hi] per stats column. One aggregate onto
-    #partitions rows; the only driver materialization in the build."""
-    aggs = [
-        F.first("__gdir").alias("dir"),
-        F.count(F.lit(1)).alias("n_files"),
+# -- group manifest codec (driver-side parquet through the lake fs) ---------
+#
+# A group manifest is #files-in-one-directory rows: tens to thousands,
+# never table-scale. Encoding or decoding it with pyarrow on the
+# driver runs no Spark job; a Spark read or write of the same rows runs
+# whole jobs (scheduling, schema inference, commit protocol). On a
+# 4-vCPU VM that took a one-file append_zonemap on a 24-file table
+# from ~0.8-1.0 s to ~0.25-0.33 s. Iceberg keeps manifest planning on
+# the driver for the same reason.
+# Files are named ``zm-<time_ns>-<rand>.parquet`` so a newer manifest
+# sorts after an older one (and after Spark's ``part-*`` names).
+
+
+def _zm_dir(data_dir: str) -> str:
+    return f"{data_dir.rstrip('/')}/{ZONEMAP_DIR}"
+
+
+def _group_dir(data_dir: str, tok: str) -> str:
+    return f"{_zm_dir(data_dir)}/__g={tok}"
+
+
+def _arrow_rows(data: bytes) -> list[dict]:
+    """Rows of one manifest file as dicts, valued exactly as a Spark
+    ``collect()`` of the same file would be. Pre-v3 manifests stored
+    session-zoned timestamps natively (INT96 or UTC-adjusted): those
+    render OS-local, as PySpark's ``TimestampType.fromInternal`` does;
+    wall-clock ``timestamp_ntz`` values pass through naive."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    t = pq.read_table(pa.BufferReader(data))
+    rows = t.to_pylist()
+    for f in t.schema:
+        if pa.types.is_timestamp(f.type) and (f.type.tz or f.type.unit == "ns"):
+            micros = (
+                t.column(f.name)
+                .cast(pa.timestamp("us", f.type.tz), safe=False)
+                .cast(pa.int64())
+                .to_pylist()
+            )
+            for r, m in zip(rows, micros):
+                r[f.name] = None if m is None else _ts_render(m)
+    return rows
+
+
+def _read_group(fs: Any, gdir: str) -> list[dict]:
+    """Per-file rows of one group directory: every visible manifest
+    file (``_``/``.`` names skipped, as Spark's file index does, so
+    ``.crc`` sidecars and temp files never count), de-duplicated by
+    file with the later-named manifest winning. A reader listing a
+    group mid-replace sees the old and new file together and still
+    counts each data file once; one whose listed file a replace
+    deleted re-lists (the replacement was written first)."""
+    for attempt in range(3):
+        names = sorted(n for n in fs.list_names(gdir) if not n.startswith(("_", ".")))
+        try:
+            rows = [r for n in names for r in _arrow_rows(fs.read_bytes(f"{gdir}/{n}"))]
+        except (OSError, Py4JJavaError):  # local / Hadoop file not found
+            if attempt < 2 and not all(fs.is_file(f"{gdir}/{n}") for n in names):
+                continue
+            raise  # not a superseded file: a real read error
+        return list({_unq(_bare(r["file"])): r for r in rows}.values())
+    raise AssertionError("unreachable")
+
+
+def _write_group(fs: Any, data_dir: str, tok: str, rows: list[dict], arrow: Any) -> str:
+    """Encode ``rows`` with Arrow schema ``arrow`` as a NEW uniquely
+    named manifest file in the group's directory; return its name."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    sink = pa.BufferOutputStream()
+    pq.write_table(pa.Table.from_pylist(rows, schema=arrow), sink)
+    gdir = _group_dir(data_dir, tok)
+    fs.mkdirs(gdir)  # idempotent; a new group's first manifest
+    name = f"zm-{time.time_ns():020d}-{uuid.uuid4().hex[:8]}.parquet"
+    fs.write_bytes_atomic(f"{gdir}/{name}", sink.getvalue().to_pybytes())
+    return name
+
+
+def _spark_order(v: Any) -> tuple:
+    # Spark's min/max order: NaN sorts above every other double
+    return (isinstance(v, float) and v != v, v)
+
+
+def _group_entry(rows: list[dict], cols: list[str]) -> dict:
+    """Manifest-list entry of one group: dir, file and row counts, and
+    the group-level [lo, hi] per stats column — folded with Spark's
+    ``min``/``max`` semantics (nulls skipped, NaN greatest, an
+    all-null column gives None)."""
+    stats = {}
+    for c in cols:
+        los = [r[f"min_{c}"] for r in rows if r.get(f"min_{c}") is not None]
+        his = [r[f"max_{c}"] for r in rows if r.get(f"max_{c}") is not None]
+        stats[c] = {
+            "lo": _enc(min(los, key=_spark_order) if los else None),
+            "hi": _enc(max(his, key=_spark_order) if his else None),
+        }
+    return {
+        "dir": _dirname(_bare(rows[0]["file"])),
+        "n_files": len(rows),
         # group-level row count in the LIST doc: table row count (the
         # histogram drift trigger, CBO sizing) then needs zero group
         # manifest reads
-        F.sum("n_rows").alias("__nr"),
-    ]
-    for c in cols:
-        aggs.append(F.min(f"min_{c}").alias(f"lo_{c}"))
-        aggs.append(F.max(f"max_{c}").alias(f"hi_{c}"))
-    out: dict[str, dict] = {}
-    for r in stats_g.groupBy("__g").agg(*aggs).collect():
-        out[r["__g"]] = {
-            "dir": r["dir"],
-            "n_files": int(r["n_files"]),
-            "n_rows": int(r["__nr"] or 0),
-            "stats": {
-                c: {"lo": _enc(r[f"lo_{c}"]), "hi": _enc(r[f"hi_{c}"])} for c in cols
-            },
-        }
+        "n_rows": sum(int(r.get("n_rows") or 0) for r in rows),
+        "stats": stats,
+    }
+
+
+def _commit_manifest(
+    data_dir: str,
+    cols: list[str],
+    schema: Any,
+    touched: dict[str, list[dict]],
+    groups: dict[str, dict] | None = None,
+    **list_doc: Any,
+) -> None:
+    """The one manifest writer. Writes each touched group's rows as a
+    fresh manifest file, commits the list doc (``_write_list`` — the
+    commit point), and only THEN deletes the files the commit
+    superseded. ``groups`` is an append's full list-entry map, the
+    touched entries already folded: only the touched groups' older
+    files are superseded. ``None`` is a full rebuild: the entries fold
+    from ``touched``, and every other group directory and any legacy
+    file under ``_zonemap/`` is superseded as well."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    from quack_reduce_spark.lake import _fs_for
+
+    full = groups is None
+    if full:
+        groups = {tok: _group_entry(rs, cols) for tok, rs in touched.items()}
+    # the Arrow schema derives from the Spark stats schema, every field
+    # nullable as Spark's own writers store them, so a Spark scan of
+    # the manifest reads the same types back
+    arrow = pa.schema([f.with_nullable(True) for f in to_arrow_schema(schema)])
+    fs = _fs_for(data_dir)
+    fs.mkdirs(_zm_dir(data_dir))
+    written = {
+        tok: _write_group(fs, data_dir, tok, rows, arrow)
+        for tok, rows in touched.items()
+    }
+    _write_list(data_dir, cols, groups, **list_doc)
+    for tok, name in written.items():
+        gdir = _group_dir(data_dir, tok)
+        for n in fs.list_names(gdir):
+            if n not in (name, f".{name}.crc"):
+                fs.delete_file(f"{gdir}/{n}")
+    zm = _zm_dir(data_dir)
+    for n in fs.list_names(zm) if full else []:
+        p = f"{zm}/{n}"
+        if n.startswith((LIST_FILE, f".{LIST_FILE}")) or n.removeprefix("__g=") in written:
+            continue
+        if fs.is_dir(p):
+            fs.delete_recursive(p)
+        else:
+            fs.delete_file(p)
+
+
+def _by_group(rows: list[dict]) -> dict[str, list[dict]]:
+    out: dict[str, list[dict]] = {}
+    for r in rows:
+        out.setdefault(_token(_dirname(_bare(r["file"]))), []).append(r)
     return out
 
 
@@ -770,8 +891,7 @@ def manifest_ndv(
         doc, epoch = _read_list_cached(data_dir)
         if doc is None:
             return None
-        session_tz = spark.conf.get("spark.sql.session.timeZone")
-        rows = _group_rows(spark, data_dir, list(doc["groups"]), (epoch, session_tz))
+        rows = _group_rows(data_dir, list(doc["groups"]), epoch)
     return hll_merge_estimate([r.get(f"hll_{col}") for r in rows])
 
 
@@ -815,34 +935,35 @@ def _validate_hist_cols(
 
 
 def _hist_doc(
-    df: DataFrame, hist_cols: list[str], bins: int, types: dict[str, str]
+    df: DataFrame, bins: dict[str, int], types: dict[str, str]
 ) -> dict[str, dict]:
-    """One aggregate over the table: per column, the ``bins + 1`` EXACT
-    quantile boundaries (``F.percentile`` — the linear-interpolation
-    definition DuckDB's quantile_cont shares, which is what lets the
-    registry key hash-prove these numbers) plus the non-null count.
-    Session-zoned timestamps are histogrammed in epoch-micros space —
-    the same representation their manifest min/max stats use."""
-    qs = [i / bins for i in range(bins + 1)]
+    """One aggregate over the table: per column ``c``, the ``bins[c] +
+    1`` EXACT quantile boundaries (``F.percentile`` — the
+    linear-interpolation definition DuckDB's quantile_cont shares,
+    which is what lets the registry key hash-prove these numbers) plus
+    the non-null count. Session-zoned timestamps are histogrammed in
+    epoch-micros space — the same representation their manifest
+    min/max stats use."""
     aggs = []
-    for c in hist_cols:
+    for c, b in bins.items():
         src = (
             F.unix_micros(F.col(c)).cast("double")
             if types.get(c) == "timestamp"
             else F.col(c).cast("double")
         )
-        aggs.append(F.percentile(src, F.lit(qs).cast("array<double>")).alias(f"__q_{c}"))
+        qs = F.lit([i / b for i in range(b + 1)]).cast("array<double>")
+        aggs.append(F.percentile(src, qs).alias(f"__q_{c}"))
         aggs.append(F.count(src).alias(f"__n_{c}"))
     row = df.agg(*aggs).first()
     out: dict[str, dict] = {}
-    for c in hist_cols:
+    for c, b in bins.items():
         bounds = row[f"__q_{c}"]
         if bounds is None:
             continue  # all-NULL column: no histogram
         out[c] = {
-            "bounds": [float(b) for b in bounds],
+            "bounds": [float(x) for x in bounds],
             "n_nonnull": int(row[f"__n_{c}"]),
-            "bins": bins,
+            "bins": b,
         }
     return out
 
@@ -914,22 +1035,22 @@ def _sum_wide_dec(tname: Any) -> int | None:
     return ps[1]
 
 
-def _stat_aggs(cols: list[str], types: dict[str, str] | None = None) -> list[Column]:
-    # file_bytes (from the hidden _metadata column) feeds the engine's
-    # broadcast-hint estimate: surviving-file bytes are the same units
-    # Spark's own static size stats compare against the broadcast
-    # threshold, so no row-width guessing is involved
-    aggs = [
-        F.count(F.lit(1)).alias("n_rows"),
-        F.min("__fsize").alias("file_bytes"),
-    ]
+def _stat_aggs(
+    cols: list[str], types: dict[str, str], file_bytes: bool = True
+) -> list[Column]:
+    aggs = [F.count(F.lit(1)).alias("n_rows")]
+    if file_bytes:
+        # file_bytes (from the hidden _metadata column) feeds the
+        # engine's broadcast-hint estimate: surviving-file bytes are
+        # the same units Spark's own static size stats compare against
+        # the broadcast threshold, so no row-width guessing is
+        # involved. Group-stats slices have no size of their own.
+        aggs.append(F.min("__fsize").alias("file_bytes"))
     for c in cols:
         aggs.append(F.min(c).alias(f"min_{c}"))
         aggs.append(F.max(c).alias(f"max_{c}"))
         aggs.append(F.count(F.when(F.col(c).isNull(), 1)).alias(f"nulls_{c}"))
-        if types is not None and (
-            _sum_col_ok(types.get(c)) or _sum_wide_dec(types.get(c)) is not None
-        ):
+        if _sum_col_ok(types.get(c)) or _sum_wide_dec(types.get(c)) is not None:
             # exact per-file sum (r13): integer-family columns and
             # decimal(p<=18) — whose select expr is already the
             # unscaled long, so this is the exact unscaled sum.
@@ -952,13 +1073,6 @@ def _source_types(df: DataFrame, cols: list[str]) -> dict[str, str]:
     datetime)."""
     by_name = _py_field_types(df)
     return {c: by_name[c] for c in cols if c in by_name}
-
-
-def _manifest_types(stats: DataFrame, cols: list[str]) -> dict[str, str]:
-    """Source types inferred from a legacy manifest frame's stored
-    ``min_<c>`` column types (legacy docs recorded none)."""
-    by_name = _py_field_types(stats)
-    return {c: by_name[f"min_{c}"] for c in cols if f"min_{c}" in by_name}
 
 
 def _stats_select_cols(df: DataFrame, cols: list[str]) -> list[Column]:
@@ -1003,11 +1117,6 @@ def _epochize_stats(stats: DataFrame, types: dict[str, str]) -> DataFrame:
     return stats
 
 
-def _with_groups(stats: DataFrame) -> DataFrame:
-    tok, gdir = _group_cols(F.col("file"))
-    return stats.withColumn("__g", tok).withColumn("__gdir", gdir)
-
-
 def zonemap_stats(spark: SparkSession, data_dir: str, cols: list[str]) -> DataFrame:
     """Per-file stats frame for ``cols``: one row per parquet file with
     ``n_rows`` plus ``min_<c>``, ``max_<c>``, ``nulls_<c>`` per column,
@@ -1017,6 +1126,10 @@ def zonemap_stats(spark: SparkSession, data_dir: str, cols: list[str]) -> DataFr
     pruning comparison. Single partial/final aggregate onto #files
     keys — the only full-table pass zone maps ever make."""
     df = spark.read.parquet(data_dir)
+    return _stats_frame(df, cols, _source_types(df, cols))
+
+
+def _stats_frame(df: DataFrame, cols: list[str], types: dict[str, str]) -> DataFrame:
     return (
         df.select(
             _file_col().alias("file"),
@@ -1024,65 +1137,50 @@ def zonemap_stats(spark: SparkSession, data_dir: str, cols: list[str]) -> DataFr
             *_stats_select_cols(df, cols),
         )
         .groupBy("file")
-        .agg(*_stat_aggs(cols, _source_types(df, cols)))
+        .agg(*_stat_aggs(cols, types))
     )
 
 
 def _cover_empty_files(
-    spark: SparkSession, data_dir: str, stats: DataFrame, candidates: list[str]
-) -> DataFrame:
-    """Union zero-row stats entries for candidate files the data scan
-    produced no rows for — EMPTY parquet files (Spark writers can leave
-    one for an all-empty task). They must appear in the manifest so its
-    file count matches the live listing (the engine's stale-manifest
-    guard compares the two before trusting the manifest), and a
-    zero-row entry is pruned by every constraint (all-NULL min/max,
-    zero null-count), so covering them never costs a read."""
+    data_dir: str, schema: Any, rows: list[dict], candidates: list[str]
+) -> list[dict]:
+    """``rows`` plus zero-row stats entries for candidate files the data
+    scan produced no rows for — EMPTY parquet files (Spark writers can
+    leave one for an all-empty task). They must appear in the manifest
+    so its file count matches the live listing (the engine's
+    stale-manifest guard compares the two before trusting the
+    manifest), and a zero-row entry is pruned by every constraint
+    (all-NULL min/max, zero null-count), so covering them never costs
+    a read."""
     from quack_reduce_spark.lake import _fs_for
 
-    statted = {_unq(_bare(r["file"])) for r in stats.select("file").collect()}
+    statted = {_unq(_bare(r["file"])) for r in rows}
     missing = [p for p in candidates if _unq(_bare(p)) not in statted]
     if not missing:
-        return stats
+        return rows
     fs = _fs_for(data_dir)
-    rows = []
+    out = list(rows)
     for f in missing:
-        d: dict[str, Any] = {c: None for c in stats.columns}
-        d["file"] = f
-        d["n_rows"] = 0
-        d["file_bytes"] = fs.size(f)
-        for c in stats.columns:
-            if c.startswith("nulls_"):
-                d[c] = 0
-        rows.append(tuple(d[c] for c in stats.columns))
-    extra = spark.createDataFrame(rows, stats.schema)
-    return stats.unionByName(extra)
+        d: dict[str, Any] = {c: None for c in schema.names}
+        d.update(file=f, n_rows=0, file_bytes=fs.size(f))
+        d.update({c: 0 for c in schema.names if c.startswith("nulls_")})
+        out.append(d)
+    return out
 
 
-def _write_grouped(
-    spark: SparkSession, data_dir: str, stats_g: DataFrame, dynamic: bool
-) -> None:
-    """Write stats (carrying ``__g``/``__gdir``) as one manifest file
-    per partition group under ``_zonemap/__g=<token>/``. ``__gdir`` is
-    dropped (derivable; the list records it); ``__g`` becomes the
-    physical partition dir. ``dynamic=True`` (the append path) uses
-    DYNAMIC partition-overwrite: only the groups present in
-    ``stats_g`` are replaced — the delta-only rewrite. ``dynamic=
-    False`` (full rebuild) replaces the whole manifest dir so no
-    stale group can linger."""
-    zm = f"{data_dir.rstrip('/')}/{ZONEMAP_DIR}"
-    # the overwrite mode rides on the WRITER, not the session conf:
-    # a session-global toggle would leak into concurrent writes in
-    # the same session and two racing append_zonemap calls could
-    # clobber each other's restore
-    (
-        stats_g.drop("__gdir")
-        .repartition("__g")
-        .write.option("partitionOverwriteMode", "dynamic" if dynamic else "static")
-        .partitionBy("__g")
-        .mode("overwrite")
-        .parquet(zm)
-    )
+def _option_cols(
+    arg: list | dict | None, prev: dict | None, keep: Any
+) -> tuple[list, dict[str, dict]]:
+    """``(columns, per-column config)`` of one write_zonemap metadata
+    option. ``None`` inherits the previous manifest's config; a dict
+    is a carried-over config (captured before a rewrite into a FRESH
+    directory, where same-dir inheritance has nothing to read), so
+    per-column settings survive the move; a list names columns at the
+    default settings. Inherited columns ``keep`` rejects are dropped."""
+    if arg is None or isinstance(arg, dict):
+        cfg = dict((prev if arg is None else arg) or {})
+        return [c for c in cfg if keep(c)], cfg
+    return list(arg), {}
 
 
 def write_zonemap(
@@ -1145,94 +1243,58 @@ def write_zonemap(
     per column at build."""
     df = spark.read.parquet(data_dir)
     types = _source_types(df, cols)
-    prev = (
-        _read_list(data_dir)
-        if (
-            bloom_cols is None
-            or hist_cols is None
-            or ndv_cols is None
-            or group_stats_cols is None
-        )
-        else None
-    )
-    inherited: dict[str, dict] = {}
-    if bloom_cols is None:
-        inherited = dict((prev or {}).get("bloom") or {})
-        bloom_cols = [c for c in inherited if c in cols]
-    elif isinstance(bloom_cols, dict):
-        # a carried-over config (bloom_config of a table about to be
-        # rewritten into a FRESH directory, where same-dir inheritance
-        # has nothing to read): per-column bpk/k survive the move
-        inherited = dict(bloom_cols)
-        bloom_cols = [c for c in inherited if c in cols]
+    prev = _read_list(data_dir) or {}
+    in_cols = cols.__contains__
+    bloom_cols, inherited = _option_cols(bloom_cols, prev.get("bloom"), in_cols)
     _validate_bloom_cols(types, cols, bloom_cols)
-    hist_inherited: dict[str, dict] = {}
-    if hist_cols is None:
-        hist_inherited = dict((prev or {}).get("hist") or {})
-        hist_cols = [c for c in hist_inherited if c in cols]
-    elif isinstance(hist_cols, dict):
-        hist_inherited = dict(hist_cols)
-        hist_cols = [c for c in hist_inherited if c in cols]
+    hist_cols, hist_inherited = _option_cols(hist_cols, prev.get("hist"), in_cols)
     _validate_hist_cols(types, cols, hist_cols)
-    if ndv_cols is None:
-        ndv_cols = [c for c in ((prev or {}).get("ndv") or {}) if c in cols]
-    elif isinstance(ndv_cols, dict):
-        ndv_cols = [c for c in ndv_cols if c in cols]
+    ndv_cols, _ = _option_cols(ndv_cols, prev.get("ndv"), in_cols)
     _validate_ndv_cols(types, cols, ndv_cols)
-    gs_inherited: dict[str, dict] = {}
-    if group_stats_cols is None:
-        gs_inherited = dict((prev or {}).get("group_stats") or {})
-        group_stats_cols = [
-            k for k in gs_inherited
-            if all(c in cols for c in _gs_components(k))
-        ]
-    elif isinstance(group_stats_cols, dict):
-        gs_inherited = dict(group_stats_cols)
-        group_stats_cols = [
-            k for k in gs_inherited
-            if all(c in cols for c in _gs_components(k))
-        ]
-    else:
-        # tuples/lists of columns normalize to the canonical "a,b"
-        # composite key form the config doc stores
-        group_stats_cols = [_gs_key(k) for k in group_stats_cols]
-    _validate_group_stats_cols(types, cols, group_stats_cols)
-    stats = _cover_empty_files(
-        spark, data_dir, zonemap_stats(spark, data_dir, cols), _data_files(data_dir)
+    group_stats_cols, gs_inherited = _option_cols(
+        group_stats_cols, prev.get("group_stats"),
+        lambda k: all(c in cols for c in _gs_components(k)),
     )
-    # pin the per-file rows (#files-scale) so the sizing aggregates
-    # below never re-run the table scan
-    stats = stats.localCheckpoint()
+    # tuples/lists of columns normalize to the canonical "a,b"
+    # composite key form the config doc stores
+    group_stats_cols = [_gs_key(k) for k in group_stats_cols]
+    _validate_group_stats_cols(types, cols, group_stats_cols)
+    stats = _stats_frame(df, cols, types)
+    schema = stats.schema
+    rows = _cover_empty_files(
+        data_dir, schema, [r.asDict() for r in stats.collect()],
+        _data_files(data_dir),
+    )
     bloom_doc: dict[str, dict] = {}
     if bloom_cols:
-        max_rows = stats.agg(F.max("n_rows")).first()[0] or 1
+        max_rows = max((int(r["n_rows"]) for r in rows), default=0) or 1
         for c in bloom_cols:
             bpk = int(inherited.get(c, {}).get("bpk", bloom_bits_per_key))
             k = int(inherited.get(c, {}).get("k", bloom_k))
             bloom_doc[c] = {"m": _bloom_m_for(max_rows, bpk), "k": k, "bpk": bpk}
-        stats = _attach_blooms(df, stats, bloom_doc)
     ndv_doc: dict[str, dict] = {}
     if ndv_cols:
         from quack_reduce_spark.operators.sketches import HLL_M, HLL_P
 
-        stats = _attach_ndv(df, stats, ndv_cols)
         ndv_doc = {c: {"m": HLL_M, "p": HLL_P} for c in ndv_cols}
+    if bloom_doc or ndv_doc:
+        # the sketches join the collected per-file rows by file (the
+        # bloom width needed their max n_rows first); the rows travel
+        # back as a local relation, so the table scan never re-runs
+        # for the stats
+        sk = spark.createDataFrame(rows, schema)
+        sk = _attach_ndv(df, _attach_blooms(df, sk, bloom_doc), ndv_cols)
+        schema, rows = sk.schema, [r.asDict() for r in sk.collect()]
     hist_doc: dict[str, dict] = {}
     if hist_cols:
-        per_col_bins = {
-            c: int(hist_inherited.get(c, {}).get("bins", hist_bins))
-            for c in hist_cols
-        }
         # boundaries are always RECOMPUTED from the current rows (a
         # rebuild is exactly when a histogram should refresh); only
         # the per-column bin counts are inherited
-        uniform = len(set(per_col_bins.values())) == 1
-        if uniform:
-            hist_doc = _hist_doc(df, hist_cols, next(iter(per_col_bins.values())), types)
-        else:
-            for c in hist_cols:
-                hist_doc.update(_hist_doc(df, [c], per_col_bins[c], types))
-        n_now = int(stats.agg(F.sum("n_rows")).first()[0] or 0)
+        hist_doc = _hist_doc(df, {
+            c: int(hist_inherited.get(c, {}).get("bins", hist_bins))
+            for c in hist_cols
+        }, types)
+        n_now = sum(int(r["n_rows"]) for r in rows)
         for c in hist_doc:
             hist_doc[c]["n_rows_at_build"] = n_now
     gs_doc: dict[str, dict] = {}
@@ -1241,31 +1303,25 @@ def write_zonemap(
         gsf = _group_stats_frame(df, c, cols, types, mg).localCheckpoint()
         gsf.write.mode("overwrite").parquet(_gstats_path(data_dir, c))
         gs_doc[c] = {"max_groups": mg, "entries": gsf.count()}
-    stats_g = _with_groups(stats).localCheckpoint()
-    _write_grouped(spark, data_dir, stats_g, dynamic=False)
-    groups = _group_summaries(stats_g, cols)
-    _write_list(
-        data_dir, cols, groups, types=types,
+    _commit_manifest(
+        data_dir, cols, schema, _by_group(rows), types=types,
         bloom=bloom_doc or None, hist=hist_doc or None, ndv=ndv_doc or None,
         group_stats=gs_doc or None,
     )
-    return sum(g["n_files"] for g in groups.values())
+    return len(rows)
 
 
 def read_zonemap(spark: SparkSession, data_dir: str) -> DataFrame:
     """All per-file stats rows (every group's manifest; legacy
     single-file layouts read identically — ``_list.json`` is
     underscore-hidden from the parquet scan)."""
-    return (
-        spark.read.option("recursiveFileLookup", "true")
-        .parquet(f"{data_dir.rstrip('/')}/{ZONEMAP_DIR}")
-    )
+    return spark.read.option("recursiveFileLookup", "true").parquet(_zm_dir(data_dir))
 
 
 def has_zonemap(data_dir: str) -> bool:
-    from quack_reduce_spark.lake import _fs_for, _join
+    from quack_reduce_spark.lake import _fs_for
 
-    return _fs_for(data_dir).is_dir(_join(data_dir, ZONEMAP_DIR))
+    return _fs_for(data_dir).is_dir(_zm_dir(data_dir))
 
 
 def zonemap_cols(data_dir: str) -> list[str]:
@@ -1318,31 +1374,16 @@ def _data_files(data_dir: str) -> list[str]:
     return out
 
 
-def _rebuild_from_rows(
-    spark: SparkSession, data_dir: str, old: DataFrame, cols: list[str]
-) -> None:
-    """Rewrite the whole grouped manifest from existing manifest ROWS
-    (no table rescan): fills missing file_bytes, converts any
-    natively-stored session-zoned timestamp stats to epoch micros
-    (lossless — unix_micros reads the stored internal value), and
-    commits a fresh v3 list doc."""
-    if "file_bytes" not in old.columns:  # r9 manifests predate sizes
-        old = old.withColumn("file_bytes", F.lit(None).cast("long"))
-    types = _manifest_types(old, cols)
-    old = _epochize_stats(old, types)
-    stats_g = _with_groups(old).localCheckpoint()
-    _write_grouped(spark, data_dir, stats_g, dynamic=False)
-    _write_list(data_dir, cols, _group_summaries(stats_g, cols), types=types)
-
-
 def _upgrade_legacy(spark: SparkSession, data_dir: str) -> list[str]:
     """Rewrite a pre-v3 manifest (round-9 single-file layouts AND v2
     grouped layouts, whose timestamp stats were stored natively) into
-    the v3 epoch-space grouped layout — from the manifest's OWN rows
-    (no table rescan). Migrating the whole tree at once keeps every
-    group's parquet schema consistent (a v2/v3 mix would make the
-    recursive manifest read see timestamp vs long for the same
-    column). Returns the stats columns. Idempotent: v3 layouts pass
+    the v3 epoch-space grouped layout — from the manifest's OWN rows,
+    no table rescan: missing file_bytes fill as NULL, natively stored
+    session-zoned timestamp stats convert to epoch micros (lossless —
+    unix_micros reads the stored internal value), and the rows commit
+    through the manifest writer with a fresh v3 list doc. Migrating
+    the whole tree at once keeps every group's parquet schema
+    consistent. Returns the stats columns. Idempotent: v3 layouts pass
     through."""
     doc = _read_list(data_dir)
     if doc is not None and doc.get("version", 2) >= 3:
@@ -1352,7 +1393,14 @@ def _upgrade_legacy(spark: SparkSession, data_dir: str) -> list[str]:
         cols = list(doc["cols"])
     else:
         cols = [c[len("min_"):] for c in old.columns if c.startswith("min_")]
-    _rebuild_from_rows(spark, data_dir, old, cols)
+    if "file_bytes" not in old.columns:  # r9 manifests predate sizes
+        old = old.withColumn("file_bytes", F.lit(None).cast("long"))
+    # legacy docs recorded no types: read them off the stored min_<c>
+    stored = _py_field_types(old)
+    types = {c: stored[f"min_{c}"] for c in cols if f"min_{c}" in stored}
+    old = _epochize_stats(old, types)
+    rows = [r.asDict() for r in old.collect()]
+    _commit_manifest(data_dir, cols, old.schema, _by_group(rows), types=types)
     return cols
 
 
@@ -1365,10 +1413,16 @@ def append_zonemap(
     """Incremental manifest maintenance after an APPEND: stat only the
     files not yet covered (read directly by path — the existing
     files' rows are never rescanned) and rewrite ONLY the touched
-    partition groups' manifests (dynamic partition overwrite) plus
-    their manifest-list entries. Untouched groups are never read or
-    rewritten, so maintenance cost tracks the DELTA even on
-    million-file tables. Returns the number of NEW files statted.
+    partition groups' manifests plus their manifest-list entries.
+    The delta's stats scan is the only Spark work (collected once;
+    with AQE, a shuffle job and a result job); the rest is driver-side
+    metadata work: the touched groups' old rows come from the
+    parsed-manifest cache (usually warm — the planners read the same
+    groups), empty delta files are covered, the group summaries fold,
+    and the merged groups are written through the manifest writer,
+    the list doc last. Untouched groups are never read or rewritten,
+    so maintenance cost tracks the DELTA even on million-file tables.
+    Returns the number of NEW files statted.
 
     ``new_files``: when the appender knows its delta (a streaming
     sink's batch output, a lake commit's added files), pass it to skip
@@ -1379,7 +1433,7 @@ def append_zonemap(
     known_cols = _upgrade_legacy(spark, data_dir)
     if known_cols and list(cols) != known_cols:
         raise ValueError(f"manifest covers {known_cols}, asked to append {list(cols)}")
-    doc = _read_list(data_dir)
+    doc, epoch = _read_list_cached(data_dir)
     # cached docs are shared read-only objects: copy before updating
     # entries (only whole-entry replacement below, shallow is enough)
     groups: dict[str, dict] = dict(doc["groups"]) if doc else {}
@@ -1404,20 +1458,9 @@ def append_zonemap(
         ]
     else:
         suspect = list(by_tok)  # caller says these are the delta
-    zm = f"{data_dir.rstrip('/')}/{ZONEMAP_DIR}"
-    touched_known = [t for t in suspect if t in groups]
-    known: set[str] = set()
-    old_touched = None
-    if touched_known:
-        old_touched = (
-            spark.read.option("recursiveFileLookup", "true")
-            .parquet(*[f"{zm}/__g={t}" for t in touched_known])
-        )
-        # _unq: pre-fix manifests may hold URI-encoded paths
-        known = {
-            _unq(_bare(r["file"]))
-            for r in old_touched.select("file").collect()
-        }
+    old = _group_map(data_dir, [t for t in suspect if t in groups], epoch)
+    # _unq: pre-fix manifests may hold URI-encoded paths
+    known = {_unq(_bare(r["file"])) for rs in old.values() for r in rs}
     fresh_files = [
         p
         for t in suspect
@@ -1428,17 +1471,18 @@ def append_zonemap(
         return 0
     # basePath keeps hive partition columns resolvable when reading
     # explicit file paths, so partition columns remain valid stats_cols
-    df = spark.read.option("basePath", data_dir).parquet(*fresh_files)
-    types = dict((doc or {}).get("types") or _source_types(df, cols))
-    fresh = (
-        df.select(
-            _file_col().alias("file"),
-            F.col("_metadata.file_size").alias("__fsize"),
-            *_stats_select_cols(df, cols),
+    reader = spark.read.option("basePath", data_dir)
+    types = dict((doc or {}).get("types") or {})
+    if cols and all(c in types for c in cols):
+        # the stats columns' recorded source types ARE the read schema:
+        # passing it skips Spark's footer-inference job, which leaves
+        # the delta stats collect as the append's only Spark work
+        reader = reader.schema(
+            ", ".join(f"`{c.replace('`', '``')}` {types[c]}" for c in cols)
         )
-        .groupBy("file")
-        .agg(*_stat_aggs(cols, types))
-    )
+    df = reader.parquet(*fresh_files)
+    types = types or _source_types(df, cols)
+    fresh = _stats_frame(df, cols, types)
     bloom_doc = dict((doc or {}).get("bloom") or {})
     if bloom_doc:
         # fingerprint the DELTA files with the manifest's recorded
@@ -1503,35 +1547,19 @@ def append_zonemap(
         else:
             entries = int(cfg.get("entries", 0)) + n_new
         gs_doc[c] = {**cfg, "entries": entries}
-    fresh = _cover_empty_files(spark, data_dir, fresh, fresh_files)
-    fresh_g = _with_groups(fresh)
+    schema = fresh.schema
+    rows = _cover_empty_files(
+        data_dir, schema, [r.asDict() for r in fresh.collect()], fresh_files
+    )
     # merge back ONLY the old rows of groups that actually gained
-    # files — anything else would dynamic-overwrite (hence rewrite)
-    # untouched partitions' manifests
-    fresh_toks = {_token(_dirname(_bare(p))) for p in fresh_files}
-    if old_touched is not None:
-        if "file_bytes" not in old_touched.columns:  # r10 manifests
-            old_touched = old_touched.withColumn(
-                "file_bytes", F.lit(None).cast("long")
-            )
-        # pre-v3 manifests stored session-zoned timestamps natively:
-        # upgrade the touched groups' rows to epoch micros (lossless
-        # in-Spark conversion) before merging with the fresh longs
-        old_g = _with_groups(_epochize_stats(old_touched, types)).filter(
-            F.col("__g").isin(*fresh_toks)
-        )
-        # allowMissingColumns: a bloom column enabled after the old
-        # group was written (or vice versa) fills NULL bitsets, which
-        # the probe treats as 'no fingerprint: keep the file'
-        merged = old_g.unionByName(fresh_g, allowMissingColumns=True)
-    else:
-        merged = fresh_g
-    # localCheckpoint pins the touched groups' old rows in memory so
-    # the dynamic overwrite cannot clobber the frame mid-read
-    merged = merged.localCheckpoint()
-    _write_grouped(spark, data_dir, merged, dynamic=True)
-    for tok, entry in _group_summaries(merged, cols).items():
-        groups[tok] = entry
+    # files: anything else would rewrite untouched partitions'
+    # manifests. Old rows are the cache's shared dicts — read only.
+    touched = {
+        tok: old.get(tok, []) + fresh_rows
+        for tok, fresh_rows in _by_group(rows).items()
+    }
+    for tok, rs in touched.items():
+        groups[tok] = _group_entry(rs, cols)
     # histograms normally pass through UNCHANGED on append — they are
     # estimation metadata sized at build time, and recomputing them
     # every append would cost the full-table pass appends exist to
@@ -1552,23 +1580,14 @@ def append_zonemap(
             x is not None for x in counts
         ) else None  # pre-r13 list entries lack counts: keep stale, sound
         if built > 0 and n_live is not None and n_live > HIST_DRIFT * built:
-            full = spark.read.parquet(data_dir)
-            per_bins = {
+            refreshed = _hist_doc(spark.read.parquet(data_dir), {
                 c: int(h.get("bins", HIST_BINS)) for c, h in hist_doc.items()
-            }
-            refreshed: dict[str, dict] = {}
-            if len(set(per_bins.values())) == 1:
-                refreshed = _hist_doc(
-                    full, list(hist_doc), next(iter(per_bins.values())), types
-                )
-            else:
-                for c in hist_doc:
-                    refreshed.update(_hist_doc(full, [c], per_bins[c], types))
+            }, types)
             for c in refreshed:
                 refreshed[c]["n_rows_at_build"] = n_live
             hist_doc = refreshed or hist_doc
-    _write_list(
-        data_dir, cols, groups, types=types,
+    _commit_manifest(
+        data_dir, cols, schema, touched, groups, types=types,
         bloom=bloom_doc or None, hist=hist_doc or None,
         ndv=ndv_doc or None, group_stats=gs_doc or None,
     )
@@ -1672,19 +1691,6 @@ def _validate_group_stats_cols(
                 )
 
 
-def _gstat_aggs(cols: list[str], types: dict[str, str]) -> list[Column]:
-    """Per-slice stats aggregates — the file-level layout minus
-    file_bytes (slices have no size)."""
-    aggs = [F.count(F.lit(1)).alias("n_rows")]
-    for c in cols:
-        aggs.append(F.min(c).alias(f"min_{c}"))
-        aggs.append(F.max(c).alias(f"max_{c}"))
-        aggs.append(F.count(F.when(F.col(c).isNull(), 1)).alias(f"nulls_{c}"))
-        if _sum_col_ok(types.get(c)) or _sum_wide_dec(types.get(c)) is not None:
-            aggs.append(F.try_sum(F.col(c)).alias(f"sum_{c}"))
-    return aggs
-
-
 def _group_stats_frame(
     df: DataFrame,
     gcol: str,
@@ -1713,7 +1719,7 @@ def _group_stats_frame(
         *gv_cols,  # native: _GSTATS_TYPES render exactly
         *_stats_select_cols(df, cols),
     )
-    agged = src.groupBy("file", *gv_names).agg(*_gstat_aggs(cols, types))
+    agged = src.groupBy("file", *gv_names).agg(*_stat_aggs(cols, types, file_bytes=False))
     w = Window.partitionBy("file")
     return (
         agged.withColumn("__ng", F.count(F.lit(1)).over(w))
@@ -1797,52 +1803,47 @@ def _intersects(glo, ghi, lo, hi) -> bool:
     return True
 
 
-def _group_rows(
-    spark: SparkSession, data_dir: str, toks: list[str], epoch: tuple
-) -> list[dict]:
+def _group_rows(data_dir: str, toks: list[str], epoch: Any) -> list[dict]:
     """Per-file stats rows of the given partition groups, as plain
-    dicts, served from the cache while ``epoch`` (list mtime +
-    session timezone — collect renders timestamps session-locally)
-    matches. A cache miss reads ONLY the missed groups' manifests."""
-    out: list[dict] = []
-    missed = _cached_groups(data_dir, toks, epoch, out)
+    dicts (read them, never mutate — they are the cache's), served
+    from the parsed-manifest cache while ``epoch`` (the list doc's
+    commit token) matches. A cache miss reads ONLY the missed groups'
+    manifests, driver-side through :func:`_read_group`."""
+    return [r for rs in _group_map(data_dir, toks, epoch).values() for r in rs]
+
+
+def _group_map(data_dir: str, toks: list[str], epoch: Any) -> dict[str, list[dict]]:
+    """:func:`_group_rows` keyed by group token."""
+    out: dict[str, list[dict]] = {}
+
+    def cached(toks: list[str]) -> list[str]:
+        # fill ``out`` from the cache; return the tokens that missed
+        missed = []
+        for t in toks:
+            hit = _GROUP_CACHE.get((data_dir, t))
+            if hit is not None and hit[0] == epoch:
+                out[t] = hit[1]
+            else:
+                missed.append(t)
+        return missed
+
+    missed = cached(toks)
     if not missed:
         return out
     # one reader per table: concurrent planners after a commit wait
     # for the first read instead of each re-reading the same groups
     with _GROUP_LOCKS.setdefault(data_dir, threading.Lock()):
-        missed = _cached_groups(data_dir, missed, epoch, out)
+        missed = cached(missed)
         if not missed:
             return out
+        from quack_reduce_spark.lake import _fs_for
+
         IO_COUNTS["group_reads"] += 1
-        zmdir = f"{data_dir.rstrip('/')}/{ZONEMAP_DIR}"
-        zm = spark.read.option("recursiveFileLookup", "true").parquet(
-            *[f"{zmdir}/__g={t}" for t in missed]
-        )
-        tok_col, _ = _group_cols(F.col("file"))
-        rows = [r.asDict() for r in zm.withColumn("__tok", tok_col).collect()]
-        by_tok: dict[str, list[dict]] = {t: [] for t in missed}
-        for r in rows:
-            by_tok.setdefault(r.pop("__tok"), []).append(r)
-        for t, rs in by_tok.items():
-            _GROUP_CACHE[(data_dir, t)] = (epoch, rs)
-            out.extend(rs)
+        fs = _fs_for(data_dir)
+        for t in missed:
+            out[t] = _read_group(fs, _group_dir(data_dir, t))
+            _GROUP_CACHE[(data_dir, t)] = (epoch, out[t])
     return out
-
-
-def _cached_groups(
-    data_dir: str, toks: list[str], epoch: tuple, out: list[dict]
-) -> list[str]:
-    """Extend ``out`` with the cached rows of ``toks`` at ``epoch``;
-    return the tokens that missed."""
-    missed = []
-    for t in toks:
-        hit = _GROUP_CACHE.get((data_dir, t))
-        if hit is not None and hit[0] == epoch:
-            out.extend(hit[1])
-        else:
-            missed.append(t)
-    return missed
 
 
 def _any_in_interval(vals: Any, mn: Any, mx: Any) -> bool:
@@ -2039,7 +2040,7 @@ def prune_files_multi(
                 live.append(tok)
         if not live:
             return [], total
-        rows = _group_rows(spark, data_dir, live, (epoch, session_tz))
+        rows = _group_rows(data_dir, live, epoch)
     return [
         r for r in rows if _file_matches(r, constraints, bloom, bloom_memo)
     ], total
@@ -2056,7 +2057,6 @@ def manifest_stats(spark: SparkSession, data_dir: str) -> dict:
     manifest compare ``n_files`` against a live listing (the engine's
     pushdown does exactly that before trusting pruning)."""
     doc, epoch = _read_list_cached(data_dir)
-    session_tz = spark.conf.get("spark.sql.session.timeZone")
     types: dict[str, str] = {}
     if doc is None:
         rows = [r.asDict() for r in read_zonemap(spark, data_dir).collect()]
@@ -2064,9 +2064,7 @@ def manifest_stats(spark: SparkSession, data_dir: str) -> dict:
             c[len("min_"):] for c in (rows[0] if rows else {}) if c.startswith("min_")
         )
     else:
-        rows = _group_rows(
-            spark, data_dir, list(doc["groups"]), (epoch, session_tz)
-        )
+        rows = _group_rows(data_dir, list(doc["groups"]), epoch)
         cols = list(doc["cols"])
         types = doc.get("types") or {}
     sizes = [r.get("file_bytes") for r in rows]

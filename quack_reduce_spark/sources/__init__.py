@@ -11,6 +11,8 @@ its µs TIMESTAMP, so differential oracles see identical instants.
 
 from __future__ import annotations
 
+import os
+
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.utils import AnalysisException
@@ -36,20 +38,44 @@ def _nanos_columns(path: str) -> list[str]:
 #   overwrites are always picked up and every action computes from the
 #   parquet inputs as they are NOW; no data, no results, no plans are
 #   cached.
-# - the key includes the path's mtime: an overwrite that changes the
-#   schema recreates the table root and invalidates the entry.
-# - nanos-bearing tables memoize the RAW (longs) read schema plus the
-#   nanos column list, and a hit replays the exact legacy-conf dance
-#   (set at creation, restore after) + µs conversions; mergeSchema
-#   reads never memoize (schema-evolution dirs must see real footers).
-# value: (raw_read_schema, nanos_column_names)
-_SCHEMA_MEMO: dict[tuple[str, float], tuple] = {}
+# - the entry is valid while the path's SIGNATURE is unchanged: the
+#   root's mtime plus (name, mtime, size) of every first-level entry
+#   and of every entry inside a first-level directory. Replacing or
+#   rewriting a root file or a file in a hive partition dir
+#   (``part=1/x.parquet``) changes it and re-infers; a directory's own
+#   mtime only moves when entries come or go, so the file stats are
+#   what catch an in-place rewrite. Deeper nesting is covered only by
+#   its directories' mtimes.
+# - one entry per absolute path: a new signature REPLACES the old
+#   entry, so the memo is bounded by the number of distinct tables.
+# - nanos-bearing tables memoize the RAW (longs) read schema, whether
+#   the first read needed nanosAsLong, and the nanos column list; a
+#   hit replays the exact legacy-conf dance (set at creation, restore
+#   after) + µs conversions. The conf flag is kept apart from the
+#   column list: a first read that only succeeded through the
+#   AnalysisException fallback (pyarrow could not probe the path)
+#   converts no columns but still needed the conf. mergeSchema reads
+#   never memoize (schema-evolution dirs must see real footers).
+# value: (signature, raw_read_schema, needs_nanos_conf, nanos_column_names)
+_SCHEMA_MEMO: dict[str, tuple] = {}
 
 
-def _memo_key(path: str):
-    import os as _os
+def _memo_sig(path: str) -> tuple:
+    st = os.stat(path)
+    if not os.path.isdir(path):
+        return (st.st_mtime_ns, st.st_size)
+    entries = []
 
-    return (_os.path.abspath(path), _os.path.getmtime(path))
+    def scan(d: str, prefix: str, depth: int) -> None:
+        with os.scandir(d) as it:
+            for e in it:
+                est = e.stat()
+                entries.append((prefix + e.name, est.st_mtime_ns, est.st_size))
+                if depth and e.is_dir():
+                    scan(e.path, f"{prefix}{e.name}/", depth - 1)
+
+    scan(path, "", 1)
+    return (st.st_mtime_ns, tuple(sorted(entries)))
 
 
 def read_parquet_table(spark: SparkSession, path: str, merge_schema: bool = False) -> DataFrame:
@@ -72,16 +98,16 @@ def read_parquet_table(spark: SparkSession, path: str, merge_schema: bool = Fals
     # fast path: read with the memoized schema — skips the per-call
     # footer re-inference (the dominant component of the session
     # floor); file listing and data decoding stay per-call
-    key = None
+    key = sig = None
     if not merge_schema:
         try:
-            key = _memo_key(path)
+            key, sig = os.path.abspath(path), _memo_sig(path)
         except Exception:
             key = None  # can't stat (glob?) — legacy path, no memo
         hit = _SCHEMA_MEMO.get(key) if key is not None else None
-        if hit is not None:
-            schema, nanos = hit
-            if not nanos:
+        if hit is not None and hit[0] == sig:
+            _, schema, needs_conf, nanos = hit
+            if not needs_conf:
                 return spark.read.schema(schema).parquet(path)
             prior = spark.conf.get(_NANOS_CONF, None)
             try:
@@ -115,7 +141,8 @@ def read_parquet_table(spark: SparkSession, path: str, merge_schema: bool = Fals
             df = reader.parquet(path)
         raw_schema = df.schema  # BEFORE conversions — what a reader needs
         converted: list[str] = []
-        if spark.conf.get(_NANOS_CONF, "false") == "true":
+        needs_conf = spark.conf.get(_NANOS_CONF, "false") == "true"
+        if needs_conf:
             long_cols = {f.name for f in df.schema.fields if f.dataType.typeName() == "long"}
             try:
                 nanos = _nanos_columns(path)
@@ -126,7 +153,7 @@ def read_parquet_table(spark: SparkSession, path: str, merge_schema: bool = Fals
                     df = df.withColumn(name, F.timestamp_micros(F.expr(f"`{name}` div 1000")))
                     converted.append(name)
         if key is not None:
-            _SCHEMA_MEMO[key] = (raw_schema, converted)
+            _SCHEMA_MEMO[key] = (sig, raw_schema, needs_conf, converted)
         return df
     finally:
         if prior is None:

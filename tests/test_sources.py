@@ -176,3 +176,59 @@ def test_configure_s3a_builder_options():
     assert "DefaultAWSCredentialsProviderChain" in opts[
         "spark.hadoop.fs.s3a.aws.credentials.provider"
     ]
+
+
+def test_schema_memo_reinfers_rewritten_partition_file(spark, tmp_path):
+    # the memo key covers files inside first-level partition dirs: an
+    # in-place rewrite of part=1/x.parquet moves neither the root's nor
+    # part=1's mtime, yet must re-infer instead of serving the old schema
+    import os
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from quack_reduce_spark import sources
+
+    root = tmp_path / "memo"
+    (root / "part=1").mkdir(parents=True)
+    f = str(root / "part=1" / "x.parquet")
+    pq.write_table(pa.table({"a": [1, 2]}), f)
+    assert read_parquet_table(spark, str(root)).columns == ["a", "part"]
+    pq.write_table(pa.table({"a": [3], "b": ["new"]}), f)
+    df = read_parquet_table(spark, str(root))
+    assert df.columns == ["a", "b", "part"]
+    assert [tuple(r) for r in df.collect()] == [(3, "new", 1)]
+    # one entry per path, holding the current signature
+    key = os.path.abspath(str(root))
+    assert sum(k == key for k in sources._SCHEMA_MEMO) == 1
+    assert sources._SCHEMA_MEMO[key][0] == sources._memo_sig(str(root))
+
+
+def test_nanos_fallback_read_replays_conf_on_memo_hit(spark, tmp_path, monkeypatch):
+    # a nanos table whose pyarrow probe fails only reads through the
+    # AnalysisException fallback, which sets nanosAsLong; the memo must
+    # replay that conf on a hit, or the second read of the same path
+    # fails or decodes differently
+    import pandas as pd
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from quack_reduce_spark import sources
+
+    p = str(tmp_path / "nanos_fb.parquet")
+    ts = pd.to_datetime(["2024-01-01 00:00:00.123456789"])
+    pq.write_table(
+        pa.table({"id": [1], "ts": pa.array(ts, type=pa.timestamp("ns"))}),
+        p,
+        coerce_timestamps=None,
+    )
+
+    def no_probe(path):
+        raise OSError("probe unavailable")
+
+    monkeypatch.setattr(sources, "_nanos_columns", no_probe)
+    first = read_parquet_table(spark, p)
+    assert sources._SCHEMA_MEMO[str(tmp_path / "nanos_fb.parquet")][2] is True
+    second = read_parquet_table(spark, p)
+    assert second.schema == first.schema
+    assert second.collect() == first.collect()
