@@ -21,6 +21,7 @@ the cap also bounds compute, not just the payload.
 
 from __future__ import annotations
 
+import logging
 import os
 import time
 import uuid
@@ -31,8 +32,27 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
 from quack_reduce_spark import session as _session
+from quack_reduce_spark.plans import (
+    PlanContext,
+    agg_pushdown,
+    mv_rewrite,
+    star_pushdown,
+    topk_pushdown,
+    zonemap_pushdown,
+)
 
 DEFAULT_LIMIT = 20  # reference default row cap, app.py:9
+
+_log = logging.getLogger(__name__)
+
+# the metadata rules, tried in order until one answers the query
+RULES = (
+    ("agg_pushdown", agg_pushdown.plan),
+    ("star_pushdown", star_pushdown.plan),
+    ("mv_rewrite", mv_rewrite.plan),
+    ("topk_pushdown", topk_pushdown.plan),
+    ("zonemap_pushdown", zonemap_pushdown.plan),
+)
 
 
 @dataclass
@@ -74,11 +94,12 @@ class Engine:
         # (or any catalog mutation) orphans all earlier entries — the
         # same query text no longer means the same plan
         self._view_epoch = 0
-        self.last_zonemap_report: dict[str, dict] = {}
-        self.last_agg_plan: dict | None = None
-        self.last_star_plan: dict | None = None
-        self.last_mv_rewrite: dict | None = None
-        self.last_result_cache: dict | None = None
+        # result-cache hit/miss counts and cached bytes, updated under
+        # _results_lock
+        self.cache_counts = {"hits": 0, "misses": 0, "bytes": 0}
+        # the calling thread's telemetry behind the last_* properties:
+        # a sql_many worker never reads another query's report
+        self._last = threading.local()
         # guards every temp-view binding: temp views are
         # session-global, so a concurrent sql_many worker must not
         # plan against another query's pruned rebinding, and a
@@ -88,6 +109,38 @@ class Engine:
         self._reg_counter = 0  # register epoch, bumped under _plan_lock
         if self.spark is None:
             self.spark = _session.get_spark()
+
+    # -- the calling thread's telemetry of its last call ---------------
+
+    @property
+    def last_zonemap_report(self) -> dict[str, dict]:
+        """Per-table report of this thread's last planned ``sql`` /
+        ``df`` / ``explain`` ({} when no rule fired)."""
+        return getattr(self._last, "zonemap_report", {})
+
+    @property
+    def last_agg_plan(self) -> dict | None:
+        return _fired(self.last_zonemap_report, "agg_pushdown")
+
+    @property
+    def last_star_plan(self) -> dict | None:
+        return _fired(self.last_zonemap_report, "star_pushdown")
+
+    @property
+    def last_mv_rewrite(self) -> dict | None:
+        return _fired(self.last_zonemap_report, "mv_rewrite")
+
+    @property
+    def last_result_cache(self) -> dict | None:
+        return getattr(self._last, "result_cache", None)
+
+    @property
+    def last_count_plan(self) -> dict | None:
+        return getattr(self._last, "count_plan", None)
+
+    @property
+    def last_join_plan(self) -> dict | None:
+        return getattr(self._last, "join_plan", None)
 
     # -- table registry (path-addressed lake, no persistent catalog) ----
 
@@ -274,11 +327,8 @@ class Engine:
         whose file-pruned side is estimated small gets a broadcast
         hint."""
         self._refresh_versioned_views()
-        return self._sql_planned(query)
-
-    def _sql_planned(self, query: str) -> DataFrame:
-        df, report = self._sql_planned_report(query, {})
-        self.last_zonemap_report = report
+        df, report, _rules = self._sql_planned_report(query, {})
+        self._last.zonemap_report = report
         if _is_command(df):
             # DDL through df() changes what later query text resolves
             # to — same cache-epoch discipline as sql()
@@ -287,54 +337,40 @@ class Engine:
 
     def _sql_planned_report(
         self, query: str, snap_cache: dict | None = None
-    ) -> tuple[DataFrame, dict]:
-        """``spark.sql`` + automatic zone-map file skipping + estimate-
-        driven broadcast hints. Returns ``(df, telemetry)`` — callers
-        needing the report read the RETURN VALUE (the shared
-        ``last_zonemap_report`` attribute is best-effort under
-        concurrency; results themselves are lock-protected).
-        ``snap_cache`` is the per-CALL snapshot memo shared with the
-        result-cache probe so MV freshness checks never repeat a
+    ) -> tuple[DataFrame, dict, dict[str, str]]:
+        """``spark.sql`` plus the metadata rules. Returns ``(df, report,
+        rules)``: ``report`` is the answering rule's per-table telemetry
+        (the envelope's ``metadata["zonemap"]``; {} when no rule fired)
+        and ``rules`` maps each rule tried to ``"fired"``,
+        ``"declined"`` or ``"raised:<ExceptionClass>"`` ({} when none
+        ran). ``snap_cache`` is the per-CALL snapshot memo shared with
+        the result-cache probe, so MV freshness checks never repeat a
         table's directory walk within one query.
 
-        The query is PLANNED once against the registered views;
-        FileSourceScanExec dataFilters over zone-mapped tables become
-        closed-interval bounds / IN-value sets, the manifests are
-        consulted (parsed-manifest cache: zero I/O on an unchanged
-        table), and when files can be skipped the affected views are
-        REBOUND to the surviving file set and the query re-planned
-        against them. The original view DataFrames are captured BEFORE
-        the rebind and restored in a finally with a pure
-        createOrReplaceTempView — no I/O can fail the restore, so a
-        crash mid-rebind can never leave a session view bound to a
-        pruned subset. The query's own WHERE still executes, so
-        pruning is sound by construction: any extraction miss only
-        means fewer files skipped.
-
-        Broadcast hints (the CBO loop closed on the SQL surface): a
-        zone-mapped table scanned under a SortMergeJoin whose
-        SURVIVING file bytes — the same units Spark's static size
-        stats compare against the broadcast threshold — fit under
-        ``BROADCAST_THRESHOLD`` gets rebound with ``.hint("broadcast")``,
-        fixing the filtered-dim case where static stats see the FULL
-        file size (Filter passes size stats through) and pick a
-        shuffle join for a few surviving rows.
+        With no zone-mapped table and no MV registered the query is
+        plain ``spark.sql``. Otherwise it is analyzed once against the
+        registered views, and the rules of ``RULES`` run in order over
+        one :class:`plans.PlanContext`; the first that returns a frame
+        answers the query. A rule that declines or raises falls through
+        to the next, and when none fires the analyzed frame runs as is.
+        Every rule is an accelerator, never a semantics change, so a
+        fallback costs speed, not correctness; a raise is recorded by
+        exception class, never dropped.
 
         Locking: temp views are session-global, so a query analyzed
         while another query has its views swapped would bind that
-        query's pruned file set. ``_plan_lock`` is therefore held in
-        exactly two windows: (1) the first ``spark.sql(query)``
-        analysis, and (2) the rebind — capture the original views,
-        swap in the pruned frames, re-plan, restore. Everything
-        between them runs unlocked and concurrently across a
-        ``sql_many`` burst: the agg / star / MV / top-k planners, the
-        manifest pruning and the building of the pruned frames read
-        only the analyzed ``df`` and the manifests, never a view by
-        name. ``register`` binds under the same lock, and every holder
-        restores the original views before releasing, so views are
+        query's pruned file set. ``_plan_lock`` is held in exactly two
+        windows: the first analysis and ``rebind``. The rules run
+        unlocked and concurrently across a ``sql_many`` burst: they
+        read the analyzed frame and the manifests, never a view by
+        name. ``rebind(pruned_views)`` captures the views it replaces,
+        binds the pruned frames (built by the rule, unlocked),
+        re-plans the query and restores the captured views in a
+        ``finally`` with a pure ``createOrReplaceTempView`` — no I/O
+        can fail the restore, so a raise mid-rebind never leaves a view
+        bound to a pruned subset. ``register`` binds under the same
+        lock, and every holder restores before releasing, so views are
         always in their registered state at lock acquisition."""
-        from quack_reduce_spark.plans import zonemap_pushdown as _zp
-
         if self._mvs:
             # pending lazy MV refreshes (post-maintenance marks) run
             # here, OUTSIDE the plan lock — refresh re-enters
@@ -346,412 +382,47 @@ class Engine:
             if meta.get("zonemap_cols")
         }
         if not zm_tables and not self._mvs:
-            return self.spark.sql(query), {}
+            return self.spark.sql(query), {}, {}
         with self._plan_lock:
             df = self.spark.sql(query)  # analyzed now: binds the views
-        # scalar-aggregate fast path: COUNT/MIN/MAX over one
-        # zone-mapped table answers from the manifest + an O(1)
-        # boundary-file residual (zero files for contained ranges)
-        agg = None
-        if zm_tables:
-            try:
-                agg = self._try_agg_pushdown(df, zm_tables)
-            except Exception:
-                agg = None  # exactness gate failed somewhere: run plain
-        self.last_agg_plan = agg[1] if agg is not None else None
-        # reset here so a query answered by the AGG branch (which
-        # returns before the star attempt) never leaves a stale
-        # star report from an earlier query
-        self.last_star_plan = None
-        if agg is not None:
-            frame, tele = agg
-            # files_read/files_total keep the classic report
-            # contract: "files actually read / files on the
-            # table" — the agg path reads only boundary files
-            return frame, {
-                tele["table"]: {
-                    "files_read": tele["files_scanned"],
-                    "files_total": tele["files_total"],
-                    "agg_pushdown": tele,
-                }
-            }
-        # star-join grouped pushdown (r16): fact JOIN small dim,
-        # GROUP BY dim attribute — per-(file, join-key) slice
-        # partials fold to a bounded key->partials table, the dim
-        # side evaluates once (the DPP subquery), and the join +
-        # aggregate happen driver-side at metadata cost with ZERO
-        # fact files scanned (plans/star_pushdown.py's gates)
-        star = None
-        if zm_tables:
-            try:
-                star = self._try_star_pushdown(df, zm_tables)
-            except Exception:
-                star = None  # exactness gate failed: run plain
-        self.last_star_plan = star[1] if star is not None else None
-        if star is not None:
-            frame, tele = star
-            return frame, {
-                tele["table"]: {
-                    "files_read": 0,
-                    "files_total": tele["files_total"],
-                    "star_pushdown": tele,
-                }
-            }
-        # materialized-view rewrite: an aggregate the manifest
-        # could not answer (un-maintained appends, avg over a
-        # multi-valued layout, no manifest at all) re-plans over a
-        # registered FRESH MV's partials instead of the base table
-        mv = None
-        if self._mvs:
-            from quack_reduce_spark.plans import mv_rewrite as _mvr
 
-            try:
-                mv = _mvr.try_rewrite(
-                    self.spark, df, self._all_paths(), self._mvs,
-                    snap_cache,
-                )
-            except Exception:
-                mv = None  # rewrite is best-effort: run plain
-        self.last_mv_rewrite = mv[1] if mv is not None else None
-        if mv is not None:
-            frame, tele = mv
-            return frame, {tele["table"]: {"mv_rewrite": tele}}
-        if not zm_tables:
-            return df, {}
-        try:
-            cons = _zp.scan_constraints(
-                df, {n: p for n, (p, _) in zm_tables.items()}
-            )
-        except Exception:
-            return df, {}  # plan-shape drift: pushdown is best-effort
-        # top-k file pushdown (raw-column ORDER BY col LIMIT k —
-        # the scan-shaped sibling of the reference's flagship
-        # grouped top-k, whose Sort/Limit-over-Aggregate form the
-        # agg pushdown above already answers): when the WHOLE plan
-        # is Limit-Sort-[Filter]-Relation over one zone-mapped
-        # table, the manifest's min/max bound which files can
-        # contribute to the top k — see plans/topk_pushdown.py for
-        # the static-bound argument. The extraction shape
-        # guarantees a single scan and no joins, so it composes
-        # with (and subsumes) the generic WHERE pruning.
-        topk = None
-        try:
-            from quack_reduce_spark.plans import topk_pushdown as _tk
+        def rebind(pruned_views: dict[str, DataFrame]) -> DataFrame:
+            with self._plan_lock:
+                originals = {n: self.spark.table(n) for n in pruned_views}
+                try:
+                    for name, pruned in pruned_views.items():
+                        pruned.createOrReplaceTempView(name)
+                    return self.spark.sql(query)  # analyzed now: binds pruned
+                finally:
+                    for name, odf in originals.items():
+                        odf.createOrReplaceTempView(name)
 
-            topk = _tk.extract_topk(
-                df, {n: p for n, (p, _) in zm_tables.items()}
-            )
-        except Exception:
-            topk = None
-        rebinds: dict[str, tuple[list[str], int, dict]] = {}
-        dpp_applied: dict[str, dict] = {}
-        topk_applied: dict[str, dict] = {}
-        try:
-            # dynamic file pruning from join dimensions: a star query
-            # filtering only the dim side derives the surviving join-
-            # key set (bounded values or envelope) from the dim
-            # subplan and intersects it into the fact scan's manifest
-            # constraints — fact files whose key range cannot meet any
-            # surviving dim key are skipped even though the query has
-            # no fact predicate at all (see zonemap_pushdown's DPP
-            # section for the soundness gates)
-            dpp = _zp.join_dim_constraints(
-                df,
-                {n: p for n, (p, _) in zm_tables.items()},
-                {n: c for n, (_, c) in zm_tables.items()},
-            )
-            for name, entry in dpp.items():
-                scans = cons.get(name)
-                if not scans or len(scans) != 1:
-                    continue  # one logical relation must be one scan
-                for col, (constraint, n_keys) in entry["cols"].items():
-                    _zp.merge_dim_constraint(scans, col, constraint)
-                    dpp_applied.setdefault(name, {})[col] = n_keys
-            for name, scans in cons.items():
-                path, cols = zm_tables[name]
-                got = _zp.plan_pruned_files(self.spark, path, cols, scans)
-                if got is not None:
-                    rebinds[name] = got
-            if topk is not None and topk["table"] in zm_tables:
-                from quack_reduce_spark.plans import topk_pushdown as _tk
-
-                tname = topk["table"]
-                tpath, tcols = zm_tables[tname]
-                tk_got = _tk.plan_topk_files(self.spark, tpath, tcols, topk)
-                if tk_got is not None:
-                    files, total, stats, tk_tele = tk_got
-                    # the bound's survivor set already re-applies the
-                    # exact WHERE classification, so it is a subset of
-                    # (and replaces) the generic conjunct pruning
-                    rebinds[tname] = (files, total, stats)
-                    topk_applied[tname] = tk_tele
-            smj_tables = _zp.join_scan_tables(
-                df, {n: p for n, (p, _) in zm_tables.items()}
-            )
-        except Exception:
-            return df, {}  # manifest/bridge failure: run unpruned
-        hints = {
-            name
-            for name in rebinds
-            if name in smj_tables
-            and rebinds[name][2].get("est_bytes") is not None
-            and rebinds[name][2]["est_bytes"] <= self.BROADCAST_THRESHOLD
-        }
-        # Pre-shuffle SEMIJOIN row filter (the runtime-filter idea,
-        # exact instead of Bloom): when DPP derived a bounded VALUE SET
-        # of surviving join keys and the fact scan feeds a SHUFFLED
-        # join, the rebound view additionally filters ROWS by that key
-        # set — rows that provably cannot join never enter the
-        # exchange, which is most of the shuffle on a selective star.
-        # This fires even when no FILE can be skipped (keys spread
-        # across every file — the case pruning can't help); it is
-        # exact (keys are the dim side's full evaluation, the join
-        # re-checks equality), so results are row-identical. Value
-        # sets are <= DPP_MAX_KEYS, so the predicate compiles to an
-        # InSet (binary search per row, JVM-side).
-        row_filters: dict[str, dict] = {}
-        for name in dpp_applied:
-            if name not in smj_tables:
-                continue  # broadcast join: the fact never shuffles
-            colmap = {
-                col: constraint[2]
-                for col, (constraint, n_keys) in dpp[name]["cols"].items()
-                if constraint[2] is not None and n_keys is not None
-            }
-            if colmap:
-                row_filters[name] = colmap
-        targets: dict[str, tuple] = dict(rebinds)
-        for name in row_filters:
-            # no file was skippable, but the row filter still pays:
-            # rebind the FULL file set with the filter on top
-            targets.setdefault(name, (None, None, None))
-        if not targets:
-            return df, {}
-        # the pruned frames read files, never views: built unlocked
-        row_applied: dict[str, dict] = {}
-        pruned_views: dict[str, DataFrame] = {}
-        try:
-            for name, (files, _total, _stats) in targets.items():
-                path, _ = zm_tables[name]
-                if files is None:
-                    pruned = self.spark.read.parquet(path)
-                elif files:
-                    pruned = self.spark.read.option("basePath", path).parquet(*files)
-                else:
-                    pruned = self.spark.read.parquet(path).where(F.lit(False))
-                if name in row_filters:
-                    got = self._dpp_row_predicate(pruned, row_filters[name])
-                    if got is not None:
-                        pred, applied = got
-                        pruned = pruned.where(pred)
-                        row_applied[name] = applied
-                if name in hints:
-                    pruned = pruned.hint("broadcast")
-                pruned_views[name] = pruned
-        except Exception:
-            return df, {}  # fall back to the unpruned plan
-        with self._plan_lock:
-            # capture the CURRENT (original) view frames — restoring
-            # them is a pure re-registration, no file I/O to fail
-            originals = {n: self.spark.table(n) for n in targets}
-            planned = None
-            try:
-                for name, pruned in pruned_views.items():
-                    pruned.createOrReplaceTempView(name)
-                planned = self.spark.sql(query)  # analyzed now: binds pruned
-            except Exception:
-                planned = None  # fall back to the unpruned plan
-            finally:
-                for name, odf in originals.items():
-                    odf.createOrReplaceTempView(name)
-        if planned is None:
-            return df, {}
-        report = {}
-        for name, entry in targets.items():
-            if name in rebinds:
-                files, total, stats = rebinds[name]
-                report[name] = {
-                    "files_read": len(files),
-                    "files_total": total,
-                    "columns": zm_tables[name][1],
-                    "est_rows": stats["est_rows"],
-                    "est_bytes": stats["est_bytes"],
-                    "broadcast_hint": name in hints,
-                }
-            else:
-                report[name] = {"columns": zm_tables[name][1]}
-            if name in dpp_applied:
-                report[name]["dpp"] = dpp_applied[name]
-            if name in row_applied:
-                report[name]["dpp_row_filter"] = row_applied[name]
-            if name in topk_applied:
-                report[name]["topk"] = topk_applied[name]
-        return planned, report
-
-    @staticmethod
-    def _dpp_row_predicate(pruned: DataFrame, colmap: dict) -> tuple | None:
-        """(predicate Column, {col: n_keys}) filtering rows to the DPP
-        key sets, or None when no column's type filters soundly.
-        Session-zoned timestamp keys are epoch micros (the collection
-        domain) and compare via unix_micros — zone-free; NTZ columns
-        are SKIPPED (a naive-datetime literal renders through the
-        driver-OS zone, which off-UTC could drop matching rows — file
-        pruning still applies to them, driver-side comparisons are
-        exact there)."""
-        from quack_reduce_spark.operators import zonemaps as _zm
-
-        by_type = _zm._py_field_types(pruned)
-        pred = None
-        applied: dict[str, int] = {}
-        for col, vals in colmap.items():
-            t = by_type.get(col)
-            dec_s = _zm._unscaled_decimal(t)
-            if t == "timestamp":
-                cond = F.unix_micros(F.col(col)).isin([int(v) for v in vals])
-            elif dec_s is not None:
-                # DPP decimal keys arrive in unscaled-int space
-                cond = _zm._unscaled_col(col, dec_s).isin(
-                    [int(v) for v in vals]
-                )
-            elif t in (None, "timestamp_ntz") or t.startswith("decimal"):
-                continue
-            else:
-                cond = F.col(col).isin(list(vals))
-            pred = cond if pred is None else (pred & cond)
-            applied[col] = len(vals)
-        if pred is None:
-            return None
-        return pred, applied
-
-    def _try_agg_pushdown(
-        self, df: DataFrame, zm_tables: dict[str, tuple[str, list[str]]]
-    ) -> tuple[DataFrame, dict] | None:
-        """Metadata aggregate pushdown for the SQL surface: when the
-        planned query is EXACTLY a global COUNT(*)/COUNT(col)/MIN(col)/
-        MAX(col)/SUM(col)/AVG(col) over Filter/Project chains on one
-        fresh-manifest
-        zone-mapped table (plans/agg_pushdown.py's exactness gates),
-        return ``(one-row frame, telemetry)`` that answers from the
-        manifest's per-file stats plus a residual aggregate over only
-        the BOUNDARY files — the reference dashboard's per-widget
-        ``SELECT COUNT(*) .. WHERE range`` (dashboard.py:37-39) reads
-        O(1) files on a clustered layout and ZERO when the range
-        contains every surviving file. None -> caller runs the plain
-        plan (this path is an accelerator, never a semantics change).
-        """
-        from quack_reduce_spark.operators import zonemaps as _zm
-        from quack_reduce_spark.plans import agg_pushdown as _ap
-        from quack_reduce_spark.plans import zonemap_pushdown as _zp
-
-        paths = {n: p for n, (p, _) in zm_tables.items()}
-        info = _ap.extract_scalar_agg(df, paths) or _ap.extract_grouped_agg(
-            df, paths
+        ctx = PlanContext(
+            spark=self.spark,
+            query=query,
+            df=df,
+            zm_tables=zm_tables,
+            paths={n: p for n, (p, _) in zm_tables.items()},
+            mvs=self._mvs,
+            all_paths=self._all_paths(),
+            snap_cache=snap_cache,
+            rebind=rebind,
         )
-        if info is None:
-            return None
-        path, zcols = zm_tables[info["table"]]
-        zset = set(zcols)
-        if any(
-            c is not None and c not in zset
-            for k, c in info["aggs"]
-            if k != "key"  # keys check via their SOURCE column below
-        ):
-            # MIN/MAX/COUNT/SUM/AVG/COUNT-DISTINCT(col) need stats
-            return None
-        if any(g["src"] not in zset for g in info["groups"]):
-            # every grouping key's SOURCE column needs stats for the
-            # per-file single-valuedness classification (a key may be
-            # grouped on without being selected, and derived keys pin
-            # through their source column's endpoints)
-            return None
-        # closed-widened constraints for the pruned-in SUPERSET; the
-        # strict/exact semantics are re-applied by the per-file
-        # classification and the residual predicate
-        cons: dict[str, tuple] = {}
-        for col, op, v in info["conjuncts"]:
-            if op in ("ge", "gt"):
-                c = (v, None, None, None)
-            elif op in ("le", "lt"):
-                c = (None, v, None, None)
-            elif op == "eq":
-                c = (None, None, frozenset([v]), None)
-            elif op == "in":
-                c = (None, None, v, None)
-            elif op == "isnull":
-                c = (None, None, None, "null")
-            else:
-                c = (None, None, None, "notnull")
-            prev = cons.get(col)
-            cons[col] = _zp._and_constraints(prev, c) if prev else c
-        rows, total = _zm.prune_files_multi(self.spark, path, cons)
-        if total != len(_zm._data_files(path)):
-            return None  # un-maintained append: metadata can't answer
-        # the builders finish the frame themselves: HAVING + the
-        # peeled ORDER BY / LIMIT re-apply over the full aggregate-
-        # output list before the visible projection
-        # per-file PER-GROUP partials (written for designated low-NDV
-        # columns) let both builders answer UNCLUSTERED layouts from
-        # metadata: grouped queries need the column among the grouping
-        # keys' sources; scalar queries profit when it carries a
-        # conjunct or COUNT(DISTINCT) (slice-tight classification).
-        # Slice rows are epoch-cached: zero I/O on an unchanged table
-        # after the first read.
-        group_stats = None
-        gs_cfg = _zm.group_stats_config(path)
-        if gs_cfg:
-            if info["groups"]:
-                want = {g["src"] for g in info["groups"]}
-            else:
-                want = {c for c, _o, _v in info["conjuncts"]} | {
-                    c for k, c in info["aggs"] if k == "count_distinct"
-                }
-            # config keys may be COMPOSITE ("a,b" — r15): rank by how
-            # many wanted columns the key pins directly, then by the
-            # fewest extraneous components (each extra component
-            # multiplies the slice count without pinning anything the
-            # query needs)
-            gcol, best_rank = None, (0, 0)
-            for key in gs_cfg:
-                comps = set(_zm._gs_components(key))
-                ov = len(comps & want)
-                rank = (ov, -(len(comps) - ov))
-                if ov > 0 and rank > best_rank:
-                    best_rank, gcol = rank, key
-            if gcol is not None:
-                by_file = _zm.group_stats_rows(self.spark, path, gcol)
-                if by_file is not None:
-                    group_stats = (gcol, by_file)
-        if info["groups"]:
-            return _ap.build_group_agg_frame(
-                self.spark, path, info, rows, total, group_stats
-            )
-        return _ap.build_agg_frame(
-            self.spark, path, info, rows, total, group_stats
-        )
-
-    def _try_star_pushdown(
-        self, df: DataFrame, zm_tables: dict[str, tuple[str, list[str]]]
-    ) -> tuple[DataFrame, dict] | None:
-        """Star-join grouped aggregate pushdown: when the planned
-        query is EXACTLY ``fact INNER JOIN dim ON one equi key, GROUP
-        BY bare dim attributes, COUNT/SUM/MIN/MAX/AVG over bare fact
-        columns`` with every fact conjunct exactly understood
-        (plans/star_pushdown.py's gates), answer it from the fact
-        manifest's per-(file, join-key) slice partials merged
-        driver-side with the evaluated dim rows — zero fact files
-        scanned. None -> the caller runs the plain plan (accelerator,
-        never a semantics change)."""
-        from quack_reduce_spark.plans import star_pushdown as _sp
-
-        paths = {n: p for n, (p, _) in zm_tables.items()}
-        for info in _sp.extract_star_group(df, paths):
-            if info["table"] not in zm_tables:
+        rules: dict[str, str] = {}
+        for name, rule in RULES:
+            try:
+                got = rule(ctx)
+            except Exception as e:
+                # a rule is an accelerator: its failure must not fail
+                # the query, but it is a bug or a race worth seeing
+                _log.warning("rule %s raised; trying the next", name, exc_info=True)
+                rules[name] = f"raised:{type(e).__name__}"
                 continue
-            path, zcols = zm_tables[info["table"]]
-            got = _sp.build_star_frame(self.spark, df, path, zcols, info)
             if got is not None:
-                return got
-        return None
+                rules[name] = "fired"
+                return got[0], got[1], rules
+            rules[name] = "declined"
+        return df, {}, rules
 
     def table_stats(self, name: str) -> dict:
         """ANALYZE-style statistics for a registered zone-mapped table,
@@ -874,7 +545,7 @@ class Engine:
                     )
                 else:
                     pred = pred & F.col(c).isin(list(vals))
-            self.last_count_plan = {"source": "scan"}
+            self._last.count_plan = {"source": "scan"}
             return df.where(pred).count()
 
         if not meta.get("zonemap_cols"):
@@ -943,7 +614,7 @@ class Engine:
                 if hi is not None:
                     pred = pred & (target <= F.lit(hi))
             scanned = df.where(pred).count()
-        self.last_count_plan = {
+        self._last.count_plan = {
             "source": "metadata+residual",
             "files_total": total,
             "files_pruned_in": len(rows),
@@ -960,14 +631,14 @@ class Engine:
         (check pushed filters, pruned ReadSchema, broadcast joins; see
         docs/PLANS.md). ``mode``: simple | extended | formatted | cost.
         """
-        df = self._sql_planned(query)
+        df = self.df(query)
         return df._sc._jvm.PythonSQLUtils.explainString(  # type: ignore[attr-defined]
             df._jdf.queryExecution(), mode
         )
 
     # -- sketch-driven join planning ------------------------------------
 
-    BROADCAST_THRESHOLD = 10 * 1024 * 1024  # Spark's own default (10 MB)
+    BROADCAST_THRESHOLD = zonemap_pushdown.BROADCAST_THRESHOLD
 
     def explain_join(
         self,
@@ -1059,7 +730,6 @@ class Engine:
             row count is refused (appends degrade estimates, never
             correctness)."""
             from quack_reduce_spark.operators import zonemaps as _zm
-            from quack_reduce_spark.plans import zonemap_pushdown as _zp
 
             zm_tables = {
                 nm: meta.get("resolved", self.tables[nm])
@@ -1071,10 +741,10 @@ class Engine:
             try:
                 opt = df._jdf.queryExecution().optimizedPlan()
                 allowed = {"Filter", "Project", "LogicalRelation"}
-                for node in _zp._iter_nodes(opt):
+                for node in zonemap_pushdown._iter_nodes(opt):
                     if node.getClass().getSimpleName() not in allowed:
                         return None  # joins/aggs: not a plain slice
-                cons = _zp.scan_constraints(df, zm_tables)
+                cons = zonemap_pushdown.scan_constraints(df, zm_tables)
             except Exception:
                 return None
             if len(cons) != 1:
@@ -1210,7 +880,7 @@ class Engine:
             "strategy": strategy,
             "broadcast_threshold_bytes": broadcast_threshold_bytes,
         }
-        self.last_join_plan = report
+        self._last.join_plan = report
         return report
 
     # Runtime-filter gates: inject a Bloom pre-filter only when the
@@ -1342,8 +1012,8 @@ class Engine:
                             self._results[cache_key] = hit
                         # counted under the lock: sql_many workers
                         # would otherwise lose increments
-                        RESULT_CACHE_COUNTS["hits"] += 1
-                    self.last_result_cache = {"hit": True}
+                        self.cache_counts["hits"] += 1
+                    self._last.result_cache = {"hit": True}
                     self._was_warm = True
                     return QueryResult(
                         records=_copy.deepcopy(hit[2]),
@@ -1367,8 +1037,8 @@ class Engine:
         # the report comes back WITH the frame (not via the shared
         # attribute) so a concurrent sql_many burst can't cross-wire
         # one query's pruning telemetry into another's envelope
-        df, zm_report = self._sql_planned_report(query, snap_cache)
-        self.last_zonemap_report = zm_report
+        df, zm_report, rules = self._sql_planned_report(query, snap_cache)
+        self._last.zonemap_report = zm_report
         if _is_command(df):
             # a DDL/DML command (CREATE VIEW / DROP / ...) through the
             # SQL surface changes what later query text resolves to:
@@ -1395,7 +1065,7 @@ class Engine:
             token = tuple(pre_tokens[n][0] for n in names)
             stored = True
             with self._results_lock:
-                RESULT_CACHE_COUNTS["misses"] += 1
+                self.cache_counts["misses"] += 1
                 prev = self._results.pop(cache_key, None)
                 if prev is not None:
                     self._results_bytes -= prev[3]
@@ -1412,8 +1082,8 @@ class Engine:
                 ):
                     oldest = next(iter(self._results))
                     self._results_bytes -= self._results.pop(oldest)[3]
-                RESULT_CACHE_COUNTS["bytes"] = self._results_bytes
-        self.last_result_cache = {
+                self.cache_counts["bytes"] = self._results_bytes
+        self._last.result_cache = {
             "hit": False, "stored": stored, "bytes": nbytes,
             "cache_bytes": self._results_bytes,
         }
@@ -1426,6 +1096,8 @@ class Engine:
         }
         if zm_report:
             metadata["zonemap"] = zm_report
+        if rules:
+            metadata["rules"] = rules
         if self.result_cache:
             metadata["result_cache"] = {"hit": False, "stored": stored}
         self._was_warm = True
@@ -1457,15 +1129,13 @@ class Engine:
         fresh."""
         import json as _json
 
-        from quack_reduce_spark.plans import mv_rewrite as _mvr
-
         out = []
         for name in sorted(names):
             if name not in self.tables:
                 return None
             meta = self._table_meta.get(name, {})
             path = meta.get("resolved", self.tables[name])
-            s = _mvr.source_snapshot(path, snap_cache)
+            s = mv_rewrite.source_snapshot(path, snap_cache)
             if s is None:
                 return None
             out.append((name, meta.get("epoch"), _json.dumps(s)))
@@ -2365,11 +2035,9 @@ class Engine:
         grouped aggregate of the source (one shuffle at build), and
         rewrites read only the MV.
         """
-        from quack_reduce_spark.plans import mv_rewrite as _mvr
-
         with self._plan_lock:
             df = self.spark.sql(query)
-            spec = _mvr.mv_spec(df, self._all_paths())
+            spec = mv_rewrite.mv_spec(df, self._all_paths())
             if spec is None:
                 raise ValueError(
                     "query is not a rewritable aggregate shape (one "
@@ -2386,7 +2054,7 @@ class Engine:
             # compensates over an EMPTY delta (the recorded input
             # files already cover the live set) or declines; the MV
             # can never serve rows its token post-dates (r15).
-            snap = _mvr.source_snapshot(source_path)
+            snap = mv_rewrite.source_snapshot(source_path)
             # REBIND the source before materializing: a plain-dir temp
             # view keeps the file listing it was registered with, so a
             # frame planned against it can read PRE-append data while
@@ -2402,7 +2070,7 @@ class Engine:
             )
             self._bind(table, self.tables[table], tdf, meta)
             df = self.spark.sql(query)
-            spec = _mvr.mv_spec(df, self._all_paths())
+            spec = mv_rewrite.mv_spec(df, self._all_paths())
             if spec is None:  # the rebind cannot change the shape
                 raise ValueError("query shape changed under rebind")
             source_path = self._all_paths()[spec["table"]]
@@ -2431,7 +2099,7 @@ class Engine:
             "files_stat": files_stat,
             "path": path,
         }
-        _mvr.save_mv(path, meta)
+        mv_rewrite.save_mv(path, meta)
         self._mvs[name] = meta
         return {
             k: v
@@ -2445,11 +2113,9 @@ class Engine:
         same lake can adopt the materialization. The stored snapshot
         still gates freshness, so adopting a stale MV is harmless (it
         never rewrites until refreshed)."""
-        from quack_reduce_spark.plans import mv_rewrite as _mvr
-
-        meta = _mvr.load_mv(path)
+        meta = mv_rewrite.load_mv(path)
         if meta is None:
-            raise ValueError(f"no {_mvr.MV_FILE} under {path!r}")
+            raise ValueError(f"no {mv_rewrite.MV_FILE} under {path!r}")
         meta["name"] = name
         meta["path"] = path
         self._mvs[name] = meta
@@ -2474,8 +2140,6 @@ class Engine:
         per refresh and reading only the day's appends. Returns the
         refresh telemetry: mode 'incremental' (+ delta_files),
         'noop' (source unchanged), or 'full'."""
-        from quack_reduce_spark.plans import mv_rewrite as _mvr
-
         mv = self._mvs.get(name)
         if mv is None:
             raise KeyError(f"materialized view {name!r} is not registered")
@@ -2488,7 +2152,7 @@ class Engine:
             return {**out, "mode": "full"}
         # snapshot + listing BEFORE reading the delta (the creation
         # discipline): a racing commit can only cause later declines
-        snap = _mvr.source_snapshot(mv["source_path"])
+        snap = mv_rewrite.source_snapshot(mv["source_path"])
         cur = _mv_file_listing(mv["source_path"])
         if cur is None or set(old_files) - set(cur):
             # listing un-capturable or files REMOVED: merge can't
@@ -2501,15 +2165,15 @@ class Engine:
             mv["files"] = cur
             mv["files_stat"] = _mv_stat_listing(mv["source_path"], cur)
             mv.pop("_comp", None)
-            _mvr.save_mv(mv["path"], mv)
+            mv_rewrite.save_mv(mv["path"], mv)
             return {"name": name, "mode": "noop"}
         # the SAME delta-partials builder the stale-compensation
         # rewrite uses (mv_rewrite.delta_partial_frame): both paths
         # merge identical arithmetic. None = unrecognized partial
         # layout or group kind — full recompute, never a guess.
-        groups = [g["col"] for g in _mvr._norm_groups(mv["groups"])]
-        dagg = _mvr.delta_partial_frame(self.spark, mv, new)
-        merges = _mvr.partial_merge_exprs(mv["partials"])
+        groups = [g["col"] for g in mv_rewrite._norm_groups(mv["groups"])]
+        dagg = mv_rewrite.delta_partial_frame(self.spark, mv, new)
+        merges = mv_rewrite.partial_merge_exprs(mv["partials"])
         if dagg is None or merges is None:
             out = self.create_materialized_view(name, mv["query"], mv["path"])
             return {**out, "mode": "full"}
@@ -2533,7 +2197,7 @@ class Engine:
         mv["files"] = cur
         mv["files_stat"] = _mv_stat_listing(mv["source_path"], cur)
         mv.pop("_comp", None)
-        _mvr.save_mv(mv["path"], mv)
+        mv_rewrite.save_mv(mv["path"], mv)
         return {"name": name, "mode": "incremental", "delta_files": len(new)}
 
     def drop_materialized_view(self, name: str) -> None:
@@ -2559,7 +2223,6 @@ class Engine:
         matches its source exactly (its rows equal the pre-commit
         aggregate)."""
         from quack_reduce_spark import lake
-        from quack_reduce_spark.plans import mv_rewrite as _mvr
 
         out: dict[str, bool] = {}
         try:
@@ -2577,7 +2240,7 @@ class Engine:
                     and str(mv.get("source_path", "")).rstrip("/")
                     == live_dir
                     and mv.get("snapshot") is not None
-                    and _mvr.source_snapshot(mv["source_path"])
+                    and mv_rewrite.source_snapshot(mv["source_path"])
                     == mv["snapshot"]
                 )
             except Exception:
@@ -2615,7 +2278,6 @@ class Engine:
         inside an equal listing window is impossible, and one landing
         after the listing shows up as an ordinary compensation delta."""
         from quack_reduce_spark import lake
-        from quack_reduce_spark.plans import mv_rewrite as _mvr
 
         def mark(mv: dict) -> None:
             # PERSISTED (non-underscore) in _mv.json so an engine that
@@ -2624,7 +2286,7 @@ class Engine:
             # silently declining until a manual refresh
             mv["needs_refresh"] = True
             try:
-                _mvr.save_mv(mv["path"], mv)
+                mv_rewrite.save_mv(mv["path"], mv)
             except Exception:
                 pass  # the in-memory mark still drives this session
 
@@ -2638,7 +2300,7 @@ class Engine:
                 # view's cached resolution is stale until the next
                 # _refresh_versioned_views pass
                 new_resolved = lake.resolve(table_path)
-                snap = _mvr.source_snapshot(new_resolved)  # BEFORE listing
+                snap = mv_rewrite.source_snapshot(new_resolved)  # BEFORE listing
                 files = _mv_file_listing(new_resolved)
                 if (
                     snap is None
@@ -2656,7 +2318,7 @@ class Engine:
                 mv["files_stat"] = _mv_stat_listing(new_resolved, files)
                 mv.pop("_comp", None)
                 mv.pop("needs_refresh", None)
-                _mvr.save_mv(mv["path"], mv)
+                mv_rewrite.save_mv(mv["path"], mv)
             except Exception:
                 mark(mv)
 
@@ -2668,8 +2330,6 @@ class Engine:
         the MV declining (the cleared mark is re-persisted so other
         adopters don't retry-loop either) rather than retrying every
         query."""
-        from quack_reduce_spark.plans import mv_rewrite as _mvr
-
         for name, mv in list(self._mvs.items()):
             if not mv.pop("needs_refresh", False):
                 continue
@@ -2684,7 +2344,7 @@ class Engine:
                 # refresh re-stamped and re-saved the doc (markless)
             except Exception:
                 try:
-                    _mvr.save_mv(mv["path"], mv)  # clear the persisted mark
+                    mv_rewrite.save_mv(mv["path"], mv)  # clear the persisted mark
                 except Exception:
                     pass
 
@@ -2712,13 +2372,18 @@ RESULT_CACHE_MAX_ROWS = 10_000
 # pin GBs of driver heap; a single result above the budget is never
 # stored
 RESULT_CACHE_MAX_BYTES = 64 * 1024 * 1024
-RESULT_CACHE_COUNTS = {"hits": 0, "misses": 0, "bytes": 0}
 
 # Incremental MV refresh records the build-time file listing up to
 # this many files; beyond it (or when listing fails) refreshes fall
 # back to full recompute — at that table size the listing should come
 # from a manifest-backed source anyway
 MV_INCR_MAX_FILES = 4096
+
+
+def _fired(report: dict[str, dict], rule: str) -> dict | None:
+    """``rule``'s telemetry in a planned query's report, None when
+    another rule (or none) answered the query."""
+    return next((rep[rule] for rep in report.values() if rule in rep), None)
 
 
 def _mv_input_listing(df: DataFrame, source_path: str) -> list[str] | None:

@@ -9,7 +9,39 @@ claims are checked, not assumed.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from dataclasses import dataclass
+from typing import Any, Callable
+
+import pyspark.sql.functions as F
+from pyspark.sql import DataFrame, SparkSession
+
+
+@dataclass(frozen=True)
+class PlanContext:
+    """What a metadata rule reads. Each rule module exposes ``plan(ctx)
+    -> (frame, report) | None``: the frame answers the query, ``report``
+    becomes the envelope's ``metadata["zonemap"]``, None declines. A
+    rule reads ``df`` and the manifests, never a view by name; to
+    re-plan the query over pruned scans it calls ``rebind``."""
+
+    spark: SparkSession
+    query: str
+    df: DataFrame  # analyzed against the registered views
+    zm_tables: dict[str, tuple[str, list[str]]]  # name -> (path, stats cols)
+    paths: dict[str, str]  # name -> path of the zone-mapped tables
+    mvs: dict[str, dict]
+    all_paths: dict[str, str]  # name -> path of every registered table
+    snap_cache: dict[str, Any] | None
+    rebind: Callable[[dict[str, DataFrame]], DataFrame]
+
+
+def pruned_frame(spark: SparkSession, path: str, files: list[str] | None) -> DataFrame:
+    """A table's scan restricted to ``files`` (None: every file)."""
+    if files is None:
+        return spark.read.parquet(path)
+    if files:
+        return spark.read.option("basePath", path).parquet(*files)
+    return spark.read.parquet(path).where(F.lit(False))
 
 
 def formatted_plan(df: DataFrame) -> str:

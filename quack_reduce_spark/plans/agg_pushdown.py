@@ -58,12 +58,14 @@ from typing import Any
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
+from quack_reduce_spark.plans import PlanContext
 from quack_reduce_spark.plans.zonemap_pushdown import (
     _INSET_SEP,
     _MAX_INSET,
     _bare,
     _literal_py,
     _parse_internal_str,
+    prune_conjuncts,
 )
 
 # comparison node -> exact op code when the attribute is on the LEFT
@@ -1709,3 +1711,86 @@ def build_group_agg_frame(
         telemetry["files_group_stats"] = files_gs
         telemetry["group_stats_col"] = gs_col
     return frame, telemetry
+
+
+def best_group_stats(
+    spark: SparkSession, path: str, want: set[str], need: str | None = None
+) -> tuple[str, dict] | None:
+    """``(config key, slice rows by file)`` of the per-group stats key
+    (possibly COMPOSITE, "a,b") pinning the most ``want`` columns, then
+    the fewest extraneous components (each multiplies the slice count
+    without pinning anything); it must hold ``need`` when given. None
+    when no key overlaps ``want`` or its rows are unavailable."""
+    from quack_reduce_spark.operators import zonemaps as _zm
+
+    gcol, best_rank = None, (0, 0)
+    for key in _zm.group_stats_config(path):
+        comps = set(_zm._gs_components(key))
+        if need is not None and need not in comps:
+            continue
+        ov = len(comps & want)
+        rank = (ov, -(len(comps) - ov))
+        if ov > 0 and rank > best_rank:
+            best_rank, gcol = rank, key
+    if gcol is None:
+        return None
+    by_file = _zm.group_stats_rows(spark, path, gcol)
+    return None if by_file is None else (gcol, by_file)
+
+
+def plan(ctx: PlanContext) -> tuple[DataFrame, dict] | None:
+    """The aggregate rule: a query that passes this module's exactness
+    gates is answered from the manifest plus a residual aggregate over
+    only the BOUNDARY files — the reference dashboard's per-widget
+    ``SELECT COUNT(*) .. WHERE range`` (dashboard.py:37-39) reads O(1)
+    files on a clustered layout. ``files_read`` in the report counts
+    those boundary files."""
+    if not ctx.zm_tables:
+        return None
+    info = extract_scalar_agg(ctx.df, ctx.paths) or extract_grouped_agg(
+        ctx.df, ctx.paths
+    )
+    if info is None:
+        return None
+    path, zcols = ctx.zm_tables[info["table"]]
+    zset = set(zcols)
+    if any(c is not None and c not in zset for k, c in info["aggs"] if k != "key"):
+        return None  # MIN/MAX/COUNT/SUM/AVG/COUNT-DISTINCT(col) need stats
+    if any(g["src"] not in zset for g in info["groups"]):
+        # every grouping key's SOURCE column needs stats for the
+        # per-file single-valuedness classification (a key may be
+        # grouped on without being selected, and derived keys pin
+        # through their source column's endpoints)
+        return None
+    got = prune_conjuncts(ctx.spark, path, zcols, info["conjuncts"])
+    if got is None:
+        return None  # un-maintained append: metadata can't answer
+    rows, total = got
+    # per-file PER-GROUP partials (written for designated low-NDV
+    # columns) let both builders answer UNCLUSTERED layouts from
+    # metadata: grouped queries need the column among the grouping
+    # keys' sources; scalar queries profit when it carries a conjunct
+    # or COUNT(DISTINCT) (slice-tight classification). Slice rows are
+    # epoch-cached: zero I/O on an unchanged table after the first read.
+    if info["groups"]:
+        want = {g["src"] for g in info["groups"]}
+    else:
+        want = {c for c, _o, _v in info["conjuncts"]} | {
+            c for k, c in info["aggs"] if k == "count_distinct"
+        }
+    group_stats = best_group_stats(ctx.spark, path, want)
+    # the builders finish the frame themselves: HAVING + the peeled
+    # ORDER BY / LIMIT re-apply over the full aggregate-output list
+    # before the visible projection
+    build = build_group_agg_frame if info["groups"] else build_agg_frame
+    got = build(ctx.spark, path, info, rows, total, group_stats)
+    if got is None:
+        return None
+    frame, tele = got
+    return frame, {
+        tele["table"]: {
+            "files_read": tele["files_scanned"],
+            "files_total": tele["files_total"],
+            "agg_pushdown": tele,
+        }
+    }

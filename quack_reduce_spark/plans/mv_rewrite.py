@@ -57,6 +57,8 @@ from typing import Any
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
+from quack_reduce_spark.plans import PlanContext
+
 MV_FILE = "_mv.json"
 # freshness fallback for un-manifested tables: stat at most this many
 # files per check (a table past this should carry a zone-map manifest,
@@ -699,3 +701,17 @@ def _build(
     if mv.get("conjuncts"):
         telemetry["mv_predicate"] = True
     return frame, telemetry
+
+
+def plan(ctx: PlanContext) -> tuple[DataFrame, dict] | None:
+    """The MV rule: an aggregate the manifest could not answer
+    (un-maintained appends, AVG over a multi-valued layout, no manifest
+    at all) re-plans over a registered FRESH MV's partials instead of
+    the base table."""
+    if not ctx.mvs:
+        return None
+    got = try_rewrite(ctx.spark, ctx.df, ctx.all_paths, ctx.mvs, ctx.snap_cache)
+    if got is None:
+        return None
+    frame, tele = got
+    return frame, {tele["table"]: {"mv_rewrite": tele}}

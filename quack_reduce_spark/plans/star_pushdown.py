@@ -62,6 +62,7 @@ from typing import Any
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
+from quack_reduce_spark.plans import PlanContext
 from quack_reduce_spark.plans.agg_pushdown import (
     _MAX_GROUP_KEYS,
     _attr_id,
@@ -76,12 +77,14 @@ from quack_reduce_spark.plans.agg_pushdown import (
     _slice_pin,
     _split_and,
     _type_ok,
+    best_group_stats,
     finish_frame,
 )
 from quack_reduce_spark.plans.zonemap_pushdown import (
     DPP_DIM_MAX_BYTES,
     _bare,
     _iter_nodes,
+    prune_conjuncts,
 )
 
 # the fact partial table is driver-side: cap it at the DPP key cap —
@@ -220,7 +223,7 @@ def extract_star_group(
         return []
     pairs = _strict_equi_pairs(cond.get())
     if pairs is None or len(pairs) != 1:
-        return None  # composite equi keys: slices pin ONE key
+        return []  # composite equi keys: slices pin ONE key
     name_by_root = {_bare(p): n for n, p in paths_by_name.items()}
 
     out = []
@@ -557,61 +560,28 @@ def build_star_frame(
 
     from pyspark.sql import types as T
 
-    from quack_reduce_spark.operators import zonemaps as _zm
     from quack_reduce_spark.operators.zonemaps import (
         _decimal_ps,
         _sum_wide_dec,
         _unscaled_decimal,
     )
-    from quack_reduce_spark.plans import zonemap_pushdown as _zp
 
     fk = info["fact_key"]
     aggs, conjuncts, types = info["aggs"], info["conjuncts"], info["types"]
     if fk not in stats_cols:
         return None
-    cons: dict[str, tuple] = {}
-    for c, op, v in info["conjuncts"]:
-        if c not in stats_cols:
-            continue  # unstatted conjunct: no pruning, still classified
-        if op in ("ge", "gt"):
-            nc = (v, None, None, None)
-        elif op in ("le", "lt"):
-            nc = (None, v, None, None)
-        elif op == "eq":
-            nc = (None, None, frozenset([v]), None)
-        elif op == "in":
-            nc = (None, None, v, None)
-        elif op == "isnull":
-            nc = (None, None, None, "null")
-        else:
-            nc = (None, None, None, "notnull")
-        prev = cons.get(c)
-        cons[c] = _zp._and_constraints(prev, nc) if prev else nc
-    rows, total = _zm.prune_files_multi(spark, path, cons)
-    if total != len(_zm._data_files(path)):
+    got = prune_conjuncts(spark, path, stats_cols, info["conjuncts"])
+    if got is None:
         return None  # un-maintained append: metadata can't be trusted
+    rows, total = got
 
     # slice table keyed on the JOIN key (possibly composite — every
-    # slice still pins fk exactly, just finer); with fact-side group
-    # keys (mixed grouping) prefer the config covering the most of
-    # {fk} + fact group columns, fewest extraneous components
+    # slice still pins fk exactly, just finer), covering the most
+    # fact-side group columns (mixed grouping)
     fact_gcols = info.get("fact_group_cols") or []
-    want = {fk} | set(fact_gcols)
-    gs_cfg = _zm.group_stats_config(path)
-    gcol, best_rank = None, (0, 0)
-    for key in gs_cfg:
-        comps = set(_zm._gs_components(key))
-        if fk not in comps:
-            continue
-        ov = len(comps & want)
-        rank = (ov, -(len(comps) - ov))
-        if rank > best_rank:
-            best_rank, gcol = rank, key
-    gs_by_file: dict[str, list[dict]] = {}
-    if gcol is not None:
-        got = _zm.group_stats_rows(spark, path, gcol)
-        if got is not None:
-            gs_by_file = got
+    gcol, gs_by_file = best_group_stats(
+        spark, path, {fk} | set(fact_gcols), need=fk
+    ) or (None, {})
 
     # the fact-side key tuple the partials fold under: the join key
     # FIRST, then every fact grouping column (each must pin per file
@@ -851,3 +821,29 @@ def build_star_frame(
     if gcol is not None:
         telemetry["group_stats_col"] = gcol
     return frame, telemetry
+
+
+def plan(ctx: PlanContext) -> tuple[DataFrame, dict] | None:
+    """The star rule: ``fact INNER JOIN dim ON one equi key, GROUP BY
+    bare dim attributes, COUNT/SUM/MIN/MAX/AVG over bare fact columns``
+    with every fact conjunct exactly understood is answered from the
+    fact manifest's per-(file, join-key) slice partials merged
+    driver-side with the evaluated dim rows — zero fact files
+    scanned."""
+    if not ctx.zm_tables:
+        return None
+    for info in extract_star_group(ctx.df, ctx.paths):
+        if info["table"] not in ctx.zm_tables:
+            continue
+        path, zcols = ctx.zm_tables[info["table"]]
+        got = build_star_frame(ctx.spark, ctx.df, path, zcols, info)
+        if got is not None:
+            frame, tele = got
+            return frame, {
+                tele["table"]: {
+                    "files_read": 0,
+                    "files_total": tele["files_total"],
+                    "star_pushdown": tele,
+                }
+            }
+    return None

@@ -62,6 +62,7 @@ from typing import Any
 
 from pyspark.sql import DataFrame, SparkSession
 
+from quack_reduce_spark.plans import PlanContext, pruned_frame
 from quack_reduce_spark.plans.agg_pushdown import (
     _classify_row,
     _exact_conjunct,
@@ -70,7 +71,7 @@ from quack_reduce_spark.plans.agg_pushdown import (
     _split_and,
     _type_ok,
 )
-from quack_reduce_spark.plans.zonemap_pushdown import _bare
+from quack_reduce_spark.plans.zonemap_pushdown import _bare, prune_conjuncts
 
 # a LIMIT above this is not a "top-k" — the threshold machinery still
 # works, but the win shrinks and the driver-side sort of file bounds
@@ -441,9 +442,6 @@ def plan_topk_files(
     (sort column unstatted, stale manifest, no provable bound, or
     nothing would be skipped). Returns ``(files, total, stats,
     telemetry)`` in the engine's rebind shape."""
-    from quack_reduce_spark.operators import zonemaps as _zm
-    from quack_reduce_spark.plans import zonemap_pushdown as _zp
-
     col, k, asc = info["col"], info["k"], info["asc"]
     steps = info.get("steps") or []
     flip = bool(info.get("flip"))
@@ -456,27 +454,10 @@ def plan_topk_files(
     # WHERE pruning first (closed-widened, like the agg path): the
     # bound then only has to beat the files a plain range query would
     # already read
-    cons: dict[str, tuple] = {}
-    for c, op, v in info["conjuncts"]:
-        if c not in stats_cols:
-            continue  # unstatted conjunct: no pruning, still classified
-        if op in ("ge", "gt"):
-            nc = (v, None, None, None)
-        elif op in ("le", "lt"):
-            nc = (None, v, None, None)
-        elif op == "eq":
-            nc = (None, None, frozenset([v]), None)
-        elif op == "in":
-            nc = (None, None, v, None)
-        elif op == "isnull":
-            nc = (None, None, None, "null")
-        else:
-            nc = (None, None, None, "notnull")
-        prev = cons.get(c)
-        cons[c] = _zp._and_constraints(prev, nc) if prev else nc
-    rows, total = _zm.prune_files_multi(spark, path, cons)
-    if total != len(_zm._data_files(path)):
+    got = prune_conjuncts(spark, path, stats_cols, info["conjuncts"])
+    if got is None:
         return None  # un-maintained append: metadata can't be trusted
+    rows, total = got
     norm = _norm_conjuncts(info["conjuncts"])
     surviving: list[tuple[dict, str, int]] = []  # (row, state, n_rows)
     for r in rows:
@@ -614,3 +595,34 @@ def plan_topk_files(
         ]
         telemetry["order_reversing"] = flip
     return files, total, stats, telemetry
+
+
+def plan(ctx: PlanContext) -> tuple[DataFrame, dict] | None:
+    """The top-k rule: a raw-column ``ORDER BY col LIMIT k`` over one
+    zone-mapped table (the scan-shaped sibling of the grouped top-k the
+    agg rule answers) re-plans over only the files the manifest's
+    min/max bound lets contribute to the top k. The extraction shape
+    guarantees a single scan and no joins, and the survivor set
+    re-applies the exact WHERE classification, so it subsumes the
+    generic WHERE pruning of the zone-map rule."""
+    info = extract_topk(ctx.df, ctx.paths) if ctx.zm_tables else None
+    if info is None or info["table"] not in ctx.zm_tables:
+        return None
+    name = info["table"]
+    path, cols = ctx.zm_tables[name]
+    got = plan_topk_files(ctx.spark, path, cols, info)
+    if got is None:
+        return None
+    files, total, stats, tele = got
+    planned = ctx.rebind({name: pruned_frame(ctx.spark, path, files)})
+    return planned, {
+        name: {
+            "files_read": len(files),
+            "files_total": total,
+            "columns": cols,
+            "est_rows": stats["est_rows"],
+            "est_bytes": stats["est_bytes"],
+            "broadcast_hint": False,
+            "topk": tele,
+        }
+    }

@@ -10,9 +10,9 @@ plain SQL (the reference's whole UX, ``app.py:51``) and gets
 Iceberg/Delta-style stats skipping on plain parquet for free.
 
 How constraints are found — asked of Catalyst, not parsed from SQL:
-``spark.sql(query)`` is planned (analysis + optimization only, no
-execution) and every ``FileSourceScanExec`` leaf is inspected via the
-JVM bridge. A scan's ``dataFilters`` are the optimizer's OWN conjuncts
+the engine's analyzed query is planned (analysis + optimization only,
+no execution) and every ``FileSourceScanExec`` leaf is inspected via
+the JVM bridge. A scan's ``dataFilters`` are the optimizer's OWN conjuncts
 (post constant-folding, post pushdown-splitting), so everything the
 rewriter produces from BETWEEN / CTE inlining arrives here already
 normalized. Conjuncts of the shape ``<attr> <cmp> <literal>`` over a
@@ -57,6 +57,8 @@ import struct as _struct
 from typing import Any
 
 from pyspark.sql import DataFrame
+
+from quack_reduce_spark.plans import PlanContext, pruned_frame
 
 _EPOCH_DATE = _dt.date(1970, 1, 1)
 _EPOCH_TS = _dt.datetime(1970, 1, 1)
@@ -1007,6 +1009,41 @@ def _and_constraints(a: tuple, b: tuple) -> tuple:
     return (lo, hi, None, nullness)
 
 
+def prune_conjuncts(
+    spark, path: str, stats_cols: list[str], conjuncts: list
+) -> tuple[list[dict], int] | None:
+    """Manifest rows of the files that can hold rows matching EXACT
+    ``(col, op, value)`` conjuncts, closed-widened (the caller
+    re-applies the strict semantics per file), as ``(rows, total)``.
+    Conjuncts on unstatted columns prune nothing. None when the
+    manifest is stale against the live file listing (an un-maintained
+    append: metadata can't be trusted)."""
+    from quack_reduce_spark.operators import zonemaps as _zm
+
+    cons: dict[str, tuple] = {}
+    for c, op, v in conjuncts:
+        if c not in stats_cols:
+            continue
+        if op in ("ge", "gt"):
+            nc = (v, None, None, None)
+        elif op in ("le", "lt"):
+            nc = (None, v, None, None)
+        elif op == "eq":
+            nc = (None, None, frozenset([v]), None)
+        elif op == "in":
+            nc = (None, None, v, None)
+        elif op == "isnull":
+            nc = (None, None, None, "null")
+        else:
+            nc = (None, None, None, "notnull")
+        prev = cons.get(c)
+        cons[c] = _and_constraints(prev, nc) if prev else nc
+    rows, total = _zm.prune_files_multi(spark, path, cons)
+    if total != len(_zm._data_files(path)):
+        return None
+    return rows, total
+
+
 def merge_dim_constraint(scans: list[dict], col: str, cons: tuple) -> None:
     """Intersect a join-derived constraint into EVERY alternative of
     every scan record of the (single-relation) table — sound because
@@ -1102,3 +1139,138 @@ def plan_pruned_files(
         ),
     }
     return survivors, total, stats
+
+
+# Spark's own autoBroadcastJoinThreshold default (10 MB): a pruned
+# shuffle-join side whose surviving file bytes fit under it is hinted
+BROADCAST_THRESHOLD = 10 * 1024 * 1024
+
+
+def plan(ctx: PlanContext) -> tuple[DataFrame, dict] | None:
+    """The generic pruning rule: each zone-mapped scan's WHERE
+    constraints, intersected with the DPP key sets derived from its
+    join dimensions (see the DPP section above), pick the table's
+    surviving files, and the query re-plans over them through
+    ``ctx.rebind``. The query's own WHERE still executes, so an
+    extraction miss only means fewer files skipped. A pruned side of a
+    shuffle join whose SURVIVING bytes fit under
+    ``BROADCAST_THRESHOLD`` is hinted broadcast (static stats see the
+    full file size: Filter passes size stats through). When DPP derived
+    a bounded key VALUE SET and the fact side is shuffled, the rebound
+    scan also filters ROWS by that set (an exact runtime filter: the
+    join re-checks equality), so rows that cannot join never enter the
+    exchange even when no file can be skipped."""
+    if not ctx.zm_tables:
+        return None
+    cons = scan_constraints(ctx.df, ctx.paths)
+    dpp = join_dim_constraints(
+        ctx.df, ctx.paths, {n: c for n, (_, c) in ctx.zm_tables.items()}
+    )
+    dpp_applied: dict[str, dict] = {}
+    for name, entry in dpp.items():
+        scans = cons.get(name)
+        if not scans or len(scans) != 1:
+            continue  # one logical relation must be one scan
+        for col, (constraint, n_keys) in entry["cols"].items():
+            merge_dim_constraint(scans, col, constraint)
+            dpp_applied.setdefault(name, {})[col] = n_keys
+    rebinds: dict[str, tuple[list[str], int, dict]] = {}
+    for name, scans in cons.items():
+        path, cols = ctx.zm_tables[name]
+        got = plan_pruned_files(ctx.spark, path, cols, scans)
+        if got is not None:
+            rebinds[name] = got
+    smj_tables = join_scan_tables(ctx.df, ctx.paths)
+    hints = {
+        name
+        for name, (_f, _t, stats) in rebinds.items()
+        if name in smj_tables
+        and stats.get("est_bytes") is not None
+        and stats["est_bytes"] <= BROADCAST_THRESHOLD
+    }
+    row_filters: dict[str, dict] = {}
+    for name in dpp_applied:
+        if name not in smj_tables:
+            continue  # broadcast join: the fact never shuffles
+        colmap = {
+            col: constraint[2]
+            for col, (constraint, n_keys) in dpp[name]["cols"].items()
+            if constraint[2] is not None and n_keys is not None
+        }
+        if colmap:
+            row_filters[name] = colmap
+    targets = {n: r[0] for n, r in rebinds.items()}
+    for name in row_filters:
+        # no file skippable, but the row filter still pays: rebind
+        # every file with the filter on top
+        targets.setdefault(name, None)
+    if not targets:
+        return None
+    row_applied: dict[str, dict] = {}
+    pruned_views: dict[str, DataFrame] = {}
+    for name, files in targets.items():
+        pruned = pruned_frame(ctx.spark, ctx.zm_tables[name][0], files)
+        if name in row_filters:
+            got = _dpp_row_predicate(pruned, row_filters[name])
+            if got is not None:
+                pred, applied = got
+                pruned = pruned.where(pred)
+                row_applied[name] = applied
+        if name in hints:
+            pruned = pruned.hint("broadcast")
+        pruned_views[name] = pruned
+    planned = ctx.rebind(pruned_views)
+    report: dict[str, dict] = {}
+    for name in targets:
+        if name in rebinds:
+            files, total, stats = rebinds[name]
+            report[name] = {
+                "files_read": len(files),
+                "files_total": total,
+                "columns": ctx.zm_tables[name][1],
+                "est_rows": stats["est_rows"],
+                "est_bytes": stats["est_bytes"],
+                "broadcast_hint": name in hints,
+            }
+        else:
+            report[name] = {"columns": ctx.zm_tables[name][1]}
+        if name in dpp_applied:
+            report[name]["dpp"] = dpp_applied[name]
+        if name in row_applied:
+            report[name]["dpp_row_filter"] = row_applied[name]
+    return planned, report
+
+
+def _dpp_row_predicate(pruned: DataFrame, colmap: dict) -> tuple | None:
+    """(predicate Column, {col: n_keys}) filtering rows to the DPP
+    key sets, or None when no column's type filters soundly.
+    Session-zoned timestamp keys are epoch micros (the collection
+    domain) and compare via unix_micros — zone-free; NTZ columns
+    are SKIPPED (a naive-datetime literal renders through the
+    driver-OS zone, which off-UTC could drop matching rows — file
+    pruning still applies to them, driver-side comparisons are
+    exact there)."""
+    import pyspark.sql.functions as F
+
+    from quack_reduce_spark.operators import zonemaps as _zm
+
+    by_type = _zm._py_field_types(pruned)
+    pred = None
+    applied: dict[str, int] = {}
+    for col, vals in colmap.items():
+        t = by_type.get(col)
+        dec_s = _zm._unscaled_decimal(t)
+        if t == "timestamp":
+            cond = F.unix_micros(F.col(col)).isin([int(v) for v in vals])
+        elif dec_s is not None:
+            # DPP decimal keys arrive in unscaled-int space
+            cond = _zm._unscaled_col(col, dec_s).isin([int(v) for v in vals])
+        elif t in (None, "timestamp_ntz") or t.startswith("decimal"):
+            continue
+        else:
+            cond = F.col(col).isin(list(vals))
+        pred = cond if pred is None else (pred & cond)
+        applied[col] = len(vals)
+    if pred is None:
+        return None
+    return pred, applied

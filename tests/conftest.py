@@ -4,6 +4,37 @@ import pytest
 from pyspark.sql import SparkSession
 
 
+def pytest_configure(config):
+    config.addinivalue_line(
+        "markers",
+        "planner_fault: the test injects a planner fault on purpose, so "
+        "a raised metadata rule does not fail it",
+    )
+
+
+@pytest.fixture(autouse=True)
+def _strict_planners(request, monkeypatch):
+    """Fail any test during which an Engine's metadata rule raised. A
+    raise still falls back to the plain plan (the answer stays right),
+    which is exactly how a planner bug would hide; tests that inject a
+    planner fault on purpose carry the ``planner_fault`` marker."""
+    from quack_reduce_spark.engine import Engine
+
+    raised: list[tuple[str, dict]] = []
+    orig = Engine._sql_planned_report
+
+    def checked(self, query, snap_cache=None):
+        out = orig(self, query, snap_cache)
+        if any(v.startswith("raised:") for v in out[2].values()):
+            raised.append((query, out[2]))
+        return out
+
+    monkeypatch.setattr(Engine, "_sql_planned_report", checked)
+    yield
+    if raised and request.node.get_closest_marker("planner_fault") is None:
+        pytest.fail(f"a metadata rule raised: {raised}")
+
+
 @pytest.fixture(scope="session")
 def spark() -> SparkSession:
     from quack_reduce_spark.session import configure

@@ -12,7 +12,6 @@ import threading
 import pyspark.sql.functions as F
 import pytest
 
-from quack_reduce_spark import engine as E
 from quack_reduce_spark.engine import Engine
 from quack_reduce_spark.inventory._util import load
 from quack_reduce_spark.operators import zonemaps as Z
@@ -155,7 +154,7 @@ def test_result_cache_counts_every_concurrent_hit(spark, sf_dir, tmp_path):
     eng.register("hc_orders", src)
     q = "SELECT COUNT(*) AS n FROM hc_orders"
     eng.sql(q)
-    before = E.RESULT_CACHE_COUNTS["hits"]
+    before = eng.cache_counts["hits"]
     interval = sys.getswitchinterval()
     sys.setswitchinterval(1e-6)
     try:
@@ -163,5 +162,5 @@ def test_result_cache_counts_every_concurrent_hit(spark, sf_dir, tmp_path):
     finally:
         sys.setswitchinterval(interval)
     assert all(r.metadata["result_cache"] == {"hit": True} for r in res)
-    assert E.RESULT_CACHE_COUNTS["hits"] - before == 48
+    assert eng.cache_counts["hits"] - before == 48
     spark.catalog.dropTempView("hc_orders")

@@ -512,6 +512,7 @@ def test_engine_sql_like_prefix_prunes_string_zonemap(spark, sf_dir, tmp_path):
     assert rep is not None and rep["files_read"] < rep["files_total"] == 8
 
 
+@pytest.mark.planner_fault
 def test_engine_sql_pruning_failure_falls_back_and_restores_views(
     spark, zm_engine, monkeypatch
 ):
@@ -536,6 +537,8 @@ def test_engine_sql_pruning_failure_falls_back_and_restores_views(
     monkeypatch.setattr(_zp, "plan_pruned_files", bad_files)
     d = eng.df(RANGE_Q)
     assert eng.last_zonemap_report == {}  # fell back: nothing to report
+    _df, _report, rules = eng._sql_planned_report(RANGE_Q)
+    assert rules["zonemap_pushdown"] == "raised:AnalysisException"
     got = {(r[0], r[1]) for r in d.collect()}
     monkeypatch.undo()
     want = {(r[0], r[1]) for r in eng.df(RANGE_Q).collect()}

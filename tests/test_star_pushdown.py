@@ -145,6 +145,21 @@ def test_star_group_having_order_limit(spark, sf_dir, tmp_path):
     _teardown(spark)
 
 
+def test_star_group_composite_key_extracts_empty(spark, sf_dir, tmp_path):
+    """Composite equi keys decline through the extractor's list
+    contract: an empty candidate list, not None."""
+    from quack_reduce_spark.plans import star_pushdown as SP
+
+    _eng, fact, dim = _setup(spark, sf_dir, tmp_path)
+    d = spark.sql(
+        "SELECT n_name, COUNT(*) AS n FROM sfact JOIN sdim "
+        "ON c_nationkey = n_nationkey AND c_nationkey = n_regionkey "
+        "GROUP BY n_name ORDER BY n_name"
+    )
+    assert SP.extract_star_group(d, {"sfact": fact, "sdim": dim}) == []
+    _teardown(spark)
+
+
 def test_star_group_declines_stay_exact(spark, sf_dir, tmp_path):
     """Non-equi, composite-key, outer join, dim-column aggregate,
     unsliced join key, over-cap key set: every one declines (no star
