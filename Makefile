@@ -3,7 +3,7 @@
 
 SF ?= /root/testdata/sf0.001
 
-.PHONY: test test-distinct oracle oracle-vanilla bench perfbench plans pipeline dashboard unit recall-check concurrent assembly lakehouse datamart ann-audit
+.PHONY: test test-distinct commit-budget oracle oracle-vanilla bench perfbench plans pipeline dashboard unit recall-check concurrent assembly lakehouse datamart ann-audit
 
 # reference `make test` (Makefile:22-24): canary count round trip
 test:
@@ -19,6 +19,12 @@ test-distinct:
 # full pytest suite
 unit:
 	python -m pytest tests/ -q
+
+# commit-path pre-flight (~1 min): the append / register Spark-job
+# budgets, the schema memo, and the build-vs-append stats differential
+commit-budget:
+	python -m pytest tests/test_zonemap_manifests.py tests/test_sources.py -q \
+	  -p no:cacheprovider -k "spark_job or no_job or memo or full_build or wide_decimal"
 
 # DuckDB differential harness over the whole inventory
 oracle:

@@ -147,13 +147,15 @@ def _load() -> list[float]:
 def _concurrent_burst(spark, sf_dir: str) -> dict:
     """Serial vs sql_many wall-clock for a mixed 16-query burst with
     result-hash equality asserted (concurrency must never change
-    answers — only scheduling)."""
+    answers — only scheduling). The result cache is off: the
+    concurrent leg replays the serial leg's strings, which would
+    otherwise all be cache hits."""
     import hashlib
 
     from quack_reduce_spark.engine import Engine
     from tools.concurrent_queries import build_burst
 
-    eng = Engine(spark=spark)
+    eng = Engine(spark=spark, result_cache=False)
     eng.register_dir(sf_dir, ["lineitem", "orders", "customer", "nation"])
     burst = build_burst(BURST_N)
     # warm both paths' plans once so the comparison is scheduling, not

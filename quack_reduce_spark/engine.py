@@ -2348,10 +2348,6 @@ class Engine:
                 except Exception:
                     pass
 
-    def cache_table(self, name: str) -> None:
-        """Pin a hot table in memory (reference README.md:188 future work)."""
-        self.spark.catalog.cacheTable(name)
-
 
 _FIXED_WIDTHS = None
 

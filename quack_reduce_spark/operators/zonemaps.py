@@ -25,10 +25,12 @@ a MANIFEST LIST over PER-PARTITION MANIFESTS:
   (the commit point), then deletes what it superseded; the reader
   de-duplicates rows by file, so a racing reader never double-counts.
 - :func:`append_zonemap` is the Iceberg append-commit shape: only the
-  NEW files are statted — that delta scan is the append's only Spark
-  work — and only the TOUCHED partitions' manifests are rewritten.
-  Untouched partitions' manifests are never read, rewritten, or even
-  listed, so maintenance cost tracks the DELTA, not the table.
+  NEW files are statted, on the driver (each read once with pyarrow,
+  projected to the stats columns, its row built with the Spark build's
+  semantics), so a plain, bloom or ndv append runs no Spark job — and
+  only the TOUCHED partitions' manifests are rewritten. Untouched
+  partitions' manifests are never read, rewritten, or even listed, so
+  maintenance cost tracks the DELTA, not the table.
 - :func:`prune_files` reads the manifest list FIRST: partition groups
   whose group-level ``[lo, hi]`` cannot intersect the query range are
   skipped without opening their manifests at all; surviving groups'
@@ -69,6 +71,7 @@ import datetime as _dt
 import decimal as _decimal
 import hashlib
 import json
+import os
 import re as _re
 import threading
 import time
@@ -1404,6 +1407,271 @@ def _upgrade_legacy(spark: SparkSession, data_dir: str) -> list[str]:
     return cols
 
 
+# -- driver-side delta stats (the append path) ------------------------------
+#
+# An append stats a few fresh files, often a few hundred rows. A Spark
+# pass over them runs whole jobs (an AQE shuffle and a result job,
+# ~240 ms on a 4-vCPU VM, plus py4j Column building) for rows the
+# driver folds in milliseconds. So the append reads each fresh file
+# once with pyarrow, projected to the stats columns, and builds its
+# manifest row in Python as the Spark build would (``_stats_select_cols``
+# + ``_stat_aggs``, ``_bloom_word_frame``, ``_hll_reg_frame``): the same
+# stats space (epoch micros, unscaled decimals), Spark's min/max order
+# (nulls skipped, NaN greatest, the first of equal values kept) and
+# try_sum (NULL on an overflow where the build's aggregate sees one,
+# :func:`_try_sum`). The table-scale ``write_zonemap`` stays a
+# distributed pass; the build-vs-append differential test in
+# tests/test_zonemap_manifests.py holds the two to the same rows.
+
+_EXACT = _decimal.Context(prec=100)  # wide-decimal arithmetic, no rounding
+_LONG_MIN, _LONG_MAX = -(1 << 63), (1 << 63) - 1
+
+
+def _unscaled(v: _decimal.Decimal, s: int) -> int:
+    return int(v.scaleb(s, _EXACT))
+
+
+def _at_scale(u: int, s: int) -> _decimal.Decimal:
+    return _decimal.Decimal(u).scaleb(-s, _EXACT)
+
+
+def _stats_schema(
+    cols: list[str], types: dict[str, str], bloom_cols: list[str], ndv_cols: list[str]
+) -> Any:
+    """The Spark schema of the build's stats frame for ``types``, in
+    the build's field order (the manifest writer derives its Arrow
+    schema from it)."""
+    from pyspark.sql import types as T
+
+    fields = [
+        T.StructField("file", T.StringType()),
+        T.StructField("n_rows", T.LongType()),
+        T.StructField("file_bytes", T.LongType()),
+    ]
+    for c in cols:
+        t = types[c]
+        if t == "timestamp" or _unscaled_decimal(t) is not None:
+            st = T.LongType()
+        else:
+            st = T._parse_datatype_json_value(t)
+        fields += [
+            T.StructField(f"min_{c}", st),
+            T.StructField(f"max_{c}", st),
+            T.StructField(f"nulls_{c}", T.LongType()),
+        ]
+        if _sum_col_ok(t):
+            fields.append(T.StructField(f"sum_{c}", T.LongType()))
+        elif _sum_wide_dec(t) is not None:
+            p, s = _decimal_ps(t)
+            fields.append(T.StructField(f"sum_{c}", T.DecimalType(min(38, p + 10), s)))
+    fields += [T.StructField(f"bloom_{c}", T.ArrayType(T.LongType(), False)) for c in bloom_cols]
+    fields += [T.StructField(f"hll_{c}", T.ArrayType(T.IntegerType(), False)) for c in ndv_cols]
+    return T.StructType(fields)
+
+
+def _spark_file_path(p: str) -> str:
+    """``p`` in the form :func:`_file_col` gives it: the qualified,
+    URI-decoded path (``file:/x`` for a local file)."""
+    from quack_reduce_spark.lake import _URI_RE
+
+    if not _URI_RE.match(p):
+        return "file:" + os.path.abspath(p)
+    if p.startswith("file:"):
+        return "file:" + _bare(p)
+    return p
+
+
+def _partition_values(data_dir: str, path: str) -> dict[str, str | None]:
+    """Hive partition values of ``path``'s directories below
+    ``data_dir``, unescaped as Spark's partition discovery does
+    (``%XX`` decoded, ``__HIVE_DEFAULT_PARTITION__`` is null)."""
+    from urllib.parse import unquote
+
+    root, d = _bare(data_dir).rstrip("/"), _dirname(_bare(path))
+    out: dict[str, str | None] = {}
+    if not d.startswith(root + "/"):
+        return out
+    for seg in d[len(root) + 1:].split("/"):
+        k, eq, v = seg.partition("=")
+        if eq and k:
+            out[unquote(k)] = None if v == "__HIVE_DEFAULT_PARTITION__" else unquote(v)
+    return out
+
+
+def _path_value(v: str | None, t: str, session_tz: str | None) -> Any:
+    """Stats-space value of one partition directory value, typed as
+    the manifest records the column (one of the types Spark's
+    partition inference gives)."""
+    if v is None:
+        return None
+    ps = _decimal_ps(t)
+    if t in _SUM_TYPES:
+        return int(v)
+    if t == "double":
+        return float(v)
+    if t == "string":
+        return v
+    if t == "date":
+        return _dt.date.fromisoformat(v)
+    if t == "timestamp":
+        return _to_micros(_dt.datetime.fromisoformat(v), session_tz)
+    if ps is not None:
+        u = _unscaled(_decimal.Decimal(v), ps[1])
+        return u if ps[0] <= _DEC_MAX_PRECISION else _at_scale(u, ps[1])
+    raise ValueError(f"partition column of type {t!r} cannot be statted")
+
+
+def _stats_values(col: Any, t: str) -> list:
+    """One file column's values in STATS space, in row order — the
+    driver twin of :func:`_stats_select_cols`. Session-zoned timestamps
+    become epoch micros (nanos floor-divide; INT96 is read at µs, which
+    truncates the same way), decimal(p<=18) unscaled ints. Everything
+    else is valued as a ``collect()`` gives it."""
+    import pyarrow as pa
+
+    if pa.types.is_timestamp(col.type) and t == "timestamp":
+        raw = col.cast(pa.int64()).to_pylist()
+        if col.type.unit == "us":
+            return raw
+        if col.type.unit == "ns":
+            return [None if v is None else v // 1000 for v in raw]
+        mul = 1000 if col.type.unit == "ms" else 1_000_000
+        return [None if v is None else v * mul for v in raw]
+    s = _unscaled_decimal(t)
+    if s is not None:
+        return [None if v is None else _unscaled(v, s) for v in col.to_pylist()]
+    return col.to_pylist()
+
+
+# Stats types an UnsafeRow updates in place. When every stats column's
+# min/max buffer is one of these, Spark runs the build as a hash
+# aggregate, whose buffer re-fits a wide-decimal running sum to its
+# type on every row; a string or binary min/max makes it a sort
+# aggregate, which sums wide decimals unbounded and checks the total.
+_MUTABLE_STATS_TYPES = {
+    "boolean", "byte", "short", "integer", "long", "float", "double",
+    "date", "timestamp", "timestamp_ntz",
+}
+
+
+def _try_sum(vals: list, t: str, per_row: bool) -> Any:
+    """Spark's ``try_sum`` over one file's non-null stats values in row
+    order: NULL with no values, and NULL once a running long total
+    overflows, even if later rows would bring it back. A wide decimal
+    sums as ``decimal(min(38, p + 10), s)``: NULL once a running total
+    leaves it when ``per_row`` (a hash-aggregated build), else when the
+    file's total does."""
+    if not vals:
+        return None
+    s = _sum_wide_dec(t)
+    lo, hi = _LONG_MIN, _LONG_MAX
+    if s is not None:
+        hi = 10 ** min(38, _decimal_ps(t)[0] + 10) - 1
+        lo = -hi
+        vals = [_unscaled(v, s) for v in vals]
+        if not per_row:
+            vals = [sum(vals)]
+    total = 0
+    for v in vals:
+        total += v
+        if not lo <= total <= hi:
+            return None
+    return total if s is None else _at_scale(total, s)
+
+
+def _bloom_words(vals: list, m: int, k: int) -> list[int] | None:
+    """Driver twin of :func:`_bloom_word_frame` for one file: the dense
+    ``m/62``-word bitset of its non-null values, None when it has none
+    (the build's left join leaves such files without a bitset)."""
+    from quack_reduce_spark.operators.sketches import BLOOM_WORD_BITS
+
+    if not vals:
+        return None
+    words = [0] * (m // BLOOM_WORD_BITS)
+    for v in set(vals):
+        for p in _bloom_positions_py(v, m, k):
+            words[p // BLOOM_WORD_BITS] |= 1 << (p % BLOOM_WORD_BITS)
+    return words
+
+
+def _hll_registers(vals: list) -> list[int] | None:
+    """Driver twin of :func:`_hll_reg_frame` for one file: register
+    ``h >> HLL_W_BITS`` of ``md5_h32`` of each value's string
+    rendering keeps the max ``hll_rho`` of the low bits; None when the
+    file has no non-null value."""
+    from quack_reduce_spark.operators.sketches import HLL_M, HLL_W_BITS
+
+    if not vals:
+        return None
+    regs = [0] * HLL_M
+    low = (1 << HLL_W_BITS) - 1
+    for v in set(vals):
+        h = int(hashlib.md5(str(v).encode("utf-8")).hexdigest()[:8], 16)
+        i, rho = h >> HLL_W_BITS, HLL_W_BITS + 1 - (h & low).bit_length()
+        if rho > regs[i]:
+            regs[i] = rho
+    return regs
+
+
+def _delta_row(
+    fs: Any,
+    data_dir: str,
+    path: str,
+    cols: list[str],
+    types: dict[str, str],
+    bloom_doc: dict[str, dict],
+    ndv_doc: dict[str, dict],
+    session_tz: str | None,
+) -> dict:
+    """The manifest row of one fresh data file, statted on the driver:
+    the file is read once (local paths directly, URIs through the lake
+    filesystem), projected to its stats columns; a hive partition
+    column takes its value from the path; an empty file gets a
+    zero-row row."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from quack_reduce_spark.lake import _URI_RE
+
+    parts = _partition_values(data_dir, path)
+    local = not _URI_RE.match(path)
+    data = None if local else fs.read_bytes(path)
+    size = os.path.getsize(path) if local else len(data)
+    n, table = 0, None
+    if size:
+        pf = pq.ParquetFile(
+            path if local else pa.BufferReader(data), coerce_int96_timestamp_unit="us"
+        )
+        n = pf.metadata.num_rows
+        have = set(pf.schema_arrow.names)
+        table = pf.read(columns=[c for c in cols if c in have and c not in parts])
+    row: dict[str, Any] = {"file": _spark_file_path(path), "n_rows": n, "file_bytes": size}
+    per_row = all(
+        types[c] in _MUTABLE_STATS_TYPES or _decimal_ps(types[c]) is not None for c in cols
+    )
+    for c in cols:
+        t = types[c]
+        if c in parts:
+            vals = [_path_value(parts[c], t, session_tz)] * n
+        elif table is not None and c in table.column_names:
+            vals = _stats_values(table.column(c), t)
+        else:
+            vals = [None] * n  # a column this file lacks reads as NULL
+        present = [v for v in vals if v is not None]
+        row[f"min_{c}"] = min(present, key=_spark_order, default=None)
+        row[f"max_{c}"] = max(present, key=_spark_order, default=None)
+        row[f"nulls_{c}"] = n - len(present)
+        if _sum_col_ok(t) or _sum_wide_dec(t) is not None:
+            row[f"sum_{c}"] = _try_sum(present, t, per_row)
+        if c in bloom_doc:
+            row[f"bloom_{c}"] = _bloom_words(
+                present, int(bloom_doc[c]["m"]), int(bloom_doc[c]["k"])
+            )
+        if c in ndv_doc:
+            row[f"hll_{c}"] = _hll_registers(present)
+    return row
+
+
 def append_zonemap(
     spark: SparkSession,
     data_dir: str,
@@ -1411,18 +1679,19 @@ def append_zonemap(
     new_files: list[str] | None = None,
 ) -> int:
     """Incremental manifest maintenance after an APPEND: stat only the
-    files not yet covered (read directly by path — the existing
-    files' rows are never rescanned) and rewrite ONLY the touched
-    partition groups' manifests plus their manifest-list entries.
-    The delta's stats scan is the only Spark work (collected once;
-    with AQE, a shuffle job and a result job); the rest is driver-side
-    metadata work: the touched groups' old rows come from the
-    parsed-manifest cache (usually warm — the planners read the same
-    groups), empty delta files are covered, the group summaries fold,
-    and the merged groups are written through the manifest writer,
-    the list doc last. Untouched groups are never read or rewritten,
-    so maintenance cost tracks the DELTA even on million-file tables.
-    Returns the number of NEW files statted.
+    files not yet covered (the existing files' rows are never
+    rescanned) and rewrite ONLY the touched partition groups'
+    manifests plus their manifest-list entries. All of it is
+    driver-side metadata work, with no Spark job for a plain, bloom or
+    ndv manifest: each fresh file is read once with pyarrow and its
+    row built by :func:`_delta_row`, the touched groups' old rows come
+    from the parsed-manifest cache (usually warm — the planners read
+    the same groups), the group summaries fold, and the merged groups
+    are written through the manifest writer, the list doc last.
+    Untouched groups are never read or rewritten, so maintenance cost
+    tracks the DELTA even on million-file tables. Group-stats slices
+    and a drift-triggered histogram rebuild still run Spark. Returns
+    the number of NEW files statted.
 
     ``new_files``: when the appender knows its delta (a streaming
     sink's batch output, a lake commit's added files), pass it to skip
@@ -1430,6 +1699,8 @@ def append_zonemap(
     where the commit carries its own file list. Without it the delta
     is discovered by walking the data directory and diffing against
     the touched groups' manifests only."""
+    from quack_reduce_spark.lake import _fs_for
+
     known_cols = _upgrade_legacy(spark, data_dir)
     if known_cols and list(cols) != known_cols:
         raise ValueError(f"manifest covers {known_cols}, asked to append {list(cols)}")
@@ -1469,39 +1740,44 @@ def append_zonemap(
     ]
     if not fresh_files:
         return 0
-    # basePath keeps hive partition columns resolvable when reading
-    # explicit file paths, so partition columns remain valid stats_cols
-    reader = spark.read.option("basePath", data_dir)
     types = dict((doc or {}).get("types") or {})
-    if cols and all(c in types for c in cols):
-        # the stats columns' recorded source types ARE the read schema:
-        # passing it skips Spark's footer-inference job, which leaves
-        # the delta stats collect as the append's only Spark work
-        reader = reader.schema(
-            ", ".join(f"`{c.replace('`', '``')}` {types[c]}" for c in cols)
-        )
-    df = reader.parquet(*fresh_files)
-    types = types or _source_types(df, cols)
-    fresh = _stats_frame(df, cols, types)
+    if not all(c in types for c in cols):
+        from quack_reduce_spark.sources import read_parquet_table
+
+        # a doc without recorded types: the (memoized) table schema
+        types = {**_source_types(read_parquet_table(spark, data_dir), cols), **types}
     bloom_doc = dict((doc or {}).get("bloom") or {})
-    if bloom_doc:
-        # fingerprint the DELTA files with the manifest's recorded
-        # m/k — a delta file larger than the build's sizing basis gets
-        # a denser (higher-fp) bitset, never a false negative
-        fresh = _attach_blooms(df, fresh, bloom_doc)
     ndv_doc = dict((doc or {}).get("ndv") or {})
-    if ndv_doc:
-        # register-sketch the delta files; the table/slice merge stays
-        # exact because register max is associative over files
-        fresh = _attach_ndv(df, fresh, list(ndv_doc))
+    session_tz = (
+        spark.conf.get("spark.sql.session.timeZone")
+        if "timestamp" in types.values()
+        else None
+    )
+    fs = _fs_for(data_dir)
+    # a delta file larger than the build's sizing basis gets a denser
+    # (higher-fp) bitset at the recorded m/k, never a false negative;
+    # HLL registers merge exactly because register max is associative
+    rows = [
+        _delta_row(fs, data_dir, p, cols, types, bloom_doc, ndv_doc, session_tz)
+        for p in fresh_files
+    ]
+    schema = _stats_schema(cols, types, list(bloom_doc), list(ndv_doc))
     gs_doc = dict((doc or {}).get("group_stats") or {})
+    if gs_doc:
+        # group-stats slices are still a Spark pass over the delta
+        # files: basePath keeps hive partition columns resolvable when
+        # reading explicit paths, and the recorded source types are the
+        # read schema, which skips Spark's footer-inference job
+        delta = spark.read.option("basePath", data_dir).schema(
+            ", ".join(f"`{c.replace('`', '``')}` {types[c]}" for c in cols)
+        ).parquet(*fresh_files)
     for c, cfg in gs_doc.items():
         # per-group partials for the DELTA files only (existing files'
         # rows are immutable under the append contract) — appended to
         # the per-column stats table; the per-file cap applies to each
         # new file independently
         mg = int(cfg.get("max_groups", GROUP_STATS_MAX_PER_FILE))
-        gsf = _group_stats_frame(df, c, cols, types, mg)
+        gsf = _group_stats_frame(delta, c, cols, types, mg)
         gpath = _gstats_path(data_dir, c)
         # CRASH-SAFETY (r15): this parquet append commits BEFORE the
         # _write_list below, so a maintenance run that dies in between
@@ -1519,9 +1795,6 @@ def append_zonemap(
         # to wrong answers.
         suspect_crash = True
         try:
-            from quack_reduce_spark.lake import _fs_for
-
-            fs = _fs_for(data_dir)
             lk = fs.stat_key(_list_path(data_dir))
             gk = fs.stat_key(gpath)
             suspect_crash = lk is None or gk is None or gk[0] >= lk[0]
@@ -1547,10 +1820,6 @@ def append_zonemap(
         else:
             entries = int(cfg.get("entries", 0)) + n_new
         gs_doc[c] = {**cfg, "entries": entries}
-    schema = fresh.schema
-    rows = _cover_empty_files(
-        data_dir, schema, [r.asDict() for r in fresh.collect()], fresh_files
-    )
     # merge back ONLY the old rows of groups that actually gained
     # files: anything else would rewrite untouched partitions'
     # manifests. Old rows are the cache's shared dicts — read only.

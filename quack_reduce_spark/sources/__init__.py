@@ -38,14 +38,23 @@ def _nanos_columns(path: str) -> list[str]:
 #   overwrites are always picked up and every action computes from the
 #   parquet inputs as they are NOW; no data, no results, no plans are
 #   cached.
-# - the entry is valid while the path's SIGNATURE is unchanged: the
-#   root's mtime plus (name, mtime, size) of every first-level entry
-#   and of every entry inside a first-level directory. Replacing or
-#   rewriting a root file or a file in a hive partition dir
-#   (``part=1/x.parquet``) changes it and re-infers; a directory's own
-#   mtime only moves when entries come or go, so the file stats are
-#   what catch an in-place rewrite. Deeper nesting is covered only by
-#   its directories' mtimes.
+# - the entry carries the path's SIGNATURE: (name, mtime, size, is_dir)
+#   of every entry Spark's file index sees (``_visible``) at the first
+#   level and inside first-level directories. Hidden files (``_SUCCESS``,
+#   ``.crc`` sidecars, ``_zonemap/``) never enter it.
+# - an unchanged signature serves the entry. A changed one keeps it only
+#   for a PURE APPEND (``_pure_append``): no old visible file changed or
+#   went away (a first-level directory's own mtime may move, as adding
+#   a file moves it), no directory was added, no ``_metadata`` /
+#   ``_common_metadata`` summary changed, and every added ``.parquet``
+#   file's Spark row metadata (its footer's
+#   ``org.apache.spark.sql.parquet.row.metadata``) parses to the
+#   memoized DATA schema (the table schema without its partition
+#   columns). So a commit's ``register`` lists files but infers nothing.
+#   Anything else re-infers: a new column, a file without Spark
+#   metadata, a new partition directory, an in-place rewrite of
+#   ``part=1/x.parquet`` (its mtime/size move although no directory
+#   mtime does). Deeper nesting is covered by its directories' mtimes.
 # - one entry per absolute path: a new signature REPLACES the old
 #   entry, so the memo is bounded by the number of distinct tables.
 # - nanos-bearing tables memoize the RAW (longs) read schema, whether
@@ -56,26 +65,106 @@ def _nanos_columns(path: str) -> list[str]:
 #   AnalysisException fallback (pyarrow could not probe the path)
 #   converts no columns but still needed the conf. mergeSchema reads
 #   never memoize (schema-evolution dirs must see real footers).
-# value: (signature, raw_read_schema, needs_nanos_conf, nanos_column_names)
+# value: (signature, raw_read_schema, needs_nanos_conf,
+#         nanos_column_names, data_schema)
 _SCHEMA_MEMO: dict[str, tuple] = {}
+_ROW_METADATA = b"org.apache.spark.sql.parquet.row.metadata"
+_SUMMARIES = ("_metadata", "_common_metadata")
+
+
+def _visible(name: str) -> bool:
+    """Spark's file-index visibility rule (``shouldFilterOutPathName``):
+    ``_``/``.`` names are hidden, except ``_k=v`` partition directories
+    and the ``_metadata``/``_common_metadata`` summaries; ``._COPYING_``
+    files are hidden."""
+    if name.startswith(_SUMMARIES):
+        return True
+    return not (
+        (name.startswith("_") and "=" not in name)
+        or name.startswith(".")
+        or name.endswith("._COPYING_")
+    )
 
 
 def _memo_sig(path: str) -> tuple:
-    st = os.stat(path)
     if not os.path.isdir(path):
+        st = os.stat(path)
         return (st.st_mtime_ns, st.st_size)
     entries = []
 
     def scan(d: str, prefix: str, depth: int) -> None:
         with os.scandir(d) as it:
             for e in it:
-                est = e.stat()
-                entries.append((prefix + e.name, est.st_mtime_ns, est.st_size))
-                if depth and e.is_dir():
+                if not _visible(e.name):
+                    continue
+                est, is_dir = e.stat(), e.is_dir()
+                entries.append((prefix + e.name, est.st_mtime_ns, est.st_size, is_dir))
+                if depth and is_dir:
                     scan(e.path, f"{prefix}{e.name}/", depth - 1)
 
     scan(path, "", 1)
-    return (st.st_mtime_ns, tuple(sorted(entries)))
+    return tuple(sorted(entries))
+
+
+def _as_nullable(dt):
+    """``dt`` with every field, element and value nullable — what a file
+    source does to the schema it infers."""
+    from pyspark.sql import types as T
+
+    if isinstance(dt, T.StructType):
+        return T.StructType(
+            [T.StructField(f.name, _as_nullable(f.dataType), True, f.metadata) for f in dt.fields]
+        )
+    if isinstance(dt, T.ArrayType):
+        return T.ArrayType(_as_nullable(dt.elementType), True)
+    if isinstance(dt, T.MapType):
+        return T.MapType(_as_nullable(dt.keyType), _as_nullable(dt.valueType), True)
+    return dt
+
+
+def _data_schema(schema, sig: tuple):
+    """``schema`` without the partition columns the signature's
+    ``k=v`` directories name."""
+    from pyspark.sql import types as T
+
+    parts = {
+        seg.split("=", 1)[0]
+        for e in sig
+        if isinstance(e, tuple) and e[3]
+        for seg in e[0].split("/")
+        if "=" in seg
+    }
+    return _as_nullable(T.StructType([f for f in schema.fields if f.name not in parts]))
+
+
+def _pure_append(path: str, old: tuple, new: tuple, data_schema) -> bool:
+    """Does directory signature ``new`` only ADD data files of the
+    memoized ``data_schema`` to ``old``? (See the memo comment above.)"""
+    import json
+
+    import pyarrow.parquet as pq
+    from pyspark.sql import types as T
+
+    if not all(isinstance(e, tuple) for e in (*old, *new)):
+        return False  # a file path's signature, or a file/dir swap
+    now = {e[0]: e[1:] for e in new}
+    for name, mtime, size, is_dir in old:
+        got = now.pop(name, None)
+        if got is None or got[2] != is_dir:
+            return False
+        if got != (mtime, size, is_dir) and not (is_dir and "/" not in name):
+            return False  # a changed file, or a nested dir's mtime moved
+    for name, (_, _, is_dir) in now.items():
+        base = name.rsplit("/", 1)[-1]
+        if is_dir or base.startswith(_SUMMARIES) or not base.endswith(".parquet"):
+            return False
+        try:
+            raw = (pq.read_metadata(os.path.join(path, name)).metadata or {}).get(_ROW_METADATA)
+            if raw is None or _as_nullable(T.StructType.fromJson(json.loads(raw))) != data_schema:
+                return False
+        except (OSError, ValueError, KeyError, TypeError):
+            return False  # unreadable or foreign footer: re-infer
+    return True
 
 
 def read_parquet_table(spark: SparkSession, path: str, merge_schema: bool = False) -> DataFrame:
@@ -105,8 +194,10 @@ def read_parquet_table(spark: SparkSession, path: str, merge_schema: bool = Fals
         except Exception:
             key = None  # can't stat (glob?) — legacy path, no memo
         hit = _SCHEMA_MEMO.get(key) if key is not None else None
+        if hit is not None and hit[0] != sig and _pure_append(path, hit[0], sig, hit[4]):
+            hit = _SCHEMA_MEMO[key] = (sig, *hit[1:])
         if hit is not None and hit[0] == sig:
-            _, schema, needs_conf, nanos = hit
+            _, schema, needs_conf, nanos, _ = hit
             if not needs_conf:
                 return spark.read.schema(schema).parquet(path)
             prior = spark.conf.get(_NANOS_CONF, None)
@@ -153,7 +244,9 @@ def read_parquet_table(spark: SparkSession, path: str, merge_schema: bool = Fals
                     df = df.withColumn(name, F.timestamp_micros(F.expr(f"`{name}` div 1000")))
                     converted.append(name)
         if key is not None:
-            _SCHEMA_MEMO[key] = (sig, raw_schema, needs_conf, converted)
+            _SCHEMA_MEMO[key] = (
+                sig, raw_schema, needs_conf, converted, _data_schema(raw_schema, sig)
+            )
         return df
     finally:
         if prior is None:

@@ -102,3 +102,27 @@ def test_load_gate_defaults():
     env = os.environ
     assert bench.LOAD_GATE == float(env.get("SPARK_GRAFT_BENCH_LOAD_GATE", "2.5"))
     assert bench.LOAD_WAIT == float(env.get("SPARK_GRAFT_BENCH_LOAD_WAIT", "60"))
+
+
+def test_concurrent_burst_runs_without_the_result_cache(monkeypatch):
+    """The concurrent leg replays the serial leg's 16 strings on one
+    Engine: with the result cache on, it would time cache hits, not
+    concurrent execution. Pinned without Spark by recording the
+    Engine's kwargs and stopping right after construction."""
+    from quack_reduce_spark import engine
+
+    made = []
+
+    class Stop(Exception):
+        pass
+
+    def fake_engine(**kwargs):
+        made.append(kwargs)
+        raise Stop
+
+    monkeypatch.setattr(engine, "Engine", fake_engine)
+    try:
+        bench._concurrent_burst(spark=None, sf_dir="unused")
+    except Stop:
+        pass
+    assert made == [{"spark": None, "result_cache": False}]

@@ -232,3 +232,88 @@ def test_nanos_fallback_read_replays_conf_on_memo_hit(spark, tmp_path, monkeypat
     second = read_parquet_table(spark, p)
     assert second.schema == first.schema
     assert second.collect() == first.collect()
+
+
+def _jobs(spark, fn):
+    """``(fn(), number of Spark jobs it ran)``."""
+    st = spark.sparkContext.statusTracker()
+    before = set(st.getJobIdsForGroup(None))
+    out = fn()
+    return out, len(set(st.getJobIdsForGroup(None)) - before)
+
+
+def _kp(spark, lo, hi):
+    return spark.range(lo, hi).select(F.col("id").alias("k"), (F.col("id") % 2).alias("p"))
+
+
+def test_register_after_spark_append_runs_no_job(spark, tmp_path):
+    # a Spark-written append of same-schema files (at the root, or into
+    # existing partition dirs) keeps the memo entry: register lists the
+    # new files, infers nothing, and sees the new rows
+    import os
+
+    from quack_reduce_spark import sources
+    from quack_reduce_spark.engine import Engine
+
+    eng = Engine(spark=spark)
+    for part in (None, "p"):
+        root = str(tmp_path / f"append_{part}")
+
+        def write(lo, hi, mode):
+            w = _kp(spark, lo, hi).coalesce(1).write.mode(mode)
+            (w.partitionBy(part) if part else w).parquet(root)
+
+        write(0, 100, "overwrite")
+        eng.register("memo_append", root)
+        write(100, 150, "append")
+        _, jobs = _jobs(spark, lambda: eng.register("memo_append", root))
+        assert jobs == 0, part
+        assert spark.table("memo_append").count() == 150
+        assert sources._SCHEMA_MEMO[os.path.abspath(root)][0] == sources._memo_sig(root)
+    spark.catalog.dropTempView("memo_append")
+
+
+def test_schema_memo_reinfers_unless_a_pure_append(spark, tmp_path):
+    # each change below is more than an append of same-schema Spark
+    # files, so the next read re-infers (one job) and serves what a
+    # fresh inference gives
+    import glob
+    import os
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from quack_reduce_spark import sources
+
+    def new_column(root):
+        _kp(spark, 100, 110).withColumn("extra", F.lit("x")).coalesce(1).write.mode(
+            "append"
+        ).parquet(root)
+
+    def pyarrow_file(root):
+        ks = pa.array([200, 201], pa.int64())
+        pq.write_table(pa.table({"k": ks, "p": ks}), os.path.join(root, "extra.parquet"))
+
+    def new_partition(root):
+        _kp(spark, 300, 310).withColumn("p", F.lit(7).cast("long")).coalesce(1).write.mode(
+            "append"
+        ).partitionBy("p").parquet(root)
+
+    def rewrite(root):
+        (f,) = glob.glob(os.path.join(root, "part-*.parquet"))
+        pq.write_table(pa.table({"k": [9], "q": ["new"]}), f)
+        d, name = os.path.split(f)
+        os.remove(os.path.join(d, f".{name}.crc"))  # Hadoop checks it on read
+
+    for change, part in (
+        (new_column, None), (pyarrow_file, None), (new_partition, "p"), (rewrite, None)
+    ):
+        root = str(tmp_path / change.__name__)
+        w = _kp(spark, 0, 100).coalesce(1).write
+        (w.partitionBy(part) if part else w).parquet(root)
+        read_parquet_table(spark, root)
+        change(root)
+        df, jobs = _jobs(spark, lambda: read_parquet_table(spark, root))
+        assert jobs == 1, change.__name__
+        assert df.schema == spark.read.parquet(root).schema, change.__name__
+        assert sources._SCHEMA_MEMO[os.path.abspath(root)][0] == sources._memo_sig(root)
