@@ -24,7 +24,7 @@ unit:
 # budgets, the schema memo, and the build-vs-append stats differential
 commit-budget:
 	python -m pytest tests/test_zonemap_manifests.py tests/test_sources.py -q \
-	  -p no:cacheprovider -k "spark_job or no_job or memo or full_build or wide_decimal"
+	  -p no:cacheprovider -k "spark_job or no_job or memo or full_build or wide_decimal or binds_file_columns or row_groups"
 
 # DuckDB differential harness over the whole inventory
 oracle:

@@ -2662,10 +2662,12 @@ def _discover_partition_cols(path: str) -> list[str]:
 def _count_parquet_files(path: str) -> int:
     """Recursive DATA parquet file count (correct on hive-partitioned
     trees, where a flat glob would see zero files), honoring Spark's
-    hidden-name rule — ``_``/``.``-prefixed entries (the ``_zonemap``
-    manifest tree, ``_SUCCESS``) are metadata, not table files. Local
-    / ``file:`` paths only (maintenance stats)."""
+    hidden-name rule (``sources._hidden``) — the ``_zonemap`` manifest
+    tree and ``_SUCCESS`` are metadata, not table files. Local /
+    ``file:`` paths only (maintenance stats)."""
     import os
+
+    from quack_reduce_spark.sources import _hidden
 
     if path.startswith("file:"):
         path = path[len("file:"):]
@@ -2673,12 +2675,8 @@ def _count_parquet_files(path: str) -> int:
         return 1 if path.endswith(".parquet") else 0
     n = 0
     for dirpath, dirnames, files in os.walk(path):
-        dirnames[:] = [d for d in dirnames if not d.startswith(("_", "."))]
-        n += sum(
-            1
-            for f in files
-            if f.endswith(".parquet") and not f.startswith(("_", "."))
-        )
+        dirnames[:] = [d for d in dirnames if not _hidden(d)]
+        n += sum(1 for f in files if f.endswith(".parquet") and not _hidden(f))
     return n
 
 

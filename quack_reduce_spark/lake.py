@@ -44,6 +44,7 @@ rename`` on HDFS-like stores where rename is atomic.
 
 from __future__ import annotations
 
+import io
 import json
 import os
 import re
@@ -102,6 +103,9 @@ class _LocalFS:
     def read_bytes(self, p: str) -> bytes:
         with open(p, "rb") as fh:
             return fh.read()
+
+    def open_input(self, p: str):
+        return open(p, "rb")
 
     def write_bytes_atomic(self, p: str, data: bytes) -> None:
         # the temp name is dot-hidden, so a concurrent directory scan
@@ -228,6 +232,12 @@ class _HadoopFS:
         finally:
             stream.close()
 
+    def open_input(self, p: str):
+        """A seekable binary file over ``p`` whose every read is one
+        ranged py4j call, so a parquet reader fetches the footer and
+        the column chunks it projects, not the whole object."""
+        return _HadoopInput(self, p)
+
     def write_bytes_atomic(self, p: str, data: bytes) -> None:
         # FileSystem.create(overwrite=true): one small PUT on S3A
         # (atomic object replace); HDFS overwrites via its own
@@ -304,6 +314,49 @@ class _HadoopFS:
     def set_mtime(self, p: str, t: float) -> None:
         # FileSystem.setTimes(path, mtime_ms, atime_ms); -1 = keep
         self._fs.setTimes(self._p(p), int(t * 1000), -1)
+
+
+class _HadoopInput(io.RawIOBase):
+    """Read-only, seekable view of one Hadoop file (see
+    :meth:`_HadoopFS.open_input`)."""
+
+    def __init__(self, fs: _HadoopFS, p: str) -> None:
+        super().__init__()
+        self._io = fs._jvm.org.apache.commons.io.IOUtils
+        self._size = fs.size(p) or 0
+        self._stream = fs._fs.open(fs._p(p))
+        self._pos = 0
+
+    def readable(self) -> bool:
+        return True
+
+    def seekable(self) -> bool:
+        return True
+
+    def tell(self) -> int:
+        return self._pos
+
+    def seek(self, offset: int, whence: int = io.SEEK_SET) -> int:
+        base = {io.SEEK_SET: 0, io.SEEK_CUR: self._pos, io.SEEK_END: self._size}[whence]
+        self._pos = base + offset
+        return self._pos
+
+    def read(self, n: int = -1) -> bytes:
+        n = self._size - self._pos if n is None or n < 0 else min(n, self._size - self._pos)
+        if n <= 0:
+            return b""
+        self._stream.seek(self._pos)
+        data = bytes(self._io.toByteArray(self._stream, n))
+        self._pos += len(data)
+        return data
+
+    def readall(self) -> bytes:
+        return self.read(-1)
+
+    def close(self) -> None:
+        if not self.closed:
+            self._stream.close()
+        super().close()
 
 
 def _fs_for(path: str):

@@ -1355,11 +1355,13 @@ def ndv_config(data_dir: str) -> dict[str, dict]:
 
 def _data_files(data_dir: str) -> list[str]:
     """Recursive parquet-file listing under ``data_dir`` (hive
-    partition subdirs included), skipping hidden ``_``/``.`` names —
-    the same visibility rule Spark's file index applies. Goes through
-    the lake's filesystem dispatch, so URI paths (s3a/hdfs/file:) walk
-    the Hadoop FileSystem like every other metadata op."""
+    partition subdirs included), skipping the names Spark's file index
+    hides (``sources._hidden``: ``_``/``.`` names other than ``_k=v``
+    partition directories). Goes through the lake's filesystem
+    dispatch, so URI paths (s3a/hdfs/file:) walk the Hadoop FileSystem
+    like every other metadata op."""
     from quack_reduce_spark.lake import _fs_for, _join
+    from quack_reduce_spark.sources import _hidden
 
     fs = _fs_for(data_dir)
     out: list[str] = []
@@ -1367,7 +1369,7 @@ def _data_files(data_dir: str) -> list[str]:
     while stack:
         d = stack.pop()
         for name in fs.list_names(d):
-            if name.startswith(("_", ".")):
+            if _hidden(name):
                 continue
             p = _join(d, name)
             if fs.is_dir(p):
@@ -1418,9 +1420,11 @@ def _upgrade_legacy(spark: SparkSession, data_dir: str) -> list[str]:
 # + ``_stat_aggs``, ``_bloom_word_frame``, ``_hll_reg_frame``): the same
 # stats space (epoch micros, unscaled decimals), Spark's min/max order
 # (nulls skipped, NaN greatest, the first of equal values kept) and
-# try_sum (NULL on an overflow where the build's aggregate sees one,
-# :func:`_try_sum`). The table-scale ``write_zonemap`` stays a
-# distributed pass; the build-vs-append differential test in
+# try_sum (:func:`_sum_value`). The per-column work is pyarrow compute
+# kernels (min_max, sum, unique), so a large delta costs the driver a
+# projected read and a few vectorized passes; only Bloom and HLL hash
+# each DISTINCT value in Python. The table-scale ``write_zonemap``
+# stays a distributed pass; the build-vs-append differential test in
 # tests/test_zonemap_manifests.py holds the two to the same rows.
 
 _EXACT = _decimal.Context(prec=100)  # wide-decimal arithmetic, no rounding
@@ -1521,96 +1525,186 @@ def _path_value(v: str | None, t: str, session_tz: str | None) -> Any:
     raise ValueError(f"partition column of type {t!r} cannot be statted")
 
 
-def _stats_values(col: Any, t: str) -> list:
-    """One file column's values in STATS space, in row order — the
-    driver twin of :func:`_stats_select_cols`. Session-zoned timestamps
-    become epoch micros (nanos floor-divide; INT96 is read at µs, which
-    truncates the same way), decimal(p<=18) unscaled ints. Everything
-    else is valued as a ``collect()`` gives it."""
+def _match_column(c: str, names: Any, case_sensitive: bool) -> str | None:
+    """The file column Spark's parquet reader binds stats column ``c``
+    to: the same name when ``spark.sql.caseSensitive`` is on, else the
+    one name equal to it ignoring case (Spark refuses a file where
+    several are)."""
+    if case_sensitive:
+        return c if c in names else None
+    hits = [f for f in names if f.lower() == c.lower()]
+    if len(hits) > 1:
+        raise ValueError(f"stats column {c!r} matches {hits} ignoring case")
+    return hits[0] if hits else None
+
+
+def _stats_array(col: Any, t: str) -> tuple[Any, Any]:
+    """One file column in STATS space — the driver twin of
+    :func:`_stats_select_cols` — as ``(array, to_stats)``: decimal
+    (p<=18) becomes its unscaled longs; a session-zoned timestamp
+    becomes its raw epoch count, which ``to_stats`` turns into micros
+    one value at a time (nanos floor-divide; INT96 is read at µs, which
+    truncates the same way). ``to_stats`` is None when the array is
+    already in stats space."""
     import pyarrow as pa
+    import pyarrow.compute as pc
 
-    if pa.types.is_timestamp(col.type) and t == "timestamp":
-        raw = col.cast(pa.int64()).to_pylist()
-        if col.type.unit == "us":
-            return raw
-        if col.type.unit == "ns":
-            return [None if v is None else v // 1000 for v in raw]
-        mul = 1000 if col.type.unit == "ms" else 1_000_000
-        return [None if v is None else v * mul for v in raw]
+    if t == "timestamp" and pa.types.is_timestamp(col.type):
+        unit = col.type.unit
+        if unit == "ns":
+            return col.cast(pa.int64()), lambda v: v // 1000
+        mul = {"us": 1, "ms": 1000, "s": 1_000_000}[unit]
+        return col.cast(pa.int64()), (None if mul == 1 else lambda v: v * mul)
     s = _unscaled_decimal(t)
-    if s is not None:
-        return [None if v is None else _unscaled(v, s) for v in col.to_pylist()]
-    return col.to_pylist()
+    if s is not None and pa.types.is_decimal(col.type):
+        ten_s = pa.scalar(_decimal.Decimal(10) ** s, pa.decimal128(s + 1, 0))
+        return pc.multiply(col, ten_s).cast(pa.int64()), None
+    return col, None
 
 
-# Stats types an UnsafeRow updates in place. When every stats column's
-# min/max buffer is one of these, Spark runs the build as a hash
-# aggregate, whose buffer re-fits a wide-decimal running sum to its
-# type on every row; a string or binary min/max makes it a sort
-# aggregate, which sums wide decimals unbounded and checks the total.
-_MUTABLE_STATS_TYPES = {
-    "boolean", "byte", "short", "integer", "long", "float", "double",
-    "date", "timestamp", "timestamp_ntz",
-}
+def _long_total(arr: Any, present: int, lo: int, hi: int, start: int) -> int | None:
+    """``start`` plus the exact sum of an integer stats array, None once
+    a running total leaves int64 (Spark's ``try_sum`` over longs)."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    if abs(start) + present * max(-lo, hi) <= _LONG_MAX:
+        return start + pc.sum(arr).as_py()  # no running total can overflow
+    try:
+        vals = pc.drop_null(arr).cast(pa.int64())
+        return pc.cumulative_sum_checked(vals, start=start)[-1].as_py()
+    except pa.ArrowInvalid:
+        return None
 
 
-def _try_sum(vals: list, t: str, per_row: bool) -> Any:
-    """Spark's ``try_sum`` over one file's non-null stats values in row
-    order: NULL with no values, and NULL once a running long total
-    overflows, even if later rows would bring it back. A wide decimal
-    sums as ``decimal(min(38, p + 10), s)``: NULL once a running total
-    leaves it when ``per_row`` (a hash-aggregated build), else when the
-    file's total does."""
-    if not vals:
+def _sum_value(total: Any, t: str) -> Any:
+    """What ``try_sum`` stores for a file whose non-null stats values
+    total ``total`` (None: no values, or a running long overflow): a
+    long outside int64 is NULL, and a wide decimal is NULL when the
+    total leaves ``decimal(min(38, p + 10), s)``. (Whether Spark nulls
+    a wide-decimal sum on a RUNNING overflow depends on its physical
+    aggregate; consumers read NULL as "unavailable", so the exact total
+    is sound either way.)"""
+    if total is None:
         return None
     s = _sum_wide_dec(t)
-    lo, hi = _LONG_MIN, _LONG_MAX
-    if s is not None:
-        hi = 10 ** min(38, _decimal_ps(t)[0] + 10) - 1
-        lo = -hi
-        vals = [_unscaled(v, s) for v in vals]
-        if not per_row:
-            vals = [sum(vals)]
-    total = 0
-    for v in vals:
-        total += v
-        if not lo <= total <= hi:
-            return None
-    return total if s is None else _at_scale(total, s)
+    if s is None:
+        return total if _LONG_MIN <= total <= _LONG_MAX else None
+    return total if abs(_unscaled(total, s)) < 10 ** min(38, _decimal_ps(t)[0] + 10) else None
 
 
-def _bloom_words(vals: list, m: int, k: int) -> list[int] | None:
+class _ColumnFold:
+    """One file column's stats in stats space, folded row group by row
+    group (so the driver holds one group's column at a time) with
+    pyarrow compute: the non-null count, Spark's min/max (nulls
+    skipped, NaN greatest, of equal values the first — so ±0.0 keeps
+    the sign Spark keeps), the exact running total of a summed type
+    (None once a long running total overflows) and, for a sketched
+    column, Bloom words / HLL registers, which merge across groups by
+    OR / max."""
+
+    def __init__(self, t: str, bloom: dict | None, ndv: bool) -> None:
+        self.t, self.bloom, self.ndv = t, bloom, ndv
+        self.present, self.lo, self.hi = 0, None, None
+        self.total: Any = 0
+        self.words: list[int] | None = None
+        self.regs: list[int] | None = None
+
+    def add(self, arr: Any) -> None:
+        import pyarrow as pa
+        import pyarrow.compute as pc
+
+        arr, to_stats = _stats_array(arr, self.t)
+        present = len(arr) - arr.null_count
+        if not present:
+            return
+        mm = pc.min_max(arr)
+        lo, hi = mm["min"].as_py(), mm["max"].as_py()
+        if pa.types.is_floating(arr.type):
+            if lo == 0 or hi == 0:  # Spark keeps the first zero, with its sign
+                first = arr[pc.index(arr, pa.scalar(0.0, arr.type)).as_py()].as_py()
+                lo, hi = (first if lo == 0 else lo), (first if hi == 0 else hi)
+            nans = pc.sum(pc.is_nan(arr)).as_py()
+            if nans:
+                hi = float("nan")
+                lo = hi if nans == present else lo
+        if _sum_col_ok(self.t) and self.total is not None:
+            self.total = _long_total(arr, present, lo, hi, self.total)
+        elif _sum_wide_dec(self.t) is not None:
+            part = pc.sum(arr.cast(pa.decimal256(76, _sum_wide_dec(self.t)))).as_py()
+            self.total = _EXACT.add(self.total, part)
+        if to_stats is not None:
+            lo, hi = to_stats(lo), to_stats(hi)
+        if not self.present or _spark_order(lo) < _spark_order(self.lo):
+            self.lo = lo
+        if not self.present or _spark_order(self.hi) < _spark_order(hi):
+            self.hi = hi
+        self.present += present
+        if self.bloom or self.ndv:
+            distinct = pc.unique(pc.drop_null(arr)).to_pylist()
+            if to_stats is not None:
+                distinct = [to_stats(v) for v in distinct]
+            self.add_distinct(distinct)
+
+    def add_distinct(self, vals: list) -> None:
+        heads = _md5_heads(vals)
+        if self.bloom:
+            w = _bloom_words(heads, int(self.bloom["m"]), int(self.bloom["k"]))
+            self.words = w if self.words is None else [a | b for a, b in zip(self.words, w)]
+        if self.ndv:
+            r = _hll_registers(heads)
+            self.regs = r if self.regs is None else [max(a, b) for a, b in zip(self.regs, r)]
+
+
+def _md5_heads(vals: list) -> tuple[Any, Any]:
+    """The two leading big-endian 32-bit words of ``md5(str(v))`` per
+    value, as int64 arrays — ``md5_h32`` and the Bloom probes' h1/h2.
+    One digest per DISTINCT value feeds both sketches."""
+    import numpy as np
+
+    buf = b"".join(hashlib.md5(str(v).encode("utf-8")).digest()[:8] for v in vals)
+    h = np.frombuffer(buf, dtype=">u4").astype(np.int64).reshape(-1, 2)
+    return h[:, 0], h[:, 1]
+
+
+def _bloom_words(heads: tuple[Any, Any], m: int, k: int) -> list[int] | None:
     """Driver twin of :func:`_bloom_word_frame` for one file: the dense
-    ``m/62``-word bitset of its non-null values, None when it has none
-    (the build's left join leaves such files without a bitset)."""
+    ``m/62``-word bitset of its distinct non-null values' probes
+    (:func:`_bloom_positions_py`'s math over :func:`_md5_heads`), None
+    when it has none (the build's left join leaves such files without
+    a bitset)."""
+    import numpy as np
+
     from quack_reduce_spark.operators.sketches import BLOOM_WORD_BITS
 
-    if not vals:
+    h1, h2 = heads
+    if not len(h1):
         return None
-    words = [0] * (m // BLOOM_WORD_BITS)
-    for v in set(vals):
-        for p in _bloom_positions_py(v, m, k):
-            words[p // BLOOM_WORD_BITS] |= 1 << (p % BLOOM_WORD_BITS)
-    return words
+    i = np.arange(k, dtype=np.int64)
+    pos = (h1[:, None] + i * (h2 | 1)[:, None] + (i * i * i - i) // 6) % m
+    words = np.zeros(m // BLOOM_WORD_BITS, dtype=np.int64)
+    np.bitwise_or.at(
+        words, pos // BLOOM_WORD_BITS, np.left_shift(np.int64(1), pos % BLOOM_WORD_BITS)
+    )
+    return words.tolist()
 
 
-def _hll_registers(vals: list) -> list[int] | None:
+def _hll_registers(heads: tuple[Any, Any]) -> list[int] | None:
     """Driver twin of :func:`_hll_reg_frame` for one file: register
-    ``h >> HLL_W_BITS`` of ``md5_h32`` of each value's string
-    rendering keeps the max ``hll_rho`` of the low bits; None when the
-    file has no non-null value."""
+    ``h >> HLL_W_BITS`` of each distinct value's ``md5_h32`` keeps the
+    max ``hll_rho`` of the low bits (``frexp``'s exponent is the exact
+    bit length); None when the file has no non-null value."""
+    import numpy as np
+
     from quack_reduce_spark.operators.sketches import HLL_M, HLL_W_BITS
 
-    if not vals:
+    h = heads[0]
+    if not len(h):
         return None
-    regs = [0] * HLL_M
-    low = (1 << HLL_W_BITS) - 1
-    for v in set(vals):
-        h = int(hashlib.md5(str(v).encode("utf-8")).hexdigest()[:8], 16)
-        i, rho = h >> HLL_W_BITS, HLL_W_BITS + 1 - (h & low).bit_length()
-        if rho > regs[i]:
-            regs[i] = rho
-    return regs
+    bits = np.frexp((h & ((1 << HLL_W_BITS) - 1)).astype(np.float64))[1]
+    regs = np.zeros(HLL_M, dtype=np.int64)
+    np.maximum.at(regs, h >> HLL_W_BITS, HLL_W_BITS + 1 - bits)
+    return regs.tolist()
 
 
 def _delta_row(
@@ -1622,53 +1716,62 @@ def _delta_row(
     bloom_doc: dict[str, dict],
     ndv_doc: dict[str, dict],
     session_tz: str | None,
+    case_sensitive: bool,
 ) -> dict:
-    """The manifest row of one fresh data file, statted on the driver:
-    the file is read once (local paths directly, URIs through the lake
-    filesystem), projected to its stats columns; a hive partition
-    column takes its value from the path; an empty file gets a
-    zero-row row."""
-    import pyarrow as pa
+    """The manifest row of one fresh data file, statted on the driver
+    with pyarrow compute: the file is read once through the lake
+    filesystem, one row group at a time, projected to its stats
+    columns (a URI's reads are ranged, so only the footer and those
+    column chunks travel), and each column folds into a
+    :class:`_ColumnFold`. File columns bind to stats columns as Spark
+    binds them (:func:`_match_column`); a hive partition column takes
+    its value from the path; an empty file gets a zero-row row. A
+    non-empty file without a stats column raises: its manifest needs a
+    ``write_zonemap`` rebuild."""
     import pyarrow.parquet as pq
 
-    from quack_reduce_spark.lake import _URI_RE
-
     parts = _partition_values(data_dir, path)
-    local = not _URI_RE.match(path)
-    data = None if local else fs.read_bytes(path)
-    size = os.path.getsize(path) if local else len(data)
-    n, table = 0, None
+    in_path = {c: _match_column(c, parts, case_sensitive) for c in cols}
+    folds = {c: _ColumnFold(types[c], bloom_doc.get(c), c in ndv_doc) for c in cols}
+    size = fs.size(path)
+    n = 0
     if size:
-        pf = pq.ParquetFile(
-            path if local else pa.BufferReader(data), coerce_int96_timestamp_unit="us"
-        )
-        n = pf.metadata.num_rows
-        have = set(pf.schema_arrow.names)
-        table = pf.read(columns=[c for c in cols if c in have and c not in parts])
+        with fs.open_input(path) as fh:
+            pf = pq.ParquetFile(fh, coerce_int96_timestamp_unit="us")
+            n = pf.metadata.num_rows
+            names = pf.schema_arrow.names
+            src = {c: _match_column(c, names, case_sensitive) for c in cols if not in_path[c]}
+            missing = sorted(c for c, f in src.items() if f is None)
+            if n and missing:
+                raise ValueError(
+                    f"{path} has no column {missing}: rebuild its zone map with write_zonemap"
+                )
+            read = sorted({f for f in src.values() if f is not None})
+            for i in range(pf.num_row_groups):
+                group = pf.read_row_group(i, columns=read)
+                for c, f in src.items():
+                    if f is not None:
+                        folds[c].add(group.column(f))
+    for c, p in in_path.items():
+        v = _path_value(parts[p], types[c], session_tz) if p else None
+        if v is not None and n:
+            fold = folds[c]
+            fold.present, fold.lo, fold.hi = n, v, v
+            if isinstance(v, (int, _decimal.Decimal)):
+                # a constant's running sum is monotone: it leaves a
+                # type exactly when the total does
+                fold.total = v * n if isinstance(v, int) else _EXACT.multiply(v, n)
+            fold.add_distinct([v])
     row: dict[str, Any] = {"file": _spark_file_path(path), "n_rows": n, "file_bytes": size}
-    per_row = all(
-        types[c] in _MUTABLE_STATS_TYPES or _decimal_ps(types[c]) is not None for c in cols
-    )
-    for c in cols:
-        t = types[c]
-        if c in parts:
-            vals = [_path_value(parts[c], t, session_tz)] * n
-        elif table is not None and c in table.column_names:
-            vals = _stats_values(table.column(c), t)
-        else:
-            vals = [None] * n  # a column this file lacks reads as NULL
-        present = [v for v in vals if v is not None]
-        row[f"min_{c}"] = min(present, key=_spark_order, default=None)
-        row[f"max_{c}"] = max(present, key=_spark_order, default=None)
-        row[f"nulls_{c}"] = n - len(present)
-        if _sum_col_ok(t) or _sum_wide_dec(t) is not None:
-            row[f"sum_{c}"] = _try_sum(present, t, per_row)
+    for c, fold in folds.items():
+        row[f"min_{c}"], row[f"max_{c}"] = fold.lo, fold.hi
+        row[f"nulls_{c}"] = n - fold.present
+        if _sum_col_ok(types[c]) or _sum_wide_dec(types[c]) is not None:
+            row[f"sum_{c}"] = _sum_value(fold.total if fold.present else None, types[c])
         if c in bloom_doc:
-            row[f"bloom_{c}"] = _bloom_words(
-                present, int(bloom_doc[c]["m"]), int(bloom_doc[c]["k"])
-            )
+            row[f"bloom_{c}"] = fold.words
         if c in ndv_doc:
-            row[f"hll_{c}"] = _hll_registers(present)
+            row[f"hll_{c}"] = fold.regs
     return row
 
 
@@ -1753,12 +1856,15 @@ def append_zonemap(
         if "timestamp" in types.values()
         else None
     )
+    case_sensitive = spark.conf.get("spark.sql.caseSensitive", "false").lower() == "true"
     fs = _fs_for(data_dir)
     # a delta file larger than the build's sizing basis gets a denser
     # (higher-fp) bitset at the recorded m/k, never a false negative;
     # HLL registers merge exactly because register max is associative
     rows = [
-        _delta_row(fs, data_dir, p, cols, types, bloom_doc, ndv_doc, session_tz)
+        _delta_row(
+            fs, data_dir, p, cols, types, bloom_doc, ndv_doc, session_tz, case_sensitive
+        )
         for p in fresh_files
     ]
     schema = _stats_schema(cols, types, list(bloom_doc), list(ndv_doc))

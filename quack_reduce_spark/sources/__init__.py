@@ -39,9 +39,10 @@ def _nanos_columns(path: str) -> list[str]:
 #   parquet inputs as they are NOW; no data, no results, no plans are
 #   cached.
 # - the entry carries the path's SIGNATURE: (name, mtime, size, is_dir)
-#   of every entry Spark's file index sees (``_visible``) at the first
-#   level and inside first-level directories. Hidden files (``_SUCCESS``,
-#   ``.crc`` sidecars, ``_zonemap/``) never enter it.
+#   of every data entry Spark's file index sees (not ``_hidden``) and of
+#   the ``_metadata`` / ``_common_metadata`` summaries, at the first
+#   level and inside first-level directories. Hidden files
+#   (``_SUCCESS``, ``.crc`` sidecars, ``_zonemap/``) never enter it.
 # - an unchanged signature serves the entry. A changed one keeps it only
 #   for a PURE APPEND (``_pure_append``): no old visible file changed or
 #   went away (a first-level directory's own mtime may move, as adding
@@ -72,14 +73,13 @@ _ROW_METADATA = b"org.apache.spark.sql.parquet.row.metadata"
 _SUMMARIES = ("_metadata", "_common_metadata")
 
 
-def _visible(name: str) -> bool:
-    """Spark's file-index visibility rule (``shouldFilterOutPathName``):
-    ``_``/``.`` names are hidden, except ``_k=v`` partition directories
-    and the ``_metadata``/``_common_metadata`` summaries; ``._COPYING_``
-    files are hidden."""
-    if name.startswith(_SUMMARIES):
-        return True
-    return not (
+def _hidden(name: str) -> bool:
+    """Is ``name`` a directory entry Spark's file index never reads as
+    data (``shouldFilterOutPathName`` / ``isDataPath``)? ``_``/``.``
+    names are, except ``_k=v`` partition directories, and so are
+    ``._COPYING_`` files. The one home of that rule: the schema memo's
+    signature and the zone-map file listing both apply it."""
+    return (
         (name.startswith("_") and "=" not in name)
         or name.startswith(".")
         or name.endswith("._COPYING_")
@@ -95,8 +95,8 @@ def _memo_sig(path: str) -> tuple:
     def scan(d: str, prefix: str, depth: int) -> None:
         with os.scandir(d) as it:
             for e in it:
-                if not _visible(e.name):
-                    continue
+                if _hidden(e.name) and not e.name.startswith(_SUMMARIES):
+                    continue  # summaries are not data, but feed inference
                 est, is_dir = e.stat(), e.is_dir()
                 entries.append((prefix + e.name, est.st_mtime_ns, est.st_size, is_dir))
                 if depth and is_dir:

@@ -5,6 +5,8 @@ Also pins the TIMESTAMP(NANOS) normalization (sources module)."""
 
 from __future__ import annotations
 
+import os
+
 import pyspark.sql.functions as F
 import pytest
 
@@ -317,3 +319,25 @@ def test_schema_memo_reinfers_unless_a_pure_append(spark, tmp_path):
         assert jobs == 1, change.__name__
         assert df.schema == spark.read.parquet(root).schema, change.__name__
         assert sources._SCHEMA_MEMO[os.path.abspath(root)][0] == sources._memo_sig(root)
+
+
+def test_memo_and_zonemap_listing_share_one_visibility_rule(tmp_path):
+    """The schema memo's signature and the zone-map file listing apply
+    one rule (``sources._hidden``): ``_k=v`` partition directories are
+    data, ``_SUCCESS``, ``.crc`` sidecars, ``._COPYING_`` files and
+    the ``_zonemap`` tree are not; the summaries enter only the
+    memo's signature."""
+    from quack_reduce_spark.operators.zonemaps import _data_files
+    from quack_reduce_spark.sources import _memo_sig
+
+    for rel in (
+        "a.parquet", "_k=1/b.parquet", "p=2/c.parquet", "_SUCCESS", ".a.parquet.crc",
+        "d.parquet._COPYING_", "_zonemap/__g=x/zm-1.parquet", "_metadata", ".hidden/e.parquet",
+    ):
+        f = tmp_path / rel
+        f.parent.mkdir(parents=True, exist_ok=True)
+        f.write_bytes(b"x")
+    listed = sorted(os.path.relpath(p, tmp_path) for p in _data_files(str(tmp_path)))
+    assert listed == ["_k=1/b.parquet", "a.parquet", "p=2/c.parquet"]
+    names = sorted(e[0] for e in _memo_sig(str(tmp_path)))
+    assert names == ["_k=1", "_k=1/b.parquet", "_metadata", "a.parquet", "p=2", "p=2/c.parquet"]

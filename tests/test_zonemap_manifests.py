@@ -16,6 +16,7 @@ import os
 import shutil
 
 import pyspark.sql.functions as F
+import pytest
 
 from quack_reduce_spark.engine import Engine
 from quack_reduce_spark.operators import zonemaps as Z
@@ -86,6 +87,41 @@ def test_bloom_and_ndv_append_runs_no_spark_job(spark, tmp_path):
     assert total == 7 and len(rows) == 1 and rows[0]["bloom_k"]
     est = Z.manifest_ndv(spark, path, "k", rows)["est"]
     assert 200 < est < 280
+
+
+def test_append_binds_file_columns_as_spark_reads_them(spark, tmp_path):
+    """A fresh file that stores ``K`` for the table's ``k`` is statted
+    from ``K``, as Spark's reader binds it by default (names match
+    ignoring case). Under ``spark.sql.caseSensitive``, or for a file
+    without the column at all, the append raises instead of recording
+    the column as all-NULL, and the manifest stays as it was."""
+    path = str(tmp_path / "cased")
+    _plain(spark, path)
+    _kv(spark, 10_000, 10_240).withColumnRenamed("k", "K").coalesce(1).write.mode(
+        "append"
+    ).parquet(path)
+    conf = "spark.sql.caseSensitive"
+    spark.conf.set(conf, "true")
+    try:
+        with pytest.raises(ValueError, match="no column"):
+            Z.append_zonemap(spark, path, ["k", "v"])
+    finally:
+        spark.conf.unset(conf)
+    assert Z.append_zonemap(spark, path, ["k", "v"]) == 1
+    (new,) = [r for r in _driver_rows(path) if r["min_k"] >= 10_000]
+    assert (new["min_k"], new["max_k"], new["nulls_k"], new["sum_k"]) == (
+        10_000, 10_239, 0, sum(range(10_000, 10_240))
+    )
+    files, total = Z.prune_files(spark, path, "k", 10_000, 10_100)
+    assert total == 7 and len(files) == 1
+
+    _kv(spark, 20_000, 20_010).withColumnRenamed("k", "q").coalesce(1).write.mode(
+        "append"
+    ).parquet(path)
+    doc = Z._read_list(path)
+    with pytest.raises(ValueError, match="no column"):
+        Z.append_zonemap(spark, path, ["k", "v"])
+    assert Z._read_list(path) == doc
 
 
 def test_group_fold_matches_spark_min_max(spark, tmp_path):
@@ -338,6 +374,21 @@ def _manifest_state(path):
     return rows, groups, schemas
 
 
+def _same_rows(appended, rebuilt, wide_cols):
+    """Appended and rebuilt manifest rows agree, except that a
+    wide-decimal sum the build leaves NULL may hold the append's exact
+    total: whether Spark nulls a sum whose RUNNING total left 38
+    digits depends on its physical aggregate, and consumers read NULL
+    as "unavailable", so either answer is sound."""
+    assert appended.keys() == rebuilt.keys()
+    for f, a in appended.items():
+        b = dict(rebuilt[f])
+        for c in wide_cols:
+            if b[f"sum_{c}"] is None:
+                b[f"sum_{c}"] = a[f"sum_{c}"]
+        assert a == b, f
+
+
 def test_append_stats_equal_a_full_build(spark, tmp_path):
     """write_zonemap(A) + append_zonemap(B) gives the manifest rows,
     group entries and manifest schema that write_zonemap(A ∪ B) gives,
@@ -401,14 +452,15 @@ def test_append_stats_equal_a_full_build(spark, tmp_path):
         spark.conf.set(tz_conf, prior[0])
         spark.conf.set(ts_conf, prior[1])
     rows = appended[0]
-    assert len(rows) == 7 and rows == rebuilt[0]
+    assert len(rows) == 7
+    _same_rows(rows, rebuilt[0], ["d30", "d38"])
     assert appended[1] == rebuilt[1]
     assert len(appended[2]) == 1 and appended[2] == rebuilt[2]
     # the matrix reaches the cases it names
     (mixed,) = [r for r in rows.values() if r["nulls_x"] == 1]
     assert (mixed["min_x"], mixed["max_x"]) == ("-0.0", "nan")
-    # string stats make the build a sort aggregate: a wide-decimal sum
-    # overflows on its total, not on a running one
+    # a long sum is NULL once its running total overflows; a wide
+    # decimal's only when its total does
     assert mixed["sum_l"] is None and mixed["sum_d38"] == 0 and mixed["nulls_s"] == 1
     (new_part,) = [r for f, r in rows.items() if "/pi=3/ps=e f+g/" in f]
     assert new_part["min_x"] is None and new_part["nulls_x"] == 2
@@ -419,11 +471,63 @@ def test_append_stats_equal_a_full_build(spark, tmp_path):
     assert sum(r["n_rows"] == 0 for r in rows.values()) == 1
 
 
-def test_append_wide_decimal_sum_follows_the_build_aggregate(spark, tmp_path):
-    """A running decimal(38,0) sum that leaves 38 digits and comes back
-    is NULL when the build hash-aggregates (every min/max buffer is
-    fixed-width) and the exact total when a string stats column makes
-    it sort-aggregate; the append matches the build either way."""
+def test_append_folds_row_groups_as_the_build_does(spark, tmp_path):
+    """A fresh file is statted one row group at a time; the folded row
+    equals a rebuild's across group boundaries: a long running total
+    that overflows in a later group, the first zero's sign, a NaN in
+    a middle group, nulls, strings, Bloom words and HLL registers."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    path = str(tmp_path / "groups")
+    big, nan = 1 << 62, float("nan")
+    spark.createDataFrame(
+        [(1, 1.0, 1.0, "m")], "l long, x double, y double, s string"
+    ).coalesce(1).write.parquet(path)
+    Z.write_zonemap(spark, path, ["l", "x", "y", "s"], bloom_cols=["s"], ndv_cols=["l"])
+    delta = pa.table({
+        "l": pa.array([big, None, big, -big, -big, 5], pa.int64()),
+        "x": [0.0, 1.0, -0.0, None, -0.0, 2.0],
+        "y": [1.0, 2.0, nan, 3.0, None, -1.0],
+        "s": ["b", "a", None, "é", "z", "a"],
+    })
+    pq.write_table(delta, os.path.join(path, "delta.parquet"), row_group_size=2)
+    assert pq.ParquetFile(os.path.join(path, "delta.parquet")).num_row_groups == 3
+    assert Z.append_zonemap(spark, path, ["l", "x", "y", "s"]) == 1
+    appended = _manifest_state(path)
+    Z.write_zonemap(spark, path, ["l", "x", "y", "s"])
+    _same_rows(appended[0], _manifest_state(path)[0], [])
+    (row,) = [r for f, r in appended[0].items() if f.endswith("delta.parquet")]
+    assert row["sum_l"] is None and (row["min_x"], row["max_x"]) == ("0.0", "2.0")
+    assert (row["min_y"], row["max_y"], row["nulls_y"]) == ("-1.0", "nan", 1)
+    assert (row["min_s"], row["max_s"]) == ("a", "é") and row["bloom_s"] and row["hll_l"]
+
+
+def test_delta_row_floors_nanos_to_micros(tmp_path):
+    """A session-zoned timestamp stored at nanos (a pyarrow writer's
+    choice) stats in epoch micros by floor division, toward the past
+    as Spark's micros precision rounds: -1 ns is -1 µs, 1999 ns is
+    1 µs."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from quack_reduce_spark.lake import _LocalFS
+
+    f = tmp_path / "ns.parquet"
+    ts = pa.array([1999, -1, None, -1001], pa.timestamp("ns", tz="UTC"))
+    pq.write_table(pa.table({"ts": ts}), f, coerce_timestamps=None)
+    row = Z._delta_row(
+        _LocalFS(), str(tmp_path), str(f), ["ts"], {"ts": "timestamp"}, {}, {}, "UTC", False
+    )
+    assert (row["min_ts"], row["max_ts"], row["nulls_ts"]) == (-2, 1, 1)
+
+
+def test_append_wide_decimal_sum_is_null_only_past_38_digits(spark, tmp_path):
+    """An appended decimal(38,0) sum is the exact total when only a
+    running total leaves 38 digits, and NULL when the total does. The
+    build agrees up to a NULL in the first case, both when it hash-
+    aggregates (every min/max buffer fixed-width) and when a string
+    stats column makes it sort-aggregate."""
     n = "9" * 38
 
     def frame(vals):
@@ -432,13 +536,17 @@ def test_append_wide_decimal_sum_follows_the_build_aggregate(spark, tmp_path):
             f"SELECT CAST(v AS decimal(38,0)) AS d, s FROM VALUES {sql} AS t(v, s)"
         ).coalesce(1)
 
-    for cols, want in ((["d"], None), (["d", "s"], decimal.Decimal(0))):
+    for cols in (["d"], ["d", "s"]):
         path = str(tmp_path / "_".join(cols))
         frame(["1"]).write.parquet(path)
         Z.write_zonemap(spark, path, cols)
         frame([n, n, "-" + n, "-" + n]).write.mode("append").parquet(path)
-        assert Z.append_zonemap(spark, path, cols) == 1
+        frame([n, n, n]).write.mode("append").parquet(path)
+        assert Z.append_zonemap(spark, path, cols) == 2
         appended = _manifest_state(path)
         Z.write_zonemap(spark, path, cols)
-        assert appended == _manifest_state(path)
-        assert {r["n_rows"]: r["sum_d"] for r in appended[0].values()}[4] == want
+        rebuilt = _manifest_state(path)
+        _same_rows(appended[0], rebuilt[0], ["d"])
+        assert appended[2] == rebuilt[2]
+        sums = {r["n_rows"]: r["sum_d"] for r in appended[0].values()}
+        assert sums == {1: 1, 4: 0, 3: None}
