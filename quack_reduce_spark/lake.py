@@ -49,6 +49,7 @@ import json
 import os
 import re
 import shutil
+import tempfile
 import time
 import uuid
 
@@ -225,12 +226,10 @@ class _HadoopFS:
         self.write_bytes_atomic(p, text.encode())
 
     def read_bytes(self, p: str) -> bytes:
-        # one py4j call for the whole file, as in read_text
-        stream = self._fs.open(self._p(p))
-        try:
-            return bytes(self._jvm.org.apache.commons.io.IOUtils.toByteArray(stream))
-        finally:
-            stream.close()
+        # through open_input's local scratch file: a manifest with Bloom
+        # bitsets can run to megabytes, which a py4j byte[] moves slowly
+        with self.open_input(p) as fh:
+            return fh.read()
 
     def open_input(self, p: str):
         """A seekable binary file over ``p`` whose every read is one
@@ -318,13 +317,19 @@ class _HadoopFS:
 
 class _HadoopInput(io.RawIOBase):
     """Read-only, seekable view of one Hadoop file (see
-    :meth:`_HadoopFS.open_input`)."""
+    :meth:`_HadoopFS.open_input`). Each read has the JVM copy its range
+    into a driver-local scratch file that Python then reads: py4j moves
+    a byte array at a few MB/s, a local file at memory speed (PySpark's
+    own Python-to-JVM transfers go through a temp file the same way)."""
 
     def __init__(self, fs: _HadoopFS, p: str) -> None:
         super().__init__()
         self._io = fs._jvm.org.apache.commons.io.IOUtils
+        self._local_out = fs._jvm.java.io.FileOutputStream
         self._size = fs.size(p) or 0
         self._stream = fs._fs.open(fs._p(p))
+        fd, self._buf = tempfile.mkstemp(prefix="hadoop-read-")
+        os.close(fd)
         self._pos = 0
 
     def readable(self) -> bool:
@@ -346,7 +351,13 @@ class _HadoopInput(io.RawIOBase):
         if n <= 0:
             return b""
         self._stream.seek(self._pos)
-        data = bytes(self._io.toByteArray(self._stream, n))
+        out = self._local_out(self._buf)
+        try:
+            self._io.copyLarge(self._stream, out, 0, n)
+        finally:
+            out.close()
+        with open(self._buf, "rb") as fh:
+            data = fh.read()
         self._pos += len(data)
         return data
 
@@ -356,6 +367,7 @@ class _HadoopInput(io.RawIOBase):
     def close(self) -> None:
         if not self.closed:
             self._stream.close()
+            os.remove(self._buf)
         super().close()
 
 

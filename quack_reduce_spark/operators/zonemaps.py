@@ -9,11 +9,12 @@ small metadata artifact read once at planning time. This module
 rebuilds that mechanism on plain parquet, in the Iceberg shape —
 a MANIFEST LIST over PER-PARTITION MANIFESTS:
 
-- :func:`write_zonemap` aggregates per-file ``(n_rows, min, max,
-  n_null)`` for chosen columns in ONE distributed pass over the table
-  (grouping on the hidden ``_metadata.file_path`` column) and collects
-  the #files rows. They land under ``<table>/_zonemap/`` (underscore:
-  hidden from Spark's file index, so table scans never see it) as ONE
+- :func:`write_zonemap` stats every data file on the DRIVER: each
+  file is read once with pyarrow, projected to the chosen columns, and
+  folds into its ``(n_rows, min, max, n_null, sum)`` row with Spark's
+  aggregate semantics (:func:`_delta_row`). The rows land under
+  ``<table>/_zonemap/`` (underscore: hidden from Spark's file index,
+  so table scans never see it) as ONE
   MANIFEST PER DATA DIRECTORY (= per hive partition; flat layouts get
   one group) at ``__g=<token>/``, plus a JSON *manifest list*
   (``_list.json``): per group its directory, file and row counts,
@@ -25,10 +26,9 @@ a MANIFEST LIST over PER-PARTITION MANIFESTS:
   (the commit point), then deletes what it superseded; the reader
   de-duplicates rows by file, so a racing reader never double-counts.
 - :func:`append_zonemap` is the Iceberg append-commit shape: only the
-  NEW files are statted, on the driver (each read once with pyarrow,
-  projected to the stats columns, its row built with the Spark build's
-  semantics), so a plain, bloom or ndv append runs no Spark job — and
-  only the TOUCHED partitions' manifests are rewritten. Untouched
+  NEW files are statted, through the same :func:`_delta_row` the build
+  uses, so a plain, bloom or ndv append runs no Spark job — and only
+  the TOUCHED partitions' manifests are rewritten. Untouched
   partitions' manifests are never read, rewritten, or even listed, so
   maintenance cost tracks the DELTA, not the table.
 - :func:`prune_files` reads the manifest list FIRST: partition groups
@@ -44,8 +44,11 @@ a MANIFEST LIST over PER-PARTITION MANIFESTS:
   invariant ``tests/test_zonemaps.py`` verifies on sorted, random,
   and z-ordered layouts.
 
-Scale notes. The manifest build is one aggregate keyed on file path —
-#files output rows regardless of table size. Pruning power is a
+Scale notes. The manifest build is a serial driver pass over the
+files' projected stats columns, one row group in memory at a time —
+#files output rows regardless of table size; the only Spark work is
+the table's schema inference, which the ``sources`` memo shares with
+the ``register`` that follows. Pruning power is a
 *layout* property: clustering the write by the filter column
 (``repartitionByRange`` + ``sortWithinPartitions``, or
 :func:`~quack_reduce_spark.operators.zorder.zorder_write` for two
@@ -635,50 +638,6 @@ def _bloom_positions_py(v: Any, m: int, k: int) -> list[int] | None:
     return [(h1 + i * h2 + (i * i * i - i) // 6) % m for i in range(k)]
 
 
-def _bloom_word_frame(df: DataFrame, c: str, m: int, k: int) -> DataFrame:
-    """``(file, bloom_<c>)``: per-file DENSE Bloom bitset of column
-    ``c`` as ``array<long>`` of ``m/62`` words — one extra distributed
-    pass over the table (explode k positions per row, two
-    map-side-combinable aggregates onto #files keys). NULLs never set
-    bits (an equality can't match NULL)."""
-    from quack_reduce_spark.operators.sketches import (
-        BLOOM_WORD_BITS,
-        _bit_of,
-        bloom_positions,
-    )
-
-    words_n = m // BLOOM_WORD_BITS
-    # decimal columns fingerprint their UNSCALED-long rendering — the
-    # same space their manifest stats and the driver-side probe use
-    s = _unscaled_decimal(_py_field_types(df).get(c))
-    src = _unscaled_col(c, s) if s is not None else F.col(c)
-    pos = (
-        df.select(
-            _file_col().alias("file"),
-            src.cast("string").alias("__v"),
-        )
-        .where(F.col("__v").isNotNull())
-        .select(
-            "file",
-            F.explode(
-                F.array(*bloom_positions(F.col("__v"), m=m, k=k))
-            ).alias("p"),
-        )
-    )
-    sparse = pos.groupBy(
-        "file", F.floor(F.col("p") / BLOOM_WORD_BITS).cast("long").alias("wi")
-    ).agg(F.bit_or(_bit_of(F.col("p"))).alias("w"))
-    dense = F.transform(
-        F.sequence(F.lit(0), F.lit(words_n - 1)),
-        lambda i: F.coalesce(
-            F.element_at(F.col("__bm"), i.cast("long")), F.lit(0).cast("long")
-        ),
-    )
-    return sparse.groupBy("file").agg(
-        F.map_from_entries(F.collect_list(F.struct("wi", "w"))).alias("__bm")
-    ).select("file", dense.alias(f"bloom_{c}"))
-
-
 def _bloom_m_for(max_rows: int, bpk: int) -> int:
     from quack_reduce_spark.operators.sketches import BLOOM_WORD_BITS
 
@@ -707,20 +666,6 @@ def _validate_bloom_cols(
                 f"string rendering is not portable between the build and "
                 f"the driver-side probe)"
             )
-
-
-def _attach_blooms(
-    df: DataFrame, stats: DataFrame, bloom_doc: dict[str, dict]
-) -> DataFrame:
-    """Left-join each bloom column's per-file word arrays onto the
-    stats frame (files the data scan never saw — empty parquet parts —
-    keep a NULL bitset, which the probe treats as 'no fingerprint:
-    keep the file')."""
-    for c, cfg in bloom_doc.items():
-        stats = stats.join(
-            _bloom_word_frame(df, c, int(cfg["m"]), int(cfg["k"])), "file", "left"
-        )
-    return stats
 
 
 def _bloom_any(
@@ -798,54 +743,6 @@ def _validate_ndv_cols(
                 f"NDV sketches support {sorted(_NDV_TYPES)} columns; "
                 f"{c!r} is {types.get(c)!r}"
             )
-
-
-def _hll_reg_frame(df: DataFrame, c: str) -> DataFrame:
-    """``(file, hll_<c>)``: per-file dense HLL register array
-    (``array<int>`` of 256) — idx = top 8 bits of one md5-derived
-    32-bit hash, register = max first-1-bit ladder over the low 24
-    bits; identical math to the hash-oracled portable HLL in
-    operators/sketches.py. One extra pass, two map-side-combinable
-    aggregates onto #files keys."""
-    from quack_reduce_spark.operators.sketches import (
-        HLL_M,
-        HLL_W_BITS,
-        hll_rho,
-        md5_h32,
-    )
-
-    hashed = (
-        df.select(
-            _file_col().alias("file"),
-            md5_h32(F.col(c).cast("string")).alias("h"),
-        )
-        .where(F.col(c).isNotNull())
-        .select(
-            "file",
-            F.shiftrightunsigned(F.col("h"), HLL_W_BITS).cast("long").alias("idx"),
-            hll_rho(F.col("h").bitwiseAND(F.lit((1 << HLL_W_BITS) - 1))).alias(
-                "rho"
-            ),
-        )
-    )
-    regs = hashed.groupBy("file", "idx").agg(F.max("rho").alias("M"))
-    dense = F.transform(
-        F.sequence(F.lit(0), F.lit(HLL_M - 1)),
-        lambda i: F.coalesce(
-            F.element_at(F.col("__hm"), i.cast("long")), F.lit(0)
-        ).cast("int"),
-    )
-    return regs.groupBy("file").agg(
-        F.map_from_entries(F.collect_list(F.struct("idx", "M"))).alias("__hm")
-    ).select("file", dense.alias(f"hll_{c}"))
-
-
-def _attach_ndv(
-    df: DataFrame, stats: DataFrame, ndv_cols: list[str]
-) -> DataFrame:
-    for c in ndv_cols:
-        stats = stats.join(_hll_reg_frame(df, c), "file", "left")
-    return stats
 
 
 def hll_merge_estimate(reg_arrays: list) -> dict | None:
@@ -1120,57 +1017,6 @@ def _epochize_stats(stats: DataFrame, types: dict[str, str]) -> DataFrame:
     return stats
 
 
-def zonemap_stats(spark: SparkSession, data_dir: str, cols: list[str]) -> DataFrame:
-    """Per-file stats frame for ``cols``: one row per parquet file with
-    ``n_rows`` plus ``min_<c>``, ``max_<c>``, ``nulls_<c>`` per column,
-    natively typed (dates stay dates, doubles stay doubles) EXCEPT
-    session-zoned timestamps, which are kept as exact epoch-micros
-    longs so no collect-time timezone rendering can ever touch a
-    pruning comparison. Single partial/final aggregate onto #files
-    keys — the only full-table pass zone maps ever make."""
-    df = spark.read.parquet(data_dir)
-    return _stats_frame(df, cols, _source_types(df, cols))
-
-
-def _stats_frame(df: DataFrame, cols: list[str], types: dict[str, str]) -> DataFrame:
-    return (
-        df.select(
-            _file_col().alias("file"),
-            F.col("_metadata.file_size").alias("__fsize"),
-            *_stats_select_cols(df, cols),
-        )
-        .groupBy("file")
-        .agg(*_stat_aggs(cols, types))
-    )
-
-
-def _cover_empty_files(
-    data_dir: str, schema: Any, rows: list[dict], candidates: list[str]
-) -> list[dict]:
-    """``rows`` plus zero-row stats entries for candidate files the data
-    scan produced no rows for — EMPTY parquet files (Spark writers can
-    leave one for an all-empty task). They must appear in the manifest
-    so its file count matches the live listing (the engine's
-    stale-manifest guard compares the two before trusting the
-    manifest), and a zero-row entry is pruned by every constraint
-    (all-NULL min/max, zero null-count), so covering them never costs
-    a read."""
-    from quack_reduce_spark.lake import _fs_for
-
-    statted = {_unq(_bare(r["file"])) for r in rows}
-    missing = [p for p in candidates if _unq(_bare(p)) not in statted]
-    if not missing:
-        return rows
-    fs = _fs_for(data_dir)
-    out = list(rows)
-    for f in missing:
-        d: dict[str, Any] = {c: None for c in schema.names}
-        d.update(file=f, n_rows=0, file_bytes=fs.size(f))
-        d.update({c: 0 for c in schema.names if c.startswith("nulls_")})
-        out.append(d)
-    return out
-
-
 def _option_cols(
     arg: list | dict | None, prev: dict | None, keep: Any
 ) -> tuple[list, dict[str, dict]]:
@@ -1206,6 +1052,12 @@ def write_zonemap(
     version directories are immutable (stats written once per version
     can never go stale).
 
+    Every file's row is built on the driver by :func:`_delta_row`, the
+    stats path :func:`append_zonemap` uses too; the table's schema
+    comes from the ``sources`` memo, so a plain, bloom or ndv build
+    runs at most that memo's one inference job. Histograms and
+    group-stats slices are Spark aggregates over the table.
+
     ``bloom_cols``: integer/string stats columns that additionally get
     a per-file Bloom FINGERPRINT (dense 62-bit-word bitset, sized
     ``bloom_bits_per_key`` bits per row of the largest file) — point
@@ -1214,9 +1066,8 @@ def write_zonemap(
     manifest's fingerprint config, so maintenance rebuilds
     (compact/optimize/cluster) preserve fingerprints without the
     caller knowing about them; pass ``[]`` to drop them explicitly.
-    Cost: one extra distributed pass over the table per fingerprinted
-    column at build time; ~``bpk``/8 bytes per row per column in the
-    manifest.
+    Cost: an md5 per distinct value per file on the driver at build
+    time; ~``bpk``/8 bytes per row per column in the manifest.
 
     ``hist_cols``: numeric/timestamp stats columns that get a
     table-level EQUI-DEPTH HISTOGRAM (``hist_bins`` exact quantile
@@ -1234,7 +1085,7 @@ def write_zonemap(
     subset is exactly that subset's sketch), so ``manifest_ndv``
     answers table- and slice-level DISTINCT counts at metadata cost —
     the input a join-cardinality estimate needs. Same contract as
-    ``bloom_cols``; one extra pass per column at build.
+    ``bloom_cols``; built on the driver beside the Bloom bitsets.
 
     ``group_stats_cols``: LOW-NDV stats columns that get PER-FILE
     PER-GROUP partials (the Iceberg partition-stats shape): one stats
@@ -1242,10 +1093,19 @@ def write_zonemap(
     ``GROUP BY col`` from metadata on ANY layout — clustered or not.
     Files with more than ``group_stats_max`` distinct values are
     excluded (the reader scans them). Same ``None``-inherits /
-    ``[]``-drops contract as ``bloom_cols``; one extra grouped pass
+    ``[]``-drops contract as ``bloom_cols``; one grouped Spark pass
     per column at build."""
-    df = spark.read.parquet(data_dir)
+    from quack_reduce_spark.lake import _fs_for
+    from quack_reduce_spark.sources import read_parquet_table
+
+    data_dir = _local_abs(data_dir)
+    # the memoized table frame: its inference job is the one the
+    # ``register`` after this build would otherwise run again
+    df = read_parquet_table(spark, data_dir)
     types = _source_types(df, cols)
+    absent = [c for c in cols if c not in types]
+    if absent:
+        raise ValueError(f"{data_dir} has no column {absent}")
     prev = _read_list(data_dir) or {}
     in_cols = cols.__contains__
     bloom_cols, inherited = _option_cols(bloom_cols, prev.get("bloom"), in_cols)
@@ -1262,15 +1122,13 @@ def write_zonemap(
     # composite key form the config doc stores
     group_stats_cols = [_gs_key(k) for k in group_stats_cols]
     _validate_group_stats_cols(types, cols, group_stats_cols)
-    stats = _stats_frame(df, cols, types)
-    schema = stats.schema
-    rows = _cover_empty_files(
-        data_dir, schema, [r.asDict() for r in stats.collect()],
-        _data_files(data_dir),
-    )
+    fs = _fs_for(data_dir)
+    files = _data_files(data_dir)
     bloom_doc: dict[str, dict] = {}
     if bloom_cols:
-        max_rows = max((int(r["n_rows"]) for r in rows), default=0) or 1
+        # sized for the largest file, whose footer row count is the
+        # count(1) a Spark scan of it gives
+        max_rows = max((_footer_rows(fs, p) for p in files), default=0) or 1
         for c in bloom_cols:
             bpk = int(inherited.get(c, {}).get("bpk", bloom_bits_per_key))
             k = int(inherited.get(c, {}).get("k", bloom_k))
@@ -1280,14 +1138,11 @@ def write_zonemap(
         from quack_reduce_spark.operators.sketches import HLL_M, HLL_P
 
         ndv_doc = {c: {"m": HLL_M, "p": HLL_P} for c in ndv_cols}
-    if bloom_doc or ndv_doc:
-        # the sketches join the collected per-file rows by file (the
-        # bloom width needed their max n_rows first); the rows travel
-        # back as a local relation, so the table scan never re-runs
-        # for the stats
-        sk = spark.createDataFrame(rows, schema)
-        sk = _attach_ndv(df, _attach_blooms(df, sk, bloom_doc), ndv_cols)
-        schema, rows = sk.schema, [r.asDict() for r in sk.collect()]
+    # a file without a stats column reads as all-NULL there, as Spark's
+    # reader fills it under the freshly inferred table schema
+    rows = _stat_files(
+        spark, fs, data_dir, files, cols, types, bloom_doc, ndv_doc, absent_null=True
+    )
     hist_doc: dict[str, dict] = {}
     if hist_cols:
         # boundaries are always RECOMPUTED from the current rows (a
@@ -1307,9 +1162,9 @@ def write_zonemap(
         gsf.write.mode("overwrite").parquet(_gstats_path(data_dir, c))
         gs_doc[c] = {"max_groups": mg, "entries": gsf.count()}
     _commit_manifest(
-        data_dir, cols, schema, _by_group(rows), types=types,
-        bloom=bloom_doc or None, hist=hist_doc or None, ndv=ndv_doc or None,
-        group_stats=gs_doc or None,
+        data_dir, cols, _stats_schema(cols, types, list(bloom_doc), list(ndv_doc)),
+        _by_group(rows), types=types, bloom=bloom_doc or None,
+        hist=hist_doc or None, ndv=ndv_doc or None, group_stats=gs_doc or None,
     )
     return len(rows)
 
@@ -1354,12 +1209,13 @@ def ndv_config(data_dir: str) -> dict[str, dict]:
 
 
 def _data_files(data_dir: str) -> list[str]:
-    """Recursive parquet-file listing under ``data_dir`` (hive
-    partition subdirs included), skipping the names Spark's file index
-    hides (``sources._hidden``: ``_``/``.`` names other than ``_k=v``
-    partition directories). Goes through the lake's filesystem
-    dispatch, so URI paths (s3a/hdfs/file:) walk the Hadoop FileSystem
-    like every other metadata op."""
+    """Recursive data-file listing under ``data_dir`` (hive partition
+    subdirs included): every file Spark's file index reads, whatever
+    its name (a Hive writer's ``000000_0`` is parquet too), skipping
+    the names it hides (``sources._hidden``: ``_``/``.`` names other
+    than ``_k=v`` partition directories). Goes through the lake's
+    filesystem dispatch, so URI paths (s3a/hdfs/file:) walk the Hadoop
+    FileSystem like every other metadata op."""
     from quack_reduce_spark.lake import _fs_for, _join
     from quack_reduce_spark.sources import _hidden
 
@@ -1374,7 +1230,7 @@ def _data_files(data_dir: str) -> list[str]:
             p = _join(d, name)
             if fs.is_dir(p):
                 stack.append(p)
-            elif name.endswith(".parquet"):
+            else:
                 out.append(p)
     return out
 
@@ -1409,23 +1265,25 @@ def _upgrade_legacy(spark: SparkSession, data_dir: str) -> list[str]:
     return cols
 
 
-# -- driver-side delta stats (the append path) ------------------------------
+# -- driver-side file stats (the build and the append) ----------------------
 #
-# An append stats a few fresh files, often a few hundred rows. A Spark
-# pass over them runs whole jobs (an AQE shuffle and a result job,
-# ~240 ms on a 4-vCPU VM, plus py4j Column building) for rows the
-# driver folds in milliseconds. So the append reads each fresh file
-# once with pyarrow, projected to the stats columns, and builds its
-# manifest row in Python as the Spark build would (``_stats_select_cols``
-# + ``_stat_aggs``, ``_bloom_word_frame``, ``_hll_reg_frame``): the same
-# stats space (epoch micros, unscaled decimals), Spark's min/max order
-# (nulls skipped, NaN greatest, the first of equal values kept) and
-# try_sum (:func:`_sum_value`). The per-column work is pyarrow compute
-# kernels (min_max, sum, unique), so a large delta costs the driver a
-# projected read and a few vectorized passes; only Bloom and HLL hash
-# each DISTINCT value in Python. The table-scale ``write_zonemap``
-# stays a distributed pass; the build-vs-append differential test in
-# tests/test_zonemap_manifests.py holds the two to the same rows.
+# A manifest row is a few numbers per column of one file. A Spark pass
+# to compute them runs whole jobs (an AQE shuffle and a result job,
+# ~240 ms on a 4-vCPU VM for a one-file append, ~500 ms for an
+# 8-file build, plus py4j Column building, a join per sketched column
+# and a collect) for rows the driver folds in milliseconds. So both
+# write_zonemap and append_zonemap read each file once with pyarrow,
+# projected to the stats columns, and build its row in Python with the
+# semantics of Spark's aggregate (``_stats_select_cols`` +
+# ``_stat_aggs``): the same stats space (epoch micros, unscaled
+# decimals), Spark's min/max order (nulls skipped, NaN greatest, the
+# first of equal values kept) and try_sum (:func:`_sum_value`). The
+# per-column work is pyarrow compute kernels (min_max, sum, unique), so
+# a large file costs the driver a projected read and a few vectorized
+# passes; only Bloom and HLL hash each DISTINCT value in Python. The
+# differential tests in tests/test_zonemap_manifests.py hold the build
+# and the append to that Spark aggregate
+# (tests/spark_stats_reference.py).
 
 _EXACT = _decimal.Context(prec=100)  # wide-decimal arithmetic, no rounding
 _LONG_MIN, _LONG_MAX = -(1 << 63), (1 << 63) - 1
@@ -1442,9 +1300,10 @@ def _at_scale(u: int, s: int) -> _decimal.Decimal:
 def _stats_schema(
     cols: list[str], types: dict[str, str], bloom_cols: list[str], ndv_cols: list[str]
 ) -> Any:
-    """The Spark schema of the build's stats frame for ``types``, in
-    the build's field order (the manifest writer derives its Arrow
-    schema from it)."""
+    """The Spark schema of the manifest rows for ``types`` — the types
+    and field order Spark's aggregate of :func:`_stat_aggs` gives, Bloom
+    and HLL arrays last (the manifest writer derives its Arrow schema
+    from it)."""
     from pyspark.sql import types as T
 
     fields = [
@@ -1473,6 +1332,16 @@ def _stats_schema(
     return T.StructType(fields)
 
 
+def _local_abs(p: str) -> str:
+    """``p``, made absolute when it is a local non-URI path. Manifest
+    rows name their files absolutely, so a cwd-relative table path is
+    resolved once, where a build or an append starts, before any group
+    token or listing is compared with them."""
+    from quack_reduce_spark.lake import _URI_RE
+
+    return p if _URI_RE.match(p) else os.path.abspath(p)
+
+
 def _spark_file_path(p: str) -> str:
     """``p`` in the form :func:`_file_col` gives it: the qualified,
     URI-decoded path (``file:/x`` for a local file)."""
@@ -1483,6 +1352,16 @@ def _spark_file_path(p: str) -> str:
     if p.startswith("file:"):
         return "file:" + _bare(p)
     return p
+
+
+def _footer_rows(fs: Any, path: str) -> int:
+    """Row count of one data file, from its parquet footer alone."""
+    import pyarrow.parquet as pq
+
+    if not fs.size(path):
+        return 0
+    with fs.open_input(path) as fh:
+        return pq.ParquetFile(fh).metadata.num_rows
 
 
 def _partition_values(data_dir: str, path: str) -> dict[str, str | None]:
@@ -1543,16 +1422,18 @@ def _stats_array(col: Any, t: str) -> tuple[Any, Any]:
     :func:`_stats_select_cols` — as ``(array, to_stats)``: decimal
     (p<=18) becomes its unscaled longs; a session-zoned timestamp
     becomes its raw epoch count, which ``to_stats`` turns into micros
-    one value at a time (nanos floor-divide; INT96 is read at µs, which
-    truncates the same way). ``to_stats`` is None when the array is
-    already in stats space."""
+    one value at a time (nanos divide toward zero, as the ``sources``
+    reader's ``div 1000`` does; INT96 is read at µs as Spark reads it).
+    ``to_stats`` is None when the array is already in stats space."""
     import pyarrow as pa
     import pyarrow.compute as pc
 
+    if pa.types.is_dictionary(col.type):  # a dictionary-encoding writer's
+        col = col.cast(col.type.value_type)
     if t == "timestamp" and pa.types.is_timestamp(col.type):
         unit = col.type.unit
         if unit == "ns":
-            return col.cast(pa.int64()), lambda v: v // 1000
+            return col.cast(pa.int64()), lambda v: -(-v // 1000) if v < 0 else v // 1000
         mul = {"us": 1, "ms": 1000, "s": 1_000_000}[unit]
         return col.cast(pa.int64()), (None if mul == 1 else lambda v: v * mul)
     s = _unscaled_decimal(t)
@@ -1668,11 +1549,11 @@ def _md5_heads(vals: list) -> tuple[Any, Any]:
 
 
 def _bloom_words(heads: tuple[Any, Any], m: int, k: int) -> list[int] | None:
-    """Driver twin of :func:`_bloom_word_frame` for one file: the dense
-    ``m/62``-word bitset of its distinct non-null values' probes
-    (:func:`_bloom_positions_py`'s math over :func:`_md5_heads`), None
-    when it has none (the build's left join leaves such files without
-    a bitset)."""
+    """One file's dense ``m/62``-word Bloom bitset: the probes of its
+    distinct non-null values (:func:`_bloom_positions_py`'s math, the
+    positions ``sketches.bloom_positions`` gives in Spark, over
+    :func:`_md5_heads`); None when it has none, which the probe reads
+    as "no fingerprint: keep the file"."""
     import numpy as np
 
     from quack_reduce_spark.operators.sketches import BLOOM_WORD_BITS
@@ -1690,10 +1571,11 @@ def _bloom_words(heads: tuple[Any, Any], m: int, k: int) -> list[int] | None:
 
 
 def _hll_registers(heads: tuple[Any, Any]) -> list[int] | None:
-    """Driver twin of :func:`_hll_reg_frame` for one file: register
-    ``h >> HLL_W_BITS`` of each distinct value's ``md5_h32`` keeps the
-    max ``hll_rho`` of the low bits (``frexp``'s exponent is the exact
-    bit length); None when the file has no non-null value."""
+    """One file's HLL registers (the math of ``sketches.md5_h32`` and
+    ``sketches.hll_rho``): register ``h >> HLL_W_BITS`` of each
+    distinct value's ``md5_h32`` keeps the max ``hll_rho`` of the low
+    bits (``frexp``'s exponent is the exact bit length); None when the
+    file has no non-null value."""
     import numpy as np
 
     from quack_reduce_spark.operators.sketches import HLL_M, HLL_W_BITS
@@ -1717,8 +1599,9 @@ def _delta_row(
     ndv_doc: dict[str, dict],
     session_tz: str | None,
     case_sensitive: bool,
+    absent_null: bool = False,
 ) -> dict:
-    """The manifest row of one fresh data file, statted on the driver
+    """The manifest row of one data file, statted on the driver
     with pyarrow compute: the file is read once through the lake
     filesystem, one row group at a time, projected to its stats
     columns (a URI's reads are ranged, so only the footer and those
@@ -1726,8 +1609,10 @@ def _delta_row(
     :class:`_ColumnFold`. File columns bind to stats columns as Spark
     binds them (:func:`_match_column`); a hive partition column takes
     its value from the path; an empty file gets a zero-row row. A
-    non-empty file without a stats column raises: its manifest needs a
-    ``write_zonemap`` rebuild."""
+    non-empty file without a stats column has it all-NULL when
+    ``absent_null`` (the build, whose types were just inferred), and
+    raises otherwise: an append's recorded types may predate the file,
+    so its manifest needs a ``write_zonemap`` rebuild."""
     import pyarrow.parquet as pq
 
     parts = _partition_values(data_dir, path)
@@ -1742,7 +1627,7 @@ def _delta_row(
             names = pf.schema_arrow.names
             src = {c: _match_column(c, names, case_sensitive) for c in cols if not in_path[c]}
             missing = sorted(c for c, f in src.items() if f is None)
-            if n and missing:
+            if n and missing and not absent_null:
                 raise ValueError(
                     f"{path} has no column {missing}: rebuild its zone map with write_zonemap"
                 )
@@ -1775,6 +1660,35 @@ def _delta_row(
     return row
 
 
+def _stat_files(
+    spark: SparkSession,
+    fs: Any,
+    data_dir: str,
+    files: list[str],
+    cols: list[str],
+    types: dict[str, str],
+    bloom_doc: dict[str, dict],
+    ndv_doc: dict[str, dict],
+    absent_null: bool = False,
+) -> list[dict]:
+    """Manifest rows of ``files`` (:func:`_delta_row` each) under the
+    session's time zone and column-binding rule — the one stats path
+    of :func:`write_zonemap` and :func:`append_zonemap`."""
+    session_tz = (
+        spark.conf.get("spark.sql.session.timeZone")
+        if "timestamp" in types.values()
+        else None
+    )
+    case_sensitive = spark.conf.get("spark.sql.caseSensitive", "false").lower() == "true"
+    return [
+        _delta_row(
+            fs, data_dir, p, cols, types, bloom_doc, ndv_doc, session_tz,
+            case_sensitive, absent_null,
+        )
+        for p in files
+    ]
+
+
 def append_zonemap(
     spark: SparkSession,
     data_dir: str,
@@ -1804,6 +1718,7 @@ def append_zonemap(
     the touched groups' manifests only."""
     from quack_reduce_spark.lake import _fs_for
 
+    data_dir = _local_abs(data_dir)
     known_cols = _upgrade_legacy(spark, data_dir)
     if known_cols and list(cols) != known_cols:
         raise ValueError(f"manifest covers {known_cols}, asked to append {list(cols)}")
@@ -1815,7 +1730,7 @@ def append_zonemap(
     if new_files is None:
         candidates = _data_files(data_dir)
     else:
-        candidates = list(new_files)
+        candidates = [_local_abs(p) for p in new_files]
     # group the candidate files, then narrow to groups that can have
     # gained files: a known group whose on-disk file count equals its
     # manifest-list n_files has nothing new (appends only ADD files —
@@ -1851,22 +1766,11 @@ def append_zonemap(
         types = {**_source_types(read_parquet_table(spark, data_dir), cols), **types}
     bloom_doc = dict((doc or {}).get("bloom") or {})
     ndv_doc = dict((doc or {}).get("ndv") or {})
-    session_tz = (
-        spark.conf.get("spark.sql.session.timeZone")
-        if "timestamp" in types.values()
-        else None
-    )
-    case_sensitive = spark.conf.get("spark.sql.caseSensitive", "false").lower() == "true"
     fs = _fs_for(data_dir)
     # a delta file larger than the build's sizing basis gets a denser
     # (higher-fp) bitset at the recorded m/k, never a false negative;
     # HLL registers merge exactly because register max is associative
-    rows = [
-        _delta_row(
-            fs, data_dir, p, cols, types, bloom_doc, ndv_doc, session_tz, case_sensitive
-        )
-        for p in fresh_files
-    ]
+    rows = _stat_files(spark, fs, data_dir, fresh_files, cols, types, bloom_doc, ndv_doc)
     schema = _stats_schema(cols, types, list(bloom_doc), list(ndv_doc))
     gs_doc = dict((doc or {}).get("group_stats") or {})
     if gs_doc:

@@ -326,6 +326,27 @@ def test_versioned_lifecycle_on_both_filesystem_dispatches(
     assert {r.k for r in eng.read_table(path).collect()} == set(range(8))
 
 
+def test_hadoop_input_reads_ranges_through_a_local_scratch_file(spark, tmp_path):
+    """A `file:` URI's open_input serves seeks and ranged reads with the
+    local file's bytes (a read past the end is cut short, one at the
+    end is empty) and removes its driver-local scratch file on close."""
+    from quack_reduce_spark.lake import _HadoopFS
+
+    data = bytes(range(256)) * 40
+    (tmp_path / "blob").write_bytes(data)
+    uri = "file:" + str(tmp_path / "blob")
+    with _HadoopFS(uri).open_input(uri) as fh:
+        scratch = fh._buf
+        assert fh.read(10) == data[:10]
+        fh.seek(-8, os.SEEK_END)
+        assert fh.read(100) == data[-8:] and fh.read(1) == b""
+        fh.seek(4000)
+        assert fh.read(3000) == data[4000:7000] and fh.tell() == 7000
+        assert fh.readall() == data[7000:]
+        assert os.path.exists(scratch)
+    assert not os.path.exists(scratch)
+
+
 def test_non_versioned_object_store_rewrite_refused(spark, tmp_path):
     """A plain (non-versioned) table at a non-file URI scheme must be
     refused by maintenance rewrites rather than silently running POSIX

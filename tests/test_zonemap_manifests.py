@@ -1,11 +1,13 @@
 """Driver-side zone-map manifests (operators/zonemaps.py): group
 manifests are read and written with pyarrow through the lake
-filesystem, and an append stats its fresh files there too, so it runs
-no Spark job. These tests pin that budget, the build-vs-append
-differential over the stats types, the driver-side fold and codec against
-what Spark itself computes and reads, and the layouts the reader must
-still accept (duplicated rows, Spark-written multi-part groups, URI
-paths through the Hadoop FileSystem)."""
+filesystem, and the build and an append stat their files there too, so
+an append runs no Spark job and a build only the table's schema
+inference. These tests pin those budgets, the differential of the
+build and the append against Spark's own stats aggregate
+(``spark_stats_reference``) over the stats types and foreign writers,
+the driver-side fold and codec against what Spark itself computes and
+reads, and the layouts the reader must still accept (duplicated rows,
+Spark-written multi-part groups, URI and cwd-relative paths)."""
 
 from __future__ import annotations
 
@@ -17,6 +19,7 @@ import shutil
 
 import pyspark.sql.functions as F
 import pytest
+import spark_stats_reference as R
 
 from quack_reduce_spark.engine import Engine
 from quack_reduce_spark.operators import zonemaps as Z
@@ -374,31 +377,75 @@ def _manifest_state(path):
     return rows, groups, schemas
 
 
-def _same_rows(appended, rebuilt, wide_cols):
-    """Appended and rebuilt manifest rows agree, except that a
-    wide-decimal sum the build leaves NULL may hold the append's exact
-    total: whether Spark nulls a sum whose RUNNING total left 38
-    digits depends on its physical aggregate, and consumers read NULL
-    as "unavailable", so either answer is sound."""
-    assert appended.keys() == rebuilt.keys()
-    for f, a in appended.items():
-        b = dict(rebuilt[f])
+def _reference_state(spark, path, cols):
+    """(rows by unquoted bare file, Arrow schema) of Spark's own stats
+    aggregate over the table at ``path``, at the manifest's Bloom sizes
+    and NDV columns."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    doc = Z._read_list(path)
+    rows, schema = R.reference_rows(
+        spark, path, cols, doc.get("bloom"), list(doc.get("ndv") or {})
+    )
+    keyed = {
+        Z._unq(Z._bare(r["file"])): {k: _canon(v) for k, v in r.items() if k != "file"}
+        for r in rows
+    }
+    return keyed, str(pa.schema([f.with_nullable(True) for f in to_arrow_schema(schema)]))
+
+
+def _assert_bloom_sized_by_largest_file(path, reference):
+    """A build sizes each Bloom bitset for the largest file's row
+    count, the number Spark's count(1) gives for it."""
+    max_rows = max(r["n_rows"] for r in reference[0].values())
+    for cfg in Z._read_list(path)["bloom"].values():
+        assert cfg["m"] == Z._bloom_m_for(max_rows, cfg["bpk"])
+
+
+def _same_rows(driver, spark_rows, wide_cols):
+    """Driver-built manifest rows equal Spark's, except that a
+    wide-decimal sum Spark leaves NULL may hold the driver's exact
+    total where some running total of the file left the sum type:
+    whether Spark nulls such a sum depends on its physical aggregate,
+    and consumers read NULL as "unavailable", so either answer is
+    sound. Anywhere else a NULL must match."""
+    assert driver.keys() == spark_rows.keys()
+    for f, a in driver.items():
+        b = dict(spark_rows[f])
         for c in wide_cols:
-            if b[f"sum_{c}"] is None:
+            if b[f"sum_{c}"] is None and a[f"sum_{c}"] is not None:
+                assert R.running_sum_overflows(f, c), (f, c)
                 b[f"sum_{c}"] = a[f"sum_{c}"]
         assert a == b, f
+
+
+def _check_against_spark(spark, path, cols, appended, rebuilt, wide_cols):
+    """write_zonemap(A) + append_zonemap(B) and write_zonemap(A ∪ B)
+    both equal Spark's stats aggregate over A ∪ B, row for row and in
+    the manifest schema, and equal each other in rows and group
+    entries."""
+    reference = _reference_state(spark, path, cols)
+    _same_rows(appended[0], reference[0], wide_cols)
+    _same_rows(rebuilt[0], reference[0], wide_cols)
+    assert appended[0] == rebuilt[0]
+    assert appended[1] == rebuilt[1]
+    assert appended[2] == rebuilt[2] == {reference[1]}
+    return reference
 
 
 def test_append_stats_equal_a_full_build(spark, tmp_path):
     """write_zonemap(A) + append_zonemap(B) gives the manifest rows,
     group entries and manifest schema that write_zonemap(A ∪ B) gives,
-    over every stats type: int, long (running-sum overflow), decimal
-    (10,2), (30,4) and (38,0) (overflowing sum), double (NaN, ±0.0,
-    null, an all-null file), non-ASCII strings, date, timestamp under
-    a non-UTC session zone (INT96 and micros files), timestamp_ntz,
-    boolean, an empty part file, hive int and string partition columns
-    (space, ``+``, the default partition), bloom and ndv columns —
-    and the append runs no Spark job."""
+    and both equal Spark's own stats aggregate over A ∪ B
+    (``spark_stats_reference``), over every stats type: int, long
+    (running-sum overflow), decimal (10,2), (30,4) and (38,0)
+    (overflowing sum), double (NaN, ±0.0, null, an all-null file),
+    non-ASCII strings, date, timestamp under a non-UTC session zone
+    (INT96 and micros files), timestamp_ntz, boolean, an empty part
+    file, hive int and string partition columns (space, ``+``, the
+    default partition), bloom and ndv columns — and the append runs no
+    Spark job."""
     path = str(tmp_path / "matrix")
     big, nan = 1 << 62, float("nan")
     tz_conf, ts_conf = "spark.sql.session.timeZone", "spark.sql.parquet.outputTimestampType"
@@ -448,14 +495,15 @@ def test_append_stats_equal_a_full_build(spark, tmp_path):
         appended = _manifest_state(path)
         Z.write_zonemap(spark, path, _MATRIX_COLS)  # inherits bloom / ndv
         rebuilt = _manifest_state(path)
+        reference = _check_against_spark(
+            spark, path, _MATRIX_COLS, appended, rebuilt, ["d30", "d38"]
+        )
     finally:
         spark.conf.set(tz_conf, prior[0])
         spark.conf.set(ts_conf, prior[1])
+    _assert_bloom_sized_by_largest_file(path, reference)
     rows = appended[0]
     assert len(rows) == 7
-    _same_rows(rows, rebuilt[0], ["d30", "d38"])
-    assert appended[1] == rebuilt[1]
-    assert len(appended[2]) == 1 and appended[2] == rebuilt[2]
     # the matrix reaches the cases it names
     (mixed,) = [r for r in rows.values() if r["nulls_x"] == 1]
     assert (mixed["min_x"], mixed["max_x"]) == ("-0.0", "nan")
@@ -472,10 +520,11 @@ def test_append_stats_equal_a_full_build(spark, tmp_path):
 
 
 def test_append_folds_row_groups_as_the_build_does(spark, tmp_path):
-    """A fresh file is statted one row group at a time; the folded row
-    equals a rebuild's across group boundaries: a long running total
-    that overflows in a later group, the first zero's sign, a NaN in
-    a middle group, nulls, strings, Bloom words and HLL registers."""
+    """A file is statted one row group at a time; the folded row, by
+    an append and by a rebuild alike, equals Spark's across group
+    boundaries: a long running total that overflows in a later group,
+    the first zero's sign, a NaN in a middle group, nulls, strings,
+    Bloom words and HLL registers."""
     import pyarrow as pa
     import pyarrow.parquet as pq
 
@@ -496,38 +545,48 @@ def test_append_folds_row_groups_as_the_build_does(spark, tmp_path):
     assert Z.append_zonemap(spark, path, ["l", "x", "y", "s"]) == 1
     appended = _manifest_state(path)
     Z.write_zonemap(spark, path, ["l", "x", "y", "s"])
-    _same_rows(appended[0], _manifest_state(path)[0], [])
+    _check_against_spark(spark, path, ["l", "x", "y", "s"], appended, _manifest_state(path), [])
     (row,) = [r for f, r in appended[0].items() if f.endswith("delta.parquet")]
     assert row["sum_l"] is None and (row["min_x"], row["max_x"]) == ("0.0", "2.0")
     assert (row["min_y"], row["max_y"], row["nulls_y"]) == ("-1.0", "nan", 1)
     assert (row["min_s"], row["max_s"]) == ("a", "é") and row["bloom_s"] and row["hll_l"]
 
 
-def test_delta_row_floors_nanos_to_micros(tmp_path):
+def test_nanos_timestamps_stat_as_the_reader_truncates_them(spark, tmp_path):
     """A session-zoned timestamp stored at nanos (a pyarrow writer's
-    choice) stats in epoch micros by floor division, toward the past
-    as Spark's micros precision rounds: -1 ns is -1 µs, 1999 ns is
-    1 µs."""
+    choice) stats in the epoch micros the ``sources`` reader gives it
+    (``div 1000``, toward zero: -1 ns is 0 µs, -1001 ns is -1 µs), so
+    a file whose every value lies less than 1 µs before the epoch
+    survives ``ts >= epoch``, as its rows match it."""
     import pyarrow as pa
     import pyarrow.parquet as pq
 
-    from quack_reduce_spark.lake import _LocalFS
+    from quack_reduce_spark.sources import read_parquet_table
 
-    f = tmp_path / "ns.parquet"
-    ts = pa.array([1999, -1, None, -1001], pa.timestamp("ns", tz="UTC"))
-    pq.write_table(pa.table({"ts": ts}), f, coerce_timestamps=None)
-    row = Z._delta_row(
-        _LocalFS(), str(tmp_path), str(f), ["ts"], {"ts": "timestamp"}, {}, {}, "UTC", False
-    )
-    assert (row["min_ts"], row["max_ts"], row["nulls_ts"]) == (-2, 1, 1)
+    path = tmp_path / "ns"
+    path.mkdir()
+    for name, vals in (("a.parquet", [1999, -1, None, -1001]), ("b.parquet", [-1, -999])):
+        ts = pa.array(vals, pa.timestamp("ns", tz="UTC"))
+        pq.write_table(pa.table({"ts": ts}), path / name, coerce_timestamps=None)
+    assert Z.write_zonemap(spark, str(path), ["ts"]) == 2
+    rows = {os.path.basename(r["file"]): r for r in _driver_rows(str(path))}
+    assert [
+        (r["min_ts"], r["max_ts"], r["nulls_ts"]) for _, r in sorted(rows.items())
+    ] == [(-1, 1, 1), (0, 0, 0)]
+    micros = read_parquet_table(spark, str(path)).select(F.unix_micros("ts").alias("u"))
+    assert sorted(r.u for r in micros.collect() if r.u is not None) == [-1, 0, 0, 0, 1]
+    epoch = dt.datetime(1970, 1, 1, tzinfo=dt.timezone.utc)
+    files, total = Z.prune_files(spark, str(path), "ts", epoch, None)
+    assert total == len(files) == 2
 
 
 def test_append_wide_decimal_sum_is_null_only_past_38_digits(spark, tmp_path):
     """An appended decimal(38,0) sum is the exact total when only a
-    running total leaves 38 digits, and NULL when the total does. The
-    build agrees up to a NULL in the first case, both when it hash-
-    aggregates (every min/max buffer fixed-width) and when a string
-    stats column makes it sort-aggregate."""
+    running total leaves 38 digits, and NULL when the total does; a
+    rebuild gives the same rows. Spark's aggregate agrees up to a NULL
+    in the first case, both when it hash-aggregates (every min/max
+    buffer fixed-width) and when a string stats column makes it
+    sort-aggregate."""
     n = "9" * 38
 
     def frame(vals):
@@ -546,7 +605,146 @@ def test_append_wide_decimal_sum_is_null_only_past_38_digits(spark, tmp_path):
         appended = _manifest_state(path)
         Z.write_zonemap(spark, path, cols)
         rebuilt = _manifest_state(path)
-        _same_rows(appended[0], rebuilt[0], ["d"])
-        assert appended[2] == rebuilt[2]
+        _check_against_spark(spark, path, cols, appended, rebuilt, ["d"])
         sums = {r["n_rows"]: r["sum_d"] for r in appended[0].values()}
         assert sums == {1: 1, 4: 0, 3: None}
+
+
+def test_full_build_equals_spark_on_foreign_writer_files(spark, tmp_path):
+    """write_zonemap's driver-built rows equal Spark's own stats
+    aggregate on files from writers other than Spark: a pyarrow table
+    (uint8, uint32, timestamp[ms] with and without a zone, a
+    dictionary-encoded string and a large_string, several row groups;
+    one file named without ``.parquet``, one without the large_string
+    column, which Spark reads as all-NULL) and a DuckDB file (int,
+    bigint, decimal(12,2), double, varchar, date, timestamp,
+    decimal(30,3)), with bloom and ndv columns."""
+    import duckdb
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    pa_path = str(tmp_path / "pyarrow")
+    os.makedirs(pa_path)
+    t = pa.table({
+        "u8": pa.array([1, 200, None, 7, 0], pa.uint8()),
+        "u32": pa.array([4_000_000_000, 3, 5, None, 4_294_967_295], pa.uint32()),
+        "tms": pa.array([0, 1_700_000_000_123, None, -5, 7], pa.timestamp("ms")),
+        "tmz": pa.array([0, 1_700_000_000_123, None, -5, 7], pa.timestamp("ms", tz="UTC")),
+        "dict": pa.array(["b", "a", None, "é", "a"]).dictionary_encode(),
+        "big": pa.array(["x", None, "日本", "y", ""], pa.large_string()),
+    })
+    pq.write_table(t, os.path.join(pa_path, "a.parquet"), row_group_size=2)
+    # a Hive writer's file name, and a file from before ``big`` existed
+    pq.write_table(t.slice(1, 2), os.path.join(pa_path, "000000_0"))
+    pq.write_table(t.slice(2, 3).drop_columns(["big"]), os.path.join(pa_path, "c.parquet"))
+    pa_cols = list(t.column_names)
+
+    duck_path = str(tmp_path / "duckdb")
+    os.makedirs(duck_path)
+    duckdb.connect().execute(f"""
+        COPY (SELECT i::INT AS i, (i * 1000)::BIGINT AS l, (i / 8)::DECIMAL(12,2) AS d,
+                     CASE WHEN i % 7 = 0 THEN NULL ELSE i * 1.5 END AS x, 'v' || i AS s,
+                     DATE '2020-01-01' + i::INT AS dt, TIMESTAMP '2020-01-01' + to_seconds(i) AS ts,
+                     (i::HUGEINT * 123456789012345678)::DECIMAL(30,3) AS w
+              FROM range(0, 3000) t(i))
+        TO '{duck_path}/duck.parquet' (FORMAT parquet, ROW_GROUP_SIZE 1000)""")
+    duck_cols = ["i", "l", "d", "x", "s", "dt", "ts", "w"]
+
+    for path, cols, sketches in (
+        (pa_path, pa_cols, dict(bloom_cols=["u8", "dict"], ndv_cols=["u32", "big"])),
+        (duck_path, duck_cols, dict(bloom_cols=["i", "d"], ndv_cols=["s"])),
+    ):
+        assert Z.write_zonemap(spark, path, cols, **sketches) == len(Z._data_files(path))
+        state = _manifest_state(path)
+        reference = _reference_state(spark, path, cols)
+        _same_rows(state[0], reference[0], [])
+        assert state[2] == {reference[1]}
+        _assert_bloom_sized_by_largest_file(path, reference)
+    types = Z._read_list(pa_path)["types"]
+    assert (types["u8"], types["u32"], types["tms"], types["tmz"]) == (
+        "short", "long", "timestamp_ntz", "timestamp"
+    )
+    rows = {os.path.basename(f): r for f, r in _manifest_state(pa_path)[0].items()}
+    assert sorted(rows) == ["000000_0", "a.parquet", "c.parquet"]
+    row = rows["a.parquet"]
+    assert (row["min_u32"], row["max_u32"], row["min_dict"], row["max_big"]) == (
+        3, 4_294_967_295, "a", "日本"
+    )
+    assert (rows["c.parquet"]["n_rows"], rows["c.parquet"]["nulls_big"]) == (3, 3)
+
+
+@pytest.mark.parametrize("sketches", [
+    {}, {"bloom_cols": ["k"]}, {"ndv_cols": ["k"]},
+], ids=["plain", "bloom", "ndv"])
+def test_build_runs_one_spark_job_then_none_when_memo_warm(spark, tmp_path, sketches):
+    """A plain, bloom or ndv write_zonemap runs at most the table's
+    schema inference as a Spark job, and none once the ``sources``
+    memo holds the schema (a rebuild of an unchanged table)."""
+    path = str(tmp_path / "built")
+    _kv(spark, 0, 6000).repartitionByRange(6, "k").write.parquet(path)
+    st = spark.sparkContext.statusTracker()
+    for budget in (1, 0):
+        before = set(st.getJobIdsForGroup(None))
+        assert Z.write_zonemap(spark, path, ["k", "v"], **sketches) == 6
+        jobs = set(st.getJobIdsForGroup(None)) - before
+        assert len(jobs) <= budget, sorted(jobs)
+    files, total = Z.prune_files(spark, path, "k", 100, 200)
+    assert total == 6 and len(files) == 1
+
+
+def test_register_after_write_clustered_runs_no_spark_job(spark, tmp_path):
+    """write_clustered's zone-map build reads the table schema through
+    the ``sources`` memo, so registering the table right after it runs
+    no Spark job, and its range query prunes from the manifest."""
+    path = str(tmp_path / "clustered")
+    eng = Engine(spark=spark)
+    assert eng.write_clustered(_kv(spark, 0, 6000), path, ["k"], n_files=6) == 6
+    st = spark.sparkContext.statusTracker()
+    before = set(st.getJobIdsForGroup(None))
+    eng.register("clustered_t", path)
+    assert not set(st.getJobIdsForGroup(None)) - before
+    got = eng.df("SELECT k FROM clustered_t WHERE k BETWEEN 100 AND 199")
+    assert got.count() == 100
+    assert eng.last_zonemap_report["clustered_t"]["files_read"] == 1
+    spark.catalog.dropTempView("clustered_t")
+
+
+def test_relative_table_path_builds_and_appends_one_group(spark, tmp_path, monkeypatch):
+    """A cwd-relative local table path resolves to the absolute one the
+    manifest rows name: the build at ``rel/t`` and appends through the
+    relative and then the absolute path keep one group, whose n_files
+    equals the listing, with no zero-row phantom rows; each append
+    stats only its new file; a pruned read equals a plain scan."""
+    monkeypatch.chdir(tmp_path)
+    path = str(tmp_path / "rel" / "t")
+    _kv(spark, 0, 6000).repartitionByRange(6, "k").write.parquet(path)
+    statted = []
+    delta_row = Z._delta_row
+
+    def spy(fs, data_dir, p, *args):
+        statted.append(p)
+        return delta_row(fs, data_dir, p, *args)
+
+    monkeypatch.setattr(Z, "_delta_row", spy)
+    assert Z.write_zonemap(spark, "rel/t", ["k", "v"]) == 6
+    for i, table in enumerate(("rel/t", path)):
+        lo = 10_000 + 1000 * i
+        old = set(Z._data_files(path))
+        _kv(spark, lo, lo + 100).coalesce(1).write.mode("append").parquet(path)
+        (fresh,) = set(Z._data_files(path)) - old
+        del statted[:]
+        assert Z.append_zonemap(spark, table, ["k", "v"]) == 1
+        assert statted == [fresh]
+    listing = Z._data_files(path)
+    for table in ("rel/t", path):
+        (entry,) = Z._read_list(table)["groups"].values()
+        assert entry["n_files"] == len(listing) == 8
+        assert entry["dir"] == path
+        rows = _driver_rows(table)
+        assert len(rows) == 8 and all(r["n_rows"] > 0 for r in rows)
+    files, total = Z.prune_files(spark, "rel/t", "k", 10_050, 11_020)
+    assert total == 8 and len(files) == 2
+    pred = F.col("k").between(10_050, 11_020)
+    got = sorted(r.k for r in spark.read.parquet(*files).filter(pred).collect())
+    want = sorted(r.k for r in spark.read.parquet(path).filter(pred).collect())
+    assert got == want and len(want) == 71

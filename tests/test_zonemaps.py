@@ -9,6 +9,7 @@ import datetime as dt
 
 import pyspark.sql.functions as F
 import pytest
+import spark_stats_reference as R
 
 from quack_reduce_spark.inventory._util import load
 from quack_reduce_spark.operators import zonemaps as Z
@@ -402,7 +403,7 @@ def test_legacy_single_file_manifest_upgrades_in_place(spark, sf_dir, tmp_path):
         "o_orderdate"
     ).write.mode("overwrite").parquet(path)
     # fabricate the legacy layout by hand (what round-9 write_zonemap did)
-    stats = Z.zonemap_stats(spark, path, ["o_orderdate"])
+    stats = spark.createDataFrame(*R.reference_rows(spark, path, ["o_orderdate"]))
     stats.coalesce(1).write.mode("overwrite").parquet(
         f"{path}/{Z.ZONEMAP_DIR}"
     )

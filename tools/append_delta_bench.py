@@ -1,16 +1,24 @@
-"""Time ``append_zonemap`` on a large multi-file delta.
+"""Time ``append_zonemap`` on a large multi-file delta, or a full
+``write_zonemap`` build of a table of that shape.
 
 A streaming sink or a lake commit can hand ``append_zonemap`` a delta
-of any size, and the append stats it on the driver. This builds a
-small zone-mapped table (6 files, 60k rows), then appends ``reps + 1``
-deltas of ``files`` files x ``rows`` rows each and times each append;
-the first is a warm-up. Columns: long, double, decimal(12,2), a
-low-NDV string, a session-zoned timestamp and an int.
+of any size, and the append stats it on the driver. The append modes
+build a small zone-mapped table (6 files, 60k rows), then append
+``reps + 1`` deltas of ``files`` files x ``rows`` rows each and time
+each append; the first is a warm-up. The build modes write a fresh
+table of ``files`` x ``rows`` ``reps + 1`` times and time the
+``write_zonemap`` after each write (the first is a warm-up), so every
+timed build pays the table's schema inference as the build after a
+real write does. Columns: long, double, decimal(12,2), a low-NDV
+string, a session-zoned timestamp and an int.
 
-Usage: python tools/append_delta_bench.py [plain|sketch] [rows] [files] [reps]
-(defaults: plain 300000 4 3). ``sketch`` adds a Bloom column and two
-HLL columns. Prints one JSON line: the median and each timed append in
-ms. Run it from two checkouts to compare them.
+Usage: python tools/append_delta_bench.py [MODE] [rows] [files] [reps]
+MODE is ``plain`` or ``sketch`` (append), ``build``, ``build-sketch`` or
+``build-uri`` (defaults: plain 300000 4 3). ``sketch`` adds a Bloom
+column and two HLL columns; ``build-uri`` names the table by a
+``file:`` URI, so its files move through the Hadoop FileSystem. Prints
+one JSON line: the median and each timed call in ms. Run it from two
+checkouts to compare them.
 """
 
 from __future__ import annotations
@@ -57,9 +65,26 @@ def main() -> None:
     spark.sparkContext.setLogLevel("ERROR")
     root = tempfile.mkdtemp(prefix="append-delta-")
     path = os.path.join(root, "t")
+    sketched = mode in ("sketch", "build-sketch")
+    sketches = dict(bloom_cols=["k"], ndv_cols=["k", "s"]) if sketched else {}
     try:
+        if mode.startswith("build"):
+            table = "file://" + path if mode == "build-uri" else path
+            times = []
+            for rep in range(reps + 1):
+                _frame(spark, 0, rows * files).repartitionByRange(files, "k").write.mode(
+                    "overwrite"
+                ).parquet(table)
+                t0 = time.perf_counter()
+                assert Z.write_zonemap(spark, table, COLS, **sketches) == files
+                if rep:
+                    times.append(round((time.perf_counter() - t0) * 1000, 1))
+            print(json.dumps({
+                "mode": mode, "rows_per_file": rows, "files": files,
+                "median_ms": statistics.median(times), "build_ms": times,
+            }))
+            return
         _frame(spark, 0, 60_000).repartitionByRange(6, "k").write.parquet(path)
-        sketches = dict(bloom_cols=["k"], ndv_cols=["k", "s"]) if mode == "sketch" else {}
         Z.write_zonemap(spark, path, COLS, **sketches)
         times, base = [], 1_000_000
         for rep in range(reps + 1):
