@@ -3,7 +3,7 @@
 
 SF ?= /root/testdata/sf0.001
 
-.PHONY: test test-distinct commit-budget oracle oracle-vanilla bench perfbench plans pipeline dashboard unit recall-check concurrent assembly lakehouse datamart ann-audit
+.PHONY: test test-distinct commit-budget compile-budget oracle oracle-vanilla bench perfbench plans pipeline dashboard unit recall-check concurrent assembly lakehouse datamart ann-audit
 
 # reference `make test` (Makefile:22-24): canary count round trip
 test:
@@ -25,6 +25,11 @@ unit:
 commit-budget:
 	python -m pytest tests/test_zonemap_manifests.py tests/test_sources.py -q \
 	  -p no:cacheprovider -k "spark_job or no_job or memo or full_build or wide_decimal or binds_file_columns or row_groups or relative_table_path"
+
+# per-JVM fixed-cost budgets (~1 min): py4j round trips per Column op
+# and no codegen recompiles on a warm pass (session.configure)
+compile-budget:
+	python -m pytest tests/test_session.py -q -p no:cacheprovider
 
 # DuckDB differential harness over the whole inventory
 oracle:

@@ -1623,7 +1623,7 @@ class Engine:
         maps prune, the predicate always re-applies)."""
         import pyspark.sql.functions as F
 
-        from quack_reduce_spark import lake
+        from quack_reduce_spark import lake, sources
         from quack_reduce_spark.operators import zonemaps
 
         if lake.is_versioned(path):
@@ -1642,7 +1642,7 @@ class Engine:
             pred = pred & (F.col(col) >= F.lit(lo))
         if hi is not None:
             pred = pred & (F.col(col) <= F.lit(hi))
-        return self.spark.read.parquet(data_dir).filter(pred)
+        return sources.read_parquet_table(self.spark, data_dir).filter(pred)
 
     def history(self, path: str) -> list[dict]:
         """Commit history of a versioned table (ascending), with op /

@@ -2419,13 +2419,13 @@ def scan_pruned(
     ``F.lit(datetime)`` would instead convert through the driver-OS
     zone (PySpark ``toInternal``), silently disagreeing with the
     pruning interpretation on any off-UTC host."""
+    from quack_reduce_spark.sources import read_parquet_table
+
     files, total = prune_files(spark, data_dir, col, lo, hi)
     if files:
-        # basePath keeps hive partition columns resolvable when the
-        # survivors are read by explicit path
-        df = spark.read.option("basePath", data_dir).parquet(*files)
+        df = read_parquet_table(spark, data_dir, files=files)
     else:
-        df = spark.read.parquet(data_dir).limit(0)
+        df = read_parquet_table(spark, data_dir).limit(0)
     ctype = {f.name: f.dataType.typeName() for f in df.schema.fields}.get(col)
     if ctype == "timestamp":
         session_tz = spark.conf.get("spark.sql.session.timeZone")

@@ -89,14 +89,3 @@ def has_partial_final_agg(df: DataFrame) -> bool:
 def has_top_k(df: DataFrame) -> bool:
     """Sort+limit fused into TakeOrderedAndProject (no full sort)."""
     return "TakeOrderedAndProject" in executed_plan(df)
-
-
-def scanned_partition_count(df: DataFrame) -> tuple[int, int]:
-    """(selected, total) partition counts from a pruned parquet scan."""
-    plan = formatted_plan(df)
-    import re
-
-    m = re.search(r"(\d+) parts selected.*?(\d+)", plan)
-    if m:
-        return int(m.group(1)), int(m.group(2))
-    return (-1, -1)

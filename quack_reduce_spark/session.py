@@ -15,6 +15,29 @@ Configuration notes (scale-oriented, see SURVEY.md §4):
 - shuffle partitions default to the core count locally; on a real
   cluster this should be ~2-3x total cores (AQE coalesces the excess).
 - Arrow enabled for any pandas exchange at the API edge.
+- ``spark.sql.codegen.cache.maxEntries=1000`` (``CODEGEN_CACHE_ENTRIES``):
+  a warm process must not pay again for code it already generated.
+  Spark's default of 100 generated classes is below the working set:
+  one round of the benchmark's 11 registry builders needs ~240, so
+  each round recompiled ~235 (~9 ms each, ~2 s a round). Over a whole
+  benchmark run an unbounded cache held 305 distinct classes for
+  ``registry_batch`` and 153 for ``dashboard_rw``; 1000 covers their
+  union twice over.
+- ``spark.python.sql.dataFrameDebugging.enabled=false``: PySpark
+  otherwise wraps every ``Column`` method and ``functions.*`` call to
+  send its Python call site to the JVM (a JVM class lookup, a conf
+  read, a stack walk, then ``set`` and ``clear``): ~7 py4j round trips
+  per op against ~2, and ~57% of a registry builder's round trips.
+  The one behaviour change: DataFrame-API analysis errors lose their
+  "DataFrame query context" call-site block; SQL-string errors keep
+  their SQL context.
+
+Both of those are first-session-wins. Spark sizes the codegen cache
+once per JVM, when its ``CodeGenerator`` is first used, and PySpark
+memoizes the debugging flag once per Python process. A session built
+outside ``configure`` (a caller's own session handed to
+``__spark_entry__``) keeps Spark's defaults, and so does any later
+session in a process whose first one did.
 """
 
 from __future__ import annotations
@@ -24,6 +47,7 @@ import os
 from pyspark.sql import SparkSession
 
 DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+CODEGEN_CACHE_ENTRIES = 1000
 
 
 def default_master() -> str:
@@ -61,6 +85,12 @@ def configure(builder: SparkSession.Builder, shuffle_partitions: int | None = No
         .config("spark.ui.retainedTasks", "1000")
         .config("spark.worker.ui.retainedExecutors", "10")
         .config("spark.worker.ui.retainedDrivers", "10")
+        # Two per-process fixed costs, paid once (Configuration notes
+        # above): a codegen cache that holds the warm working set, and
+        # no Python call-site capture on every Column op. Both are
+        # first-session-wins.
+        .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES))
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
     )
 
 

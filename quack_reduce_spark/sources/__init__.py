@@ -69,6 +69,7 @@ def _nanos_columns(path: str) -> list[str]:
 # value: (signature, raw_read_schema, needs_nanos_conf,
 #         nanos_column_names, data_schema)
 _SCHEMA_MEMO: dict[str, tuple] = {}
+_NANOS_CONF = "spark.sql.legacy.parquet.nanosAsLong"
 _ROW_METADATA = b"org.apache.spark.sql.parquet.row.metadata"
 _SUMMARIES = ("_metadata", "_common_metadata")
 
@@ -167,8 +168,40 @@ def _pure_append(path: str, old: tuple, new: tuple, data_schema) -> bool:
     return True
 
 
-def read_parquet_table(spark: SparkSession, path: str, merge_schema: bool = False) -> DataFrame:
+def _read_with_schema(spark: SparkSession, path: str, schema, needs_conf: bool,
+                      nanos: list[str], files: list[str] | None) -> DataFrame:
+    """Read ``path`` (or only its data ``files``) with a known raw
+    schema, under the nanosAsLong conf when the table needs it, and
+    convert the nanos columns to µs timestamps."""
+    reader = spark.read.schema(schema)
+    if files is not None:
+        # basePath keeps hive partition columns resolvable when files
+        # are read by explicit path
+        reader = reader.option("basePath", path)
+    paths = [path] if files is None else files
+    if not needs_conf:
+        return reader.parquet(*paths)
+    prior = spark.conf.get(_NANOS_CONF, None)
+    try:
+        spark.conf.set(_NANOS_CONF, "true")
+        df = reader.parquet(*paths)
+    finally:
+        if prior is None:
+            spark.conf.unset(_NANOS_CONF)
+        else:
+            spark.conf.set(_NANOS_CONF, prior)
+    for name in nanos:
+        df = df.withColumn(name, F.timestamp_micros(F.expr(f"`{name}` div 1000")))
+    return df
+
+
+def read_parquet_table(spark: SparkSession, path: str, merge_schema: bool = False,
+                       files: list[str] | None = None) -> DataFrame:
     """Parquet scan (file or hive-partitioned dir) with nanos fallback.
+
+    ``files``, when given, narrows the scan to those data files of the
+    table at ``path`` (a pruned read): they are read with the table's
+    schema and nanos handling, and ``path`` stays the partition base.
 
     The nanosAsLong conf is scoped to this call: the prior value is
     restored in a finally block, so other code paths doing plain
@@ -183,7 +216,6 @@ def read_parquet_table(spark: SparkSession, path: str, merge_schema: bool = Fals
     catch block stays as a fallback for paths pyarrow can't enumerate
     the same way (e.g. glob patterns).
     """
-    _NANOS_CONF = "spark.sql.legacy.parquet.nanosAsLong"
     # fast path: read with the memoized schema — skips the per-call
     # footer re-inference (the dominant component of the session
     # floor); file listing and data decoding stay per-call
@@ -198,22 +230,7 @@ def read_parquet_table(spark: SparkSession, path: str, merge_schema: bool = Fals
             hit = _SCHEMA_MEMO[key] = (sig, *hit[1:])
         if hit is not None and hit[0] == sig:
             _, schema, needs_conf, nanos, _ = hit
-            if not needs_conf:
-                return spark.read.schema(schema).parquet(path)
-            prior = spark.conf.get(_NANOS_CONF, None)
-            try:
-                spark.conf.set(_NANOS_CONF, "true")
-                df = spark.read.schema(schema).parquet(path)
-            finally:
-                if prior is None:
-                    spark.conf.unset(_NANOS_CONF)
-                else:
-                    spark.conf.set(_NANOS_CONF, prior)
-            for name in nanos:
-                df = df.withColumn(
-                    name, F.timestamp_micros(F.expr(f"`{name}` div 1000"))
-                )
-            return df
+            return _read_with_schema(spark, path, schema, needs_conf, nanos, files)
 
     prior = spark.conf.get(_NANOS_CONF, None)
     try:
@@ -247,6 +264,8 @@ def read_parquet_table(spark: SparkSession, path: str, merge_schema: bool = Fals
             _SCHEMA_MEMO[key] = (
                 sig, raw_schema, needs_conf, converted, _data_schema(raw_schema, sig)
             )
+        if files is not None:
+            return _read_with_schema(spark, path, raw_schema, needs_conf, converted, files)
         return df
     finally:
         if prior is None:

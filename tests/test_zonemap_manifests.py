@@ -580,6 +580,35 @@ def test_nanos_timestamps_stat_as_the_reader_truncates_them(spark, tmp_path):
     assert total == len(files) == 2
 
 
+def test_scan_range_reads_nanos_survivors_as_sql_does(spark, tmp_path):
+    """``Engine.scan_range`` over a zone-mapped TIMESTAMP(NANOS) table
+    reads the surviving files with the ``sources`` nanos handling, so
+    it returns the rows the same range selects through ``Engine.sql``
+    (a bare survivor read gave the column as nanos longs)."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    path = tmp_path / "ns_range"
+    path.mkdir()
+    day = 86_400 * 10**9
+    for i in range(2):
+        ts = pa.array([(10 * i + j) * day + 1999 for j in range(10)], pa.timestamp("ns", tz="UTC"))
+        pq.write_table(pa.table({"ts": ts, "v": list(range(10 * i, 10 * i + 10))}),
+                       path / f"part-{i}.parquet", coerce_timestamps=None)
+    assert Z.write_zonemap(spark, str(path), ["ts"]) == 2
+    lo = dt.datetime(1970, 1, 4)
+    hi = dt.datetime(1970, 1, 9)
+    eng = Engine(spark=spark)
+    got = eng.scan_range(str(path), "ts", lo, hi)
+    eng.register("ns_range", str(path))
+    want = eng.df(
+        "SELECT * FROM ns_range WHERE ts BETWEEN TIMESTAMP '1970-01-04' AND TIMESTAMP '1970-01-09'"
+    )
+    assert dict(got.dtypes)["ts"] == "timestamp"
+    assert sorted(got.collect()) == sorted(want.collect())
+    assert [r.v for r in sorted(got.collect())] == [3, 4, 5, 6, 7]
+
+
 def test_append_wide_decimal_sum_is_null_only_past_38_digits(spark, tmp_path):
     """An appended decimal(38,0) sum is the exact total when only a
     running total leaves 38 digits, and NULL when the total does; a
